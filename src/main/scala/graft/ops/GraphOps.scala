@@ -71,11 +71,15 @@ object GraphOps {
       .localCheckpoint(eager = false)
     val nodes = e.select(col("src").as("node")).distinct()
       .localCheckpoint(eager = false)
-    // ONE job materializes BOTH lazy checkpoints (nodes computes through
-    // e's marked RDD; Spark truncates every marked ancestor when the job
-    // finishes) and returns N — the former eager-checkpoint pair paid
-    // three jobs for the same state (guide §5: driver round-trips are
-    // per-job overhead)
+    // ONE job materializes BOTH lazy checkpoints and returns N: nodes
+    // computes through e's marked RDD, whose local checkpoint persists
+    // e's partitions as they are computed. When the job finishes Spark
+    // truncates the lineage of the nearest marked RDD (nodes') only —
+    // its marked ancestors (e) too only under
+    // spark.checkpoint.checkpointAllMarkedAncestors — so later reads of
+    // e hit its persisted blocks rather than a truncated plan. The
+    // former eager-checkpoint pair paid three jobs for the same state
+    // (guide §5: driver round-trips are per-job overhead)
     val n = nodes.count()
     val base = scale / n // Long floor division, same as SQL `div`
     var ranks = nodes.withColumn("rank", lit(base))

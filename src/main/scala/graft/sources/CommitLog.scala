@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned commit log for a parquet lake — ONE metadata mechanism
   * replacing the three uncoordinated sidecars that grew around the lake
@@ -273,6 +274,13 @@ object CommitLog {
     * callers that only know the documented supertype still catch it. */
   final class DivergedException(msg: String) extends IllegalStateException(msg)
 
+  /** Typed BOOTSTRAP-RACE signal: another writer created the table's
+    * log first, so this writer's bootstrap commit lost. The sink verbs
+    * classify it by TYPE and land on top of the winner's table; it
+    * extends IllegalStateException so callers that only know the
+    * documented supertype still catch it. */
+  final class CreateRace(msg: String) extends IllegalStateException(msg)
+
   /** Branch MERGE FENCE property. While present on a branch head, every
     * non-merge commit to that branch fails loudly — [[mergeBranch]]
     * stamps it before rebasing and clears it with the final sync
@@ -407,21 +415,29 @@ object CommitLog {
       }: _*)
     }
 
-  /** Read under the snapshot's PHYSICAL schema (committed logical
-    * schema with renamed columns mapped back to their on-file birth
-    * names) — callers that surface rows re-alias via [[toLogical]]. */
+  /** Read `files` of snapshot `s` under its PHYSICAL schema (committed
+    * logical schema with renamed columns mapped back to their on-file
+    * birth names) through the snapshot's [[SnapshotFileIndex]] —
+    * filters Catalyst pushes into the scan prune files there. Callers
+    * that surface rows re-alias via [[toLogical]]. */
   private def rawRead(spark: SparkSession, dir: String, s: Snapshot,
-      files: Seq[String]): DataFrame = {
-    val reader = spark.read.option("basePath", dataDir(dir))
-    s.schemaJson.fold(reader) { j =>
-      val logical = org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val physical =
-        if (s.physNames.isEmpty) logical
-        else org.apache.spark.sql.types.StructType(logical.fields.map(f =>
-          f.copy(name = s.physNames.getOrElse(f.name, f.name))))
-      reader.schema(physical)
-    }.parquet(absolute(dir, files): _*)
+      files: Seq[String]): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(SnapshotFileIndex.relation(spark, dir, s, files))
+
+  /** The qualified data-directory prefix that turns a scan's file path
+    * into a dir-relative rel. */
+  private def relBase(spark: SparkSession, dir: String): String =
+    hadoopFs(spark, dir).makeQualified(new Path(dataDir(dir)))
+      .toUri.getPath.stripSuffix("/") + "/"
+
+  /** Dir-relative files the rows of `df` (a filtered snapshot read)
+    * come from — one collected row per file with a match. */
+  private def filesOf(spark: SparkSession, dir: String,
+      df: DataFrame): Set[String] = {
+    val base = relBase(spark, dir)
+    df.select(input_file_name().as("f")).distinct().collect()
+      .map(r => DataSkipping.rawPath(r.getString(0)).stripPrefix(base)).toSet
   }
 
   /** Attach each row's physical identity — (dir-relative file, row
@@ -429,8 +445,7 @@ object CommitLog {
     * the parquet row index, stable for an immutable file by definition. */
   private def withFilePos(spark: SparkSession, dir: String,
       df: DataFrame): DataFrame = {
-    val base = hadoopFs(spark, dir).makeQualified(new Path(dataDir(dir)))
-      .toUri.getPath.stripSuffix("/") + "/"
+    val base = relBase(spark, dir)
     val toRel = udf((p: String) =>
       DataSkipping.rawPath(p).stripPrefix(base))
     df.withColumn("__dv_f", toRel(col("_metadata.file_path")))
@@ -445,23 +460,11 @@ object CommitLog {
     spark.read.parquet(s.dvs.map(r => logFile(dir, r)): _*)
       .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
 
-  private def readSnapshot(spark: SparkSession, dir: String,
-      s: Snapshot): DataFrame = {
-    if (s.files.isEmpty) {
-      // a table CAN empty out legitimately (churn removed the last rows
-      // with no additions) — readable as zero rows under the committed
-      // schema rather than an obscure require failure; only a log from
-      // before schemas were committed has nothing to shape the read by
-      val j = s.schemaJson.getOrElse(throw new IllegalStateException(
-        s"version ${s.version} of $dir lists no files and carries no " +
-          "committed schema — cannot shape an empty read"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    }
-    readFiles(spark, dir, s, s.files)
-  }
+  /** Snapshot `s` as committed. A table CAN empty out legitimately
+    * (churn removed the last rows with no additions) — it reads as zero
+    * rows under the committed schema. */
+  private[graft] def readSnapshot(spark: SparkSession, dir: String,
+      s: Snapshot): DataFrame = readFiles(spark, dir, s, s.files)
 
   /** Hive partition columns encoded in a dir-relative file path — the
     * ONE decoder for the `key=value/.../file` shape, shared by the
@@ -490,70 +493,16 @@ object CommitLog {
   def readAt(spark: SparkSession, dir: String, v: Long): DataFrame =
     readSnapshot(spark, dir, snapshotAt(spark, dir, v))
 
-  /** Rows carried by the data files ADDED over `(fromV, toV]` — the
-    * micro-batch unit of the streaming table read
-    * ([[graft.streaming.LakeStreamSource]]). Append commits contribute
-    * their new files; compactions and metadata commits move no rows and
-    * contribute nothing; a CHANGE commit (file removals or new deletion
-    * vectors — rewrites, deletes, replaces) aborts loudly, or is
-    * skipped wholesale under `skipChangeCommits` (the Delta contract
-    * for streaming appends off a table that also takes updates). Files
-    * are read under the END snapshot's committed schema, so mid-range
-    * additive evolution surfaces the new columns as null for older
-    * files — and WITHOUT the end snapshot's deletion vectors: an
-    * appended row was appended; a later MoR delete is a change commit
-    * the caller either aborted on or chose to skip. */
-  def addedRows(spark: SparkSession, dir: String, fromV: Long, toV: Long,
-      skipChangeCommits: Boolean = false): DataFrame = {
-    require(fromV <= toV,
-      s"addedRows needs fromV <= toV, got $fromV > $toV")
-    val snaps = (fromV to toV).map(v => snapshotAt(spark, dir, v))
-    val end = snaps.last
-    val added = snaps.sliding(2).filter(_.length == 2).flatMap {
-      case Seq(p, c) =>
-        if (c.op == "compact") Nil
-        else {
-          val pf = p.files.toSet
-          val removed = pf.exists(f => !c.files.contains(f))
-          val dvAdded = c.dvs.exists(r => !p.dvs.contains(r))
-          if (removed || dvAdded) {
-            if (skipChangeCommits) Nil
-            else throw new IllegalStateException(
-              s"streaming read of $dir found a non-append commit at " +
-                s"version ${c.version} (op=${c.op}) — restart the " +
-                "stream from a fresh snapshot, or set " +
-                "skipChangeCommits=true to stream appends only")
-          } else c.files.filterNot(pf)
-        }
-    }.toSeq
-    if (added.isEmpty) emptyShaped(spark, dir, end)
-    else toLogical(end, rawRead(spark, dir, end, added))
-  }
-
-  /** An empty frame in version `s`'s committed schema with hive
-    * partition columns LAST — the order every non-empty file read
-    * surfaces — so an empty batch (e.g. a compaction-only version
-    * range) is shape-identical to a populated one and downstream
-    * order-sensitive consumers never see a bogus "schema changed". */
-  private def emptyShaped(spark: SparkSession, dir: String,
-      s: Snapshot): DataFrame = {
-    val j = s.schemaJson.getOrElse(throw new IllegalStateException(
-      s"$dir carries no committed schema — cannot shape an empty batch"))
-    val st = org.apache.spark.sql.types.DataType.fromJson(j)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val (partF, dataF) = st.fields.partition(f =>
-      s.partCols.contains(f.name))
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(dataF ++ partF))
-  }
-
-  /** The data files ADDED by commit `v` alone (sorted), under the
-    * streaming-read policy of [[addedRows]]: compactions and metadata
-    * commits add nothing; a change commit aborts or (skipChangeCommits)
-    * adds nothing. `v = firstVersion` returns the snapshot's full file
-    * list — there is no predecessor to diff against. Metadata-plane:
-    * two version-file reads. */
+  /** The data files ADDED by commit `v` alone (sorted) — the unit of
+    * the streaming table read ([[graft.streaming.LakeStreamSource]]).
+    * Append commits contribute their new files; compactions and
+    * metadata commits add nothing; a CHANGE commit (file removals or new
+    * deletion vectors — rewrites, deletes, replaces) aborts loudly, or
+    * adds nothing under `skipChangeCommits` (the Delta contract for
+    * streaming appends off a table that also takes updates).
+    * `v = firstVersion` returns the snapshot's full file list — there
+    * is no predecessor to diff against. Metadata-plane: two
+    * version-file reads. */
   private[graft] def addedFilesAt(spark: SparkSession, dir: String,
       v: Long, skipChangeCommits: Boolean): Seq[String] = {
     val cur = snapshotAt(spark, dir, v)
@@ -601,9 +550,7 @@ object CommitLog {
   private[graft] def readRelFiles(spark: SparkSession, dir: String,
       v: Long, files: Seq[String], applyDvs: Boolean): DataFrame = {
     val s = snapshotAt(spark, dir, v)
-    if (files.isEmpty) return emptyShaped(spark, dir, s)
-    if (applyDvs) readFiles(spark, dir, s, files)
-    else toLogical(s, rawRead(spark, dir, s, files))
+    readFiles(spark, dir, if (applyDvs) s else s.copy(dvs = Nil), files)
   }
 
   /** The snapshot's full sorted file list and version (the chunked
@@ -743,14 +690,7 @@ object CommitLog {
       if (cur.op == "compact") Nil
       else {
         val fileAdds = cur.files.filterNot(prev.files.toSet)
-        val dvNew = cur.dvs.filterNot(prev.dvs.toSet)
-        val dvFiles: Seq[String] =
-          if (dvNew.isEmpty) Nil
-          else spark.read
-            .parquet(dvNew.map(r => logFile(dir, r)): _*)
-            .select(col("file")).distinct()
-            .collect().map(_.getString(0)).toSeq
-        fileAdds ++ dvFiles
+        fileAdds ++ dvTouchedFiles(spark, dir, cur.dvs.filterNot(prev.dvs.toSet))
       }
     }.toSeq.distinct
     // a file dead at toV was rewritten later in the range; its partition
@@ -761,8 +701,7 @@ object CommitLog {
     val deadParts = dead.map(partOf).toSet
     val emit = (live ++ snaps.last.files.filter(f =>
       deadParts.contains(partOf(f)))).distinct.sorted
-    if (emit.isEmpty) readSnapshot(spark, dir, snaps.last).limit(0)
-    else readFiles(spark, dir, snaps.last, emit) // toV's committed schema
+    readFiles(spark, dir, snaps.last, emit) // toV's committed schema
   }
 
   /** Row-level change data feed over `(fromV, toV]` for a KEYED table:
@@ -876,10 +815,8 @@ object CommitLog {
   def readPartitionDirsAt(spark: SparkSession, dir: String, v: Long,
       partDirs: Set[String]): DataFrame = {
     val s = snapshotAt(spark, dir, v)
-    val files = s.files.filter(f => partDirs.exists(d =>
-      if (d.isEmpty) !f.contains('/') else f.startsWith(d + "/")))
-    if (files.isEmpty) readSnapshot(spark, dir, s).limit(0)
-    else readFiles(spark, dir, s, files)
+    readFiles(spark, dir, s, s.files.filter(f => partDirs.exists(d =>
+      if (d.isEmpty) !f.contains('/') else f.startsWith(d + "/"))))
   }
 
   /** The latest snapshot restricted to the given partition values — file
@@ -890,10 +827,8 @@ object CommitLog {
       partitionCol: String, parts: Seq[Any]): DataFrame = {
     val s = mustLatest(spark, dir)
     val dirs = parts.map(partDirOf(partitionCol, _)).toSet
-    val files = s.files.filter(f => dirs.exists(d => f.startsWith(d + "/")))
-    if (files.isEmpty)
-      readSnapshot(spark, dir, s).limit(0)
-    else readFiles(spark, dir, s, files)
+    readFiles(spark, dir, s,
+      s.files.filter(f => dirs.exists(d => f.startsWith(d + "/"))))
   }
 
   /** Partition directories touched by the DATA commits in `(fromV, toV]`
@@ -924,14 +859,7 @@ object CommitLog {
       // live in the appended deletion vectors. Without this, an
       // incremental view would mark itself fresh across the delete and
       // keep serving tombstoned rows through the transparent rewrite.
-      val dvNew = cur.dvs.filterNot(prev.dvs.contains)
-      val dvParts: Iterable[String] =
-        if (dvNew.isEmpty) Nil
-        else spark.read
-          .parquet(dvNew.map(r => logFile(dir, r)): _*)
-          .select(col("file")).distinct()
-          .collect().map(r => partOf(r.getString(0))).toSeq
-      fileDiff ++ dvParts
+      fileDiff ++ dvTouchedParts(spark, dir, cur.dvs.filterNot(prev.dvs.contains))
     }.toSet)
   }
 
@@ -1005,8 +933,7 @@ object CommitLog {
   // ---------------------------------------------------------- writing
   /** Dir-relative paths of the current on-disk data files. */
   private def listRel(spark: SparkSession, dir: String): Set[String] = {
-    val base = hadoopFs(spark, dir).makeQualified(new Path(dataDir(dir)))
-      .toUri.getPath.stripSuffix("/") + "/"
+    val base = relBase(spark, dir)
     DataSkipping.dataFiles(spark, dataDir(dir)).map(_.stripPrefix(base)) // raw paths
   }
 
@@ -1252,10 +1179,8 @@ object CommitLog {
   /** The committed LOGICAL schema of the latest snapshot (the shape
     * every read surfaces and every write must carry). */
   private def logicalSchema(spark: SparkSession, dir: String,
-      s: Snapshot): org.apache.spark.sql.types.StructType =
-    s.schemaJson
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      s: Snapshot): StructType =
+    s.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(readSnapshot(spark, dir, s).schema)
 
   /** Columns whose NAMES anchor persisted metadata — renaming or
@@ -1459,14 +1384,8 @@ object CommitLog {
     * present (always, post-round-7) and falls back to reading the files
     * for pre-schema logs. */
   def tableMeta(spark: SparkSession, dir: String, s: Snapshot)
-      : (org.apache.spark.sql.types.StructType, Seq[String],
-        Map[String, String]) = {
-    val schema = s.schemaJson
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(readSnapshot(spark, dir, s).schema)
-    (schema, partColsOf(s), s.props)
-  }
+      : (StructType, Seq[String], Map[String, String]) =
+    (logicalSchema(spark, dir, s), partColsOf(s), s.props)
 
   /** A staged-but-uncommitted upsert: the merged slice is ON DISK (new
     * files, invisible — no version references them) and everything
@@ -1497,17 +1416,23 @@ object CommitLog {
     if (i < 0) "" else rel.substring(0, i)
   }
 
-  /** Partition directories the given deletion vectors tombstone rows in
-    * — the DV half of the commit-level conflict unit, shared by the
-    * same-log rebase ([[commitRebase]]) and the cross-branch rebase
-    * ([[rebaseBranch]]). Churn-sized: reads only the listed vectors. */
-  private def dvTouchedParts(spark: SparkSession, target: String,
+  /** Data files the given deletion vectors tombstone rows in.
+    * Churn-sized: reads only the listed vectors. */
+  private def dvTouchedFiles(spark: SparkSession, target: String,
       dvRels: Seq[String]): Set[String] =
     if (dvRels.isEmpty) Set.empty
     else spark.read
       .parquet(dvRels.map(r => logFile(target, r)): _*)
       .select(col("file")).distinct()
-      .collect().map(r => partOf(r.getString(0))).toSet
+      .collect().map(_.getString(0)).toSet
+
+  /** Partition directories the given deletion vectors tombstone rows in
+    * — the DV half of the commit-level conflict unit, shared by the
+    * same-log rebase ([[commitRebase]]), the cross-branch rebase
+    * ([[rebaseBranch]]) and [[partsBetween]]. */
+  private def dvTouchedParts(spark: SparkSession, target: String,
+      dvRels: Seq[String]): Set[String] =
+    dvTouchedFiles(spark, target, dvRels).map(partOf)
 
   /** `key=value` partition directory name for a partition value (hive
     * escaping, null → default-partition sentinel). */
@@ -1834,7 +1759,7 @@ object CommitLog {
         try commit(spark, dir, seed, rels, rels, batchId.toSeq, "init",
           Some(updates.schema.json))
         catch { case e: CommitConflict =>
-          throw new IllegalStateException(
+          throw new CreateRace(
             s"create race on $dir — another writer bootstrapped the log " +
               s"first (${e.getMessage}); re-invoke to upsert on top " +
               "(staged files are vacuum garbage)")
@@ -1917,7 +1842,7 @@ object CommitLog {
     try commit(spark, dir, seed, rels, rels, Nil, "init",
       Some(rows.schema.json), Map(txnKey(queryId) -> batchId.toString))
     catch { case e: CommitConflict =>
-      throw new IllegalStateException(
+      throw new CreateRace(
         s"create race on $dir — another writer bootstrapped the log " +
           s"first (${e.getMessage}); re-run to land on top " +
           "(staged files are vacuum garbage)")
@@ -1939,8 +1864,7 @@ object CommitLog {
         // vacuum garbage) — the query must not die over a benign race
         try sinkBootstrap(spark, rows, dir, bootstrapPartCols, queryId,
           batchId)
-        catch { case e: IllegalStateException
-            if Option(e.getMessage).exists(_.contains("create race")) =>
+        catch { case _: CreateRace =>
           sinkAppend(spark, rows, dir, queryId, batchId,
             bootstrapPartCols)
         }
@@ -1976,8 +1900,7 @@ object CommitLog {
         require(keyCols.nonEmpty, "upsert needs at least one key column")
         try sinkBootstrap(spark, updates, dir, Seq(partitionCol),
           queryId, batchId)
-        catch { case e: IllegalStateException
-            if Option(e.getMessage).exists(_.contains("create race")) =>
+        catch { case _: CreateRace =>
           sinkUpsert(spark, updates, dir, keyCols, partitionCol, seqCol,
             queryId, batchId)
         }
@@ -2008,8 +1931,7 @@ object CommitLog {
         case None =>
           try return sinkBootstrap(spark, replacement, dir,
             partitionCols, queryId, batchId)
-          catch { case e: IllegalStateException
-              if Option(e.getMessage).exists(_.contains("create race")) =>
+          catch { case _: CreateRace =>
             // loop: the winner's table exists now — overwrite it
           }
         case Some(s) if txnDone(s, queryId, batchId) =>
@@ -2386,8 +2308,7 @@ object CommitLog {
         try sinkBootstrap(spark,
           src.filter(!col("__cdc_delete")).drop("__cdc_delete"),
           dir, Seq(partitionCol), queryId, batchId)
-        catch { case e: IllegalStateException
-            if Option(e.getMessage).exists(_.contains("create race")) =>
+        catch { case _: CreateRace =>
           sinkApplyCdc(spark, changes, dir, keyCols, partitionCol,
             queryId, batchId)
         }
@@ -3877,13 +3798,7 @@ object CommitLog {
     txn.foreach { case (q, b) =>
       if (txnDone(s, q, b)) { txnSkip(dir, q, b); return s } }
     val ledger = txn.map { case (q, b) => txnKey(q) -> b.toString }.toMap
-    val base = hadoopFs(spark, dir).makeQualified(new Path(dataDir(dir)))
-      .toUri.getPath.stripSuffix("/") + "/"
-    val hitFiles = readSnapshot(spark, dir, s)
-      .filter(cond)
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(r => DataSkipping.rawPath(r.getString(0))
-        .stripPrefix(base)).toSet // one row per file with matches — small
+    val hitFiles = filesOf(spark, dir, readSnapshot(spark, dir, s).filter(cond))
     if (hitFiles.isEmpty) {
       // nothing matched: still record the txn identity — the replay
       // guard above, not predicate luck, is what makes a crashed
@@ -4011,29 +3926,16 @@ object CommitLog {
           s"${s.version} — re-derive from the current snapshot and re-run")
     }
     checkSchemaCompatible(s, additions, dir)
-    val base = hadoopFs(spark, dir).makeQualified(new Path(dataDir(dir)))
-      .toUri.getPath.stripSuffix("/") + "/"
     val candidates: Seq[String] = probe match {
       case Some((c, values)) =>
         require(values.nonEmpty, "replaceWhere: empty probe value set")
-        require(s.bloomCols.contains(c),
-          s"$dir tracks no bloom filter for '$c' (bloomCols=${s.bloomCols})")
-        if (s.files.isEmpty) Nil // emptied-out table: nothing to match
-        else {
-          val m = s.manifest.getOrElse(throw new IllegalStateException(
-            s"$dir version ${s.version} carries no manifest"))
-          spark.read.parquet(logFile(dir, m))
-            .filter(bloomMightAny(c, values))
-            .select(col("file")).collect().map(_.getString(0)).toSeq
-        }
+        selectFilesForFilters(spark, dir, bloomSnapshot(dir, s, c),
+          Seq(org.apache.spark.sql.sources.In(c, values.toArray)))
       case None => s.files
     }
     val hitFiles: Set[String] =
       if (candidates.isEmpty) Set.empty
-      else readFiles(spark, dir, s, candidates).filter(cond)
-        .select(input_file_name().as("f")).distinct()
-        .collect().map(r => DataSkipping.rawPath(r.getString(0))
-          .stripPrefix(base)).toSet
+      else filesOf(spark, dir, readFiles(spark, dir, s, candidates).filter(cond))
     val partCols = partColsOf(s)
     val survivorRels =
       if (hitFiles.isEmpty) Nil
@@ -4063,15 +3965,40 @@ object CommitLog {
       pinnedBase = expectedVersion.isDefined)
   }
 
-  /** Zone-map-pruned box scan over the LATEST snapshot. No staleness
-    * check exists because none is needed: the stats snapshot was
-    * committed atomically with the file list it describes. Falls back to
-    * the full snapshot scan only when the log tracks no stats or lacks a
-    * bound column. */
+  /** Box scan `lo <= c <= hi` (every bound) over the LATEST snapshot:
+    * the snapshot read filtered by the box, files pruned by the
+    * committed zone maps in the scan's [[SnapshotFileIndex]]. No
+    * staleness check exists because none is needed: the stats snapshot
+    * was committed atomically with the file list it describes. Returns
+    * the DataFrame plus (filesRead, filesTotal); without stats on a
+    * bound column every file is read. */
   def scanBox(spark: SparkSession, dir: String,
       bounds: Seq[(String, Long, Long)]): (DataFrame, (Int, Int)) =
     scanBoxAny(spark, dir,
       bounds.map { case (c, lo, hi) => (c, lo: Any, hi: Any) })
+
+  /** [[scanBox]] over bounds of any stats-bearing type — longs, doubles,
+    * and STRINGS (string zone maps prune prefix ranges, the grain
+    * [[graft.functions.NativeZorder]] clusters strings by). */
+  def scanBoxAny(spark: SparkSession, dir: String,
+      bounds: Seq[(String, Any, Any)]): (DataFrame, (Int, Int)) = {
+    require(bounds.nonEmpty, "scanBox needs at least one bound")
+    scanWhere(spark, dir, mustLatest(spark, dir), bounds.map {
+      case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
+    }.reduce(_ && _))
+  }
+
+  def scanRange(spark: SparkSession, dir: String, c: String,
+      lo: Long, hi: Long): (DataFrame, (Int, Int)) =
+    scanBox(spark, dir, Seq((c, lo, hi)))
+
+  /** Snapshot `s` read and filtered by `pred`, with the files its scan
+    * selected — the one pruning path every `scan*` verb reports from. */
+  private def scanWhere(spark: SparkSession, dir: String, s: Snapshot,
+      pred: Column): (DataFrame, (Int, Int)) = {
+    val df = readSnapshot(spark, dir, s).filter(pred)
+    (df, (SnapshotFileIndex.filesScanned(df), s.files.size))
+  }
 
   /** `min_c <= bound` / `max_c >= bound` with the column's own order:
     * numeric stats compare numerically, string stats lexicographically
@@ -4080,67 +4007,14 @@ object CommitLog {
     case (a: Number, b: Number) => a.doubleValue() >= b.doubleValue()
     case (a: String, b: String) => a.compareTo(b) >= 0
     case (a, b) => throw new IllegalArgumentException(
-      s"scanBox: cannot compare stat $a (${a.getClass.getSimpleName}) " +
+      s"cannot compare stat $a (${a.getClass.getSimpleName}) " +
         s"with bound $b (${b.getClass.getSimpleName})")
   }
 
-  /** [[scanBox]] over bounds of any stats-bearing type — longs, doubles,
-    * and STRINGS (string zone maps prune prefix ranges, the grain
-    * [[graft.functions.NativeZorder]] clusters strings by). */
-  def scanBoxAny(spark: SparkSession, dir: String,
-      bounds: Seq[(String, Any, Any)]): (DataFrame, (Int, Int)) = {
-    require(bounds.nonEmpty, "scanBox needs at least one bound")
-    val s = mustLatest(spark, dir)
-    val predicate = bounds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi) }
-      .reduce(_ && _)
-    def full = (readSnapshot(spark, dir, s).filter(predicate),
-      (s.files.size, s.files.size))
-    val needed = bounds.flatMap { case (c, _, _) => Seq(s"min_$c", s"max_$c") }
-    s.manifest match {
-      case None => full
-      case Some(m) =>
-        val manifest = spark.read.parquet(logFile(dir, m))
-        if (!needed.forall(manifest.columns.contains)) return full
-        val rows = manifest.select(col("file") +: needed.map(col): _*).collect()
-        val survivors = rows.filter { r =>
-          bounds.zipWithIndex.forall { case ((_, lo, hi), i) =>
-            val minIdx = 1 + 2 * i
-            val maxIdx = 2 + 2 * i
-            !r.isNullAt(minIdx) && !r.isNullAt(maxIdx) &&
-              statGeq(r.get(maxIdx), lo) && statGeq(hi, r.get(minIdx))
-          }
-        }.map(_.getString(0)).toSeq
-        val df =
-          if (survivors.isEmpty) readSnapshot(spark, dir, s).filter(predicate).limit(0)
-          // readFiles, NOT a raw parquet read: the pruned scan must see
-          // the COMMITTED schema like every other read path — a raw read
-          // whose survivors are all pre-evolution files would lose the
-          // evolved columns and diverge from read()
-          else readFiles(spark, dir, s, survivors).filter(predicate)
-        (df, (survivors.size, s.files.size))
-    }
-  }
-
-  def scanRange(spark: SparkSession, dir: String, c: String,
-      lo: Long, hi: Long): (DataFrame, (Int, Int)) =
-    scanBox(spark, dir, Seq((c, lo, hi)))
-
-  /** Read version `s` restricted to a file SUBSET — the batch
-    * provider's pruned fallback path ([[graft.sources.LakeBatch]]):
-    * deletion vectors and rename aliasing apply exactly as in a full
-    * read, over only the surviving files. An empty subset returns the
-    * zero-row frame in the committed shape. */
-  private[graft] def readSnapshotFileSubset(spark: SparkSession,
-      dir: String, s: Snapshot, files: Seq[String]): DataFrame =
-    if (files.isEmpty) {
-      if (s.schemaJson.isDefined) emptyShaped(spark, dir, s)
-      else readSnapshot(spark, dir, s).limit(0)
-    } else readFiles(spark, dir, s, files)
-
-  /** FALLBACK-SCAN FILE SELECTION: the files of snapshot `s` that MAY
-    * satisfy the conjunction of the push-down `filters` — pruned two
-    * ways, both metadata-plane:
+  /** FILE SELECTION, the one pruning path of every lake read
+    * ([[SnapshotFileIndex.listFiles]]): the files of `s` that MAY
+    * satisfy the conjunction of the push-down `filters`, pruned three
+    * ways, all metadata-plane:
     *
     *  - HIVE PARTITION values parsed from the committed file paths
     *    (equality / In / IsNull on partition columns whose rendered
@@ -4149,13 +4023,18 @@ object CommitLog {
     *    text forms are not round-trip-stable);
     *  - the committed ZONE-MAP manifest (comparison operators on the
     *    table's declared stats columns; a file whose min/max are null
-    *    holds only nulls in that column, which no comparison matches).
+    *    holds only nulls in that column, which no comparison matches);
+    *  - the committed per-file BLOOM filters (equality / In on declared
+    *    bloom columns): "could this file contain v?" with no layout
+    *    assumption, where zone maps prune only a CLUSTERED column —
+    *    negatives definitive, false positives bounded by the fpp.
     *
     * Only TOP-LEVEL conjuncts prune (an OR's branches never reach
     * here separately); untranslatable conjuncts prune nothing. Spark
-    * re-applies every filter above the scan, so selection is a pure
-    * I/O win — over-keeping is always sound, over-pruning never
-    * happens by construction. */
+    * re-applies every data filter above the scan, so selection is a
+    * pure I/O win — over-keeping is always sound, over-pruning never
+    * happens by construction. The manifest is read on the driver with
+    * no Spark job ([[manifestSelectionRows]]). */
   private[graft] def selectFilesForFilters(spark: SparkSession,
       dir: String, s: Snapshot,
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
@@ -4203,15 +4082,9 @@ object CommitLog {
       if (pKeeps.isEmpty) s.files
       else s.files.filter(rel => pKeeps.forall(_(rel)))
 
-    // zone-map level: evaluate comparison conjuncts against the
-    // committed per-file min/max (the scanBox machinery's rule set)
-    // manifest-level pruning — zone maps AND bloom filters — in ONE
-    // metadata pass: the relevant stat columns and the bloom keep
-    // verdict (equality/In conjuncts on declared bloom columns; a
-    // negative is definitive — [[scanPoint]]'s rule applied to
-    // arbitrary push-down reads) ride one select + one collect, so a
-    // filter on a column that is both clustered and bloom'd costs one
-    // driver job, not two. Files without a manifest row fall open.
+    // manifest level — zone maps AND bloom filters — in ONE pass over
+    // the manifest's rows: the relevant min/max bounds and the bloom
+    // keep verdict per file. Files without a manifest row fall open.
     val bloomConjs = filters.flatMap {
       case EqualTo(c, v) if s.bloomCols.contains(c) && v != null =>
         Seq((c, Seq(v)))
@@ -4230,30 +4103,32 @@ object CommitLog {
     }.distinct.filter(s.statsCols.contains)
     if ((statCols.isEmpty && bloomConjs.isEmpty) ||
       s.manifest.isEmpty || afterPart.isEmpty) return afterPart
-    val manifest = spark.read.parquet(logFile(dir, s.manifest.get))
+    val (manifestSchema, rows) =
+      manifestSelectionRows(spark, dir, s.manifest.get)
+    val at = manifestSchema.fieldNames.zipWithIndex.toMap
     val needed = statCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
-    val statsOk = statCols.nonEmpty &&
-      needed.forall(manifest.columns.contains)
+    val statsOk = statCols.nonEmpty && needed.forall(at.contains)
     val bloomOk = bloomConjs.nonEmpty &&
-      bloomConjs.forall(bc => manifest.columns.contains(s"bloom_${bc._1}"))
+      bloomConjs.forall(bc => at.contains(s"bloom_${bc._1}"))
     if (!statsOk && !bloomOk) return afterPart
-    // coalesce(…, true): a null bloom cell (no concrete path today —
-    // blooms are fixed at init and every manifest row carries them —
-    // but a fall-open beats an NPE if one ever appears) keeps the file
-    val keepCol =
-      if (!bloomOk) lit(true)
-      else coalesce(bloomConjs.map { case (c, vs) => bloomMightAny(c, vs) }
-        .reduce(_ && _), lit(true))
-    val selCols = (col("file") +:
-      (if (statsOk) needed.map(col) else Nil)) :+ keepCol.as("__bloom_keep")
-    val rows = manifest.select(selCols: _*).collect()
+    // a null bloom cell (no concrete path today — blooms are fixed at
+    // init and every manifest row carries them) keeps the file, and so
+    // does a probe value of a type the filter cannot hash
+    def mightContain(bf: Any, v: Any): Boolean = bf match {
+      case f: org.apache.spark.util.sketch.BloomFilter =>
+        try graft.functions.NativeBloom.mightContainValue(f, v)
+        catch { case _: IllegalArgumentException => true }
+      case _ => true
+    }
     val info: Map[String, (Map[String, Any], Boolean)] = rows.map { r =>
       val fs: Map[String, Any] =
         if (!statsOk) Map.empty
-        else needed.zipWithIndex.map { case (n, i) =>
-          n -> (if (r.isNullAt(i + 1)) null else r.get(i + 1))
-        }.toMap
-      r.getString(0) -> (fs, r.getBoolean(r.length - 1))
+        else needed.map(n => n -> r.get(at(n))).toMap
+      val bloomKeep = !bloomOk || bloomConjs.forall { case (c, vs) =>
+        val bf = r.get(at(s"bloom_$c"))
+        vs.exists(mightContain(bf, _))
+      }
+      r.getString(at("file")) -> (fs, bloomKeep)
     }.toMap
     def cmpSafe(a: Any, b: Any): Option[Boolean] =
       try Some(statGeq(a, b)) catch { case _: Exception => None }
@@ -4261,32 +4136,23 @@ object CommitLog {
     // all-null column in the file: no comparison matches. A type
     // mismatch between the literal and the stat falls open (keep).
     def statKeep(f: Filter, fileStats: Map[String, Any]): Boolean = {
-      def mm(c: String) = (fileStats.get(s"min_$c").orNull,
-        fileStats.get(s"max_$c").orNull)
+      def known(c: String, v: Any) = statCols.contains(c) && v != null
+      def maxGeq(c: String, v: Any) = !known(c, v) || {
+        val mx = fileStats.get(s"max_$c").orNull
+        mx != null && cmpSafe(mx, v).getOrElse(true)
+      }
+      def minLeq(c: String, v: Any) = !known(c, v) || {
+        val mn = fileStats.get(s"min_$c").orNull
+        mn != null && cmpSafe(v, mn).getOrElse(true)
+      }
       f match {
-        case EqualTo(c, v) if statCols.contains(c) && v != null =>
-          val (mn, mx) = mm(c)
-          mn != null && mx != null &&
-            cmpSafe(v, mn).getOrElse(true) &&
-            cmpSafe(mx, v).getOrElse(true)
-        case GreaterThan(c, v) if statCols.contains(c) && v != null =>
-          val (_, mx) = mm(c)
-          mx != null && cmpSafe(mx, v).getOrElse(true)
-        case GreaterThanOrEqual(c, v)
-          if statCols.contains(c) && v != null =>
-          val (_, mx) = mm(c)
-          mx != null && cmpSafe(mx, v).getOrElse(true)
-        case LessThan(c, v) if statCols.contains(c) && v != null =>
-          val (mn, _) = mm(c)
-          mn != null && cmpSafe(v, mn).getOrElse(true)
-        case LessThanOrEqual(c, v)
-          if statCols.contains(c) && v != null =>
-          val (mn, _) = mm(c)
-          mn != null && cmpSafe(v, mn).getOrElse(true)
+        case EqualTo(c, v) => maxGeq(c, v) && minLeq(c, v)
+        case GreaterThan(c, v) => maxGeq(c, v)
+        case GreaterThanOrEqual(c, v) => maxGeq(c, v)
+        case LessThan(c, v) => minLeq(c, v)
+        case LessThanOrEqual(c, v) => minLeq(c, v)
         case In(c, vs) if statCols.contains(c) =>
-          val (mn, mx) = mm(c)
-          mn != null && mx != null && vs.filter(_ != null).exists(v =>
-            cmpSafe(v, mn).getOrElse(true) && cmpSafe(mx, v).getOrElse(true))
+          vs.exists(v => v != null && maxGeq(c, v) && minLeq(c, v))
         case And(a, b) => statKeep(a, fileStats) && statKeep(b, fileStats)
         case _ => true
       }
@@ -4318,23 +4184,38 @@ object CommitLog {
     * Every requested column must be in the snapshot's `statsCols`. */
   def statsAgg(spark: SparkSession, dir: String,
       cols: Seq[String]): DataFrame = {
+    val s = dvFreeLatest(spark, dir)
+    val missing = cols.filterNot(s.statsCols.contains)
+    require(missing.isEmpty,
+      s"$dir tracks no stats for ${missing.mkString(",")} (statsCols=${s.statsCols})")
+    val aggs = statAggs(cols)
+    manifestFrame(spark, dir, s).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The latest snapshot, for an answer read from its per-file stats or
+    * sketches alone — refused while deletion vectors are outstanding. */
+  private def dvFreeLatest(spark: SparkSession, dir: String): Snapshot = {
     val s = mustLatest(spark, dir)
     require(s.dvs.isEmpty,
       s"$dir has outstanding deletion vectors — the per-file stats " +
         "still count tombstoned rows; compact to materialize the " +
         "deletes, then ask again")
-    val missing = cols.filterNot(s.statsCols.contains)
-    require(missing.isEmpty,
-      s"$dir tracks no stats for ${missing.mkString(",")} (statsCols=${s.statsCols})")
-    val m = s.manifest.getOrElse(throw new IllegalStateException(
-      s"$dir version ${s.version} carries no manifest"))
-    val aggs = sum(col("rows")).as("rows") +: cols.flatMap { c =>
+    s
+  }
+
+  private def manifestFrame(spark: SparkSession, dir: String,
+      s: Snapshot): DataFrame =
+    spark.read.parquet(logFile(dir, s.manifest.getOrElse(
+      throw new IllegalStateException(
+        s"$dir version ${s.version} carries no manifest"))))
+
+  /** Exact `rows` + per-column `min_`/`max_`/`count_` over manifest rows. */
+  private def statAggs(cols: Seq[String]): Seq[Column] =
+    sum(col("rows")).as("rows") +: cols.flatMap { c =>
       Seq(min(col(s"min_$c")).as(s"min_$c"),
         max(col(s"max_$c")).as(s"max_$c"),
         (sum(col("rows")) - sum(col(s"nulls_$c"))).as(s"count_$c"))
     }
-    spark.read.parquet(logFile(dir, m)).agg(aggs.head, aggs.tail: _*)
-  }
 
   /** Metadata-plane DISTINCT counts: per-file theta sketches committed
     * with the manifest (declare `thetaCols` at [[init]]) merge into
@@ -4366,14 +4247,7 @@ object CommitLog {
     val partCols = partColsOf(s)
     require(partCols.nonEmpty,
       s"$dir is unpartitioned — use distinctAgg for the global rollup")
-    val unescape = udf((v: String) =>
-      if (v == null || v == DefaultPartition) null
-      else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(v))
-    val man = partCols.foldLeft(man0) { (df, pc) =>
-      df.withColumn(pc, unescape(regexp_extract(col("file"),
-        "(?:^|/)" + java.util.regex.Pattern.quote(pc) + "=([^/]*)/", 1)))
-    }
+    val man = withPartValues(man0, partCols)
     val aggs = cols.map { c =>
       round(graft.functions.NativeSketches.thetaEstimate(
         graft.functions.NativeSketches.thetaUnionAgg(
@@ -4385,18 +4259,27 @@ object CommitLog {
 
   private def thetaManifest(spark: SparkSession, dir: String,
       cols: Seq[String]): (DataFrame, Snapshot) = {
-    val s = mustLatest(spark, dir)
-    require(s.dvs.isEmpty,
-      s"$dir has outstanding deletion vectors — the per-file stats " +
-        "still count tombstoned rows; compact to materialize the " +
-        "deletes, then ask again")
+    val s = dvFreeLatest(spark, dir)
     val missing = cols.filterNot(s.thetaCols.contains)
     require(missing.isEmpty,
       s"$dir tracks no theta sketch for ${missing.mkString(",")} " +
         s"(thetaCols=${s.thetaCols})")
-    val m = s.manifest.getOrElse(throw new IllegalStateException(
-      s"$dir version ${s.version} carries no manifest"))
-    (spark.read.parquet(logFile(dir, m)), s)
+    (manifestFrame(spark, dir, s), s)
+  }
+
+  /** Manifest rows with one string column per hive partition column,
+    * recovered from each row's `key=value` path component
+    * (hive-unescaped; the default partition comes back as null). */
+  private def withPartValues(man: DataFrame, partCols: Seq[String])
+      : DataFrame = {
+    val unescape = udf((v: String) =>
+      if (v == null || v == DefaultPartition) null
+      else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(v))
+    partCols.foldLeft(man) { (df, pc) =>
+      df.withColumn(pc, unescape(regexp_extract(col("file"),
+        "(?:^|/)" + java.util.regex.Pattern.quote(pc) + "=([^/]*)/", 1)))
+    }
   }
 
   /** GROUPED metadata-plane aggregates: per-PARTITION exact
@@ -4411,147 +4294,81 @@ object CommitLog {
     * describes, so no staleness check exists because none is needed. */
   def statsAggByPartition(spark: SparkSession, dir: String,
       cols: Seq[String]): DataFrame = {
-    val s = mustLatest(spark, dir)
-    require(s.dvs.isEmpty,
-      s"$dir has outstanding deletion vectors — the per-file stats " +
-        "still count tombstoned rows; compact to materialize the " +
-        "deletes, then ask again")
+    val s = dvFreeLatest(spark, dir)
     val partCols = partColsOf(s)
     require(partCols.nonEmpty,
       s"$dir is unpartitioned — use statsAgg for the global rollup")
     val missing = cols.filterNot(s.statsCols.contains)
     require(missing.isEmpty,
       s"$dir tracks no stats for ${missing.mkString(",")} (statsCols=${s.statsCols})")
-    val m = s.manifest.getOrElse(throw new IllegalStateException(
-      s"$dir version ${s.version} carries no manifest"))
-    val unescape = udf((v: String) =>
-      if (v == null || v == DefaultPartition) null
-      else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(v))
-    val man = partCols.foldLeft(spark.read.parquet(logFile(dir, m))) {
-      (df, pc) =>
-        df.withColumn(pc, unescape(regexp_extract(col("file"),
-          "(?:^|/)" + java.util.regex.Pattern.quote(pc) + "=([^/]*)/", 1)))
-    }
-    val aggs = sum(col("rows")).as("rows") +: cols.flatMap { c =>
-      Seq(min(col(s"min_$c")).as(s"min_$c"),
-        max(col(s"max_$c")).as(s"max_$c"),
-        (sum(col("rows")) - sum(col(s"nulls_$c"))).as(s"count_$c"))
-    }
+    val man = withPartValues(manifestFrame(spark, dir, s), partCols)
+    val aggs = statAggs(cols)
     man.groupBy(partCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** "Might any probed value be in this file?" as a BALANCED OR tree
-    * over the per-file Bloom probes. A left-fold chain recurses once per
-    * value when the Column converts to an Expression, so a large probe
-    * set (a dedup batch's whole vocabulary — easily 10⁴⁺ terms) blew the
-    * stack; the balanced shape is log-depth at the same node count. The
-    * predicate runs over MANIFEST rows (one per file), so evaluation
-    * cost stays metadata-plane regardless of probe-set size. */
-  private def bloomMightAny(c: String, values: Seq[Any]): Column = {
-    def tree(lo: Int, hi: Int): Column =
-      if (hi - lo == 1)
-        graft.functions.NativeBloom.bloomMightContain(
-          col(s"bloom_$c"), lit(values(lo)))
-      else {
-        val mid = (lo + hi) / 2
-        tree(lo, mid) || tree(mid, hi)
-      }
-    tree(0, values.size)
-  }
-
-  /** Driver-side manifest-probe cache (round-16 optimization): a
-    * committed manifest is IMMUTABLE (rels are minted per commit), so
-    * its per-file Bloom filters can be decoded once and probed on the
-    * driver for every later [[scanPoint]]/[[scanPointsIn]] against the
-    * same snapshot — index serving (BM25 postings, dedup prefixes, IVF
-    * cells) probes the same manifest once per query batch, and each
-    * Spark-side probe paid a footer-read job plus a filter+collect job
-    * (~100-150 ms of driver latency at any data size, since the probe
-    * is metadata-plane). The cache is SIZE-GATED: a manifest past
-    * [[SmallManifestBytes]] keeps today's distributed path (a web-scale
-    * table's manifest should not live on the driver heap), and at most
-    * [[ProbeCacheEntries]] (path, column) slices stay resident (LRU).
-    * Semantics are byte-identical to the Spark path, including the
-    * null-blob case (a file row without a filter never survives — same
-    * as `bloomMightContain(null) → null → dropped`). */
+  /** Driver-side manifest cache: a committed manifest is IMMUTABLE
+    * (rels are minted per commit), so the columns file selection reads
+    * are decoded once per snapshot — index serving (BM25 postings, dedup
+    * prefixes, IVF cells) probes one manifest per query batch. SIZE-GATED:
+    * a manifest past [[SmallManifestBytes]] is streamed on every read
+    * instead (a web-scale table's decoded Blooms stay off the driver
+    * heap); at most [[ManifestCacheEntries]] stay resident (LRU). */
   private final val SmallManifestBytes = 16L * 1024 * 1024
-  private final val ProbeCacheEntries = 4
-  private val probeCache =
-    new java.util.LinkedHashMap[String,
-        Seq[(String, org.apache.spark.util.sketch.BloomFilter)]](
+  private final val ManifestCacheEntries = 4
+  private val manifestCache =
+    new java.util.LinkedHashMap[String, (StructType, IndexedSeq[Row])](
       16, 0.75f, true) {
       override protected def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            Seq[(String, org.apache.spark.util.sketch.BloomFilter)]])
-          : Boolean = size() > ProbeCacheEntries
+          e: java.util.Map.Entry[String, (StructType, IndexedSeq[Row])])
+          : Boolean = size() > ManifestCacheEntries
     }
 
-  /** Bloom survivors of `values` on column `c`, probed on the DRIVER
-    * when the manifest is small enough; None → caller uses the Spark
-    * path. */
-  private def probeSurvivorsCached(spark: SparkSession, dir: String,
-      m: String, c: String, values: Seq[Any]): Option[Seq[String]] = {
+  /** The file-selection columns of manifest `m` (`file`, `min_*`,
+    * `max_*`, `bloom_*` with each blob decoded to its filter; a null
+    * blob stays null), read on the DRIVER in-process — no Spark job —
+    * from the cache when resident. */
+  private def manifestSelectionRows(spark: SparkSession, dir: String,
+      m: String): (StructType, Iterator[Row]) = {
     val path = logFile(dir, m)
-    val key = s"$path#$c"
-    val cached = probeCache.synchronized(Option(probeCache.get(key)))
-    val entries = cached.orElse {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val len =
-        try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p).getLen
-        catch { case _: Exception => Long.MaxValue }
-      if (len > SmallManifestBytes) None
+    val hit = manifestCache.synchronized(Option(manifestCache.get(path)))
+    hit.map { case (schema, rows) => (schema, rows.iterator) }.getOrElse {
+      val p = new Path(path)
+      val parts = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).filter(st => st.isFile &&
+          !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".")).sortBy(_.getPath.getName)
+      val keep = (n: String) => n == "file" || n.startsWith("min_") ||
+        n.startsWith("max_") || n.startsWith("bloom_")
+      val reads = parts.toSeq.map(st =>
+        org.apache.spark.sql.graftbridge.ScanBridge.readLocal(spark, st, keep))
+      val schema = reads.headOption.map(_._1).getOrElse(new StructType())
+      val blooms = schema.fieldNames.indices
+        .filter(schema.fieldNames(_).startsWith("bloom_")).toSet
+      val rows = reads.iterator.flatMap(_._2).map(r =>
+        if (blooms.isEmpty) r
+        else Row.fromSeq(r.toSeq.zipWithIndex.map {
+          case (b: Array[Byte], i) if blooms(i) =>
+            graft.functions.NativeBloom.readFilter(b)
+          case (v, _) => v
+        }))
+      if (parts.map(_.getLen).sum > SmallManifestBytes) (schema, rows)
       else {
-        val rows = spark.read.parquet(path)
-          .select(col("file"), col(s"bloom_$c")).collect()
-          .flatMap { r =>
-            Option(r.getAs[Array[Byte]](1)) // null blob = never survives
-              .map(b => (r.getString(0), graft.functions.NativeBloom.readFilter(b)))
-          }.toSeq
-        probeCache.synchronized(probeCache.put(key, rows))
-        Some(rows)
+        val all = rows.toIndexedSeq
+        manifestCache.synchronized(manifestCache.put(path, (schema, all)))
+        (schema, all.iterator)
       }
     }
-    // null probes never admit a file on the Spark path (null OR-branch),
-    // so dropping them here is identical
-    val probes = values.filter(_ != null)
-    entries.map(_.collect {
-      case (f, bf) if probes.exists(v =>
-        graft.functions.NativeBloom.mightContainValue(bf, v)) => f
-    })
   }
 
-  /** Point lookup `c = value` with per-file Bloom-filter pruning. Zone
-    * maps prune ranges on the CLUSTERED column; a point probe on any
-    * other column overlaps every file's [min,max] and they prune
-    * nothing. The committed per-file Bloom filters
-    * ([[graft.functions.NativeBloom]]) answer "could this file contain
-    * v?" with no layout assumption: negatives are definitive (pruning
-    * never drops a row), false positives only cost an extra file read,
-    * bounded by the filter's fpp (3% at the sized item count). The probe
-    * reads the kilobyte manifest, keeps possible files, and opens only
-    * those with the exact predicate re-applied. Same atomic-commit
-    * freshness argument as [[statsAgg]] — no staleness fallback needed.
-    * Returns the DataFrame plus (filesRead, filesTotal). */
+  /** Point lookup `c = value` over the LATEST snapshot, files pruned by
+    * the committed per-file Bloom filters on `c` (and its zone maps,
+    * when `c` is also a stats column) — see [[selectFilesForFilters]].
+    * The exact predicate re-applies on the files read. Returns the
+    * DataFrame plus (filesRead, filesTotal). */
   def scanPoint(spark: SparkSession, dir: String, c: String,
       value: Any): (DataFrame, (Int, Int)) = {
-    val s = mustLatest(spark, dir)
-    require(s.bloomCols.contains(c),
-      s"$dir tracks no bloom filter for '$c' (bloomCols=${s.bloomCols})")
-    val m = s.manifest.getOrElse(throw new IllegalStateException(
-      s"$dir version ${s.version} carries no manifest"))
-    val survivors = probeSurvivorsCached(spark, dir, m, c, Seq(value))
-      .getOrElse {
-        spark.read.parquet(logFile(dir, m))
-          .filter(graft.functions.NativeBloom.bloomMightContain(
-            col(s"bloom_$c"), lit(value)))
-          .select(col("file")).collect().map(_.getString(0)).toSeq
-      }
-    val df =
-      if (survivors.isEmpty) readSnapshot(spark, dir, s).filter(col(c) === value).limit(0)
-      else readFiles(spark, dir, s, survivors).filter(col(c) === value)
-    (df, (survivors.size, s.files.size))
+    val s = bloomSnapshot(dir, mustLatest(spark, dir), c)
+    scanWhere(spark, dir, s, col(c) === lit(value))
   }
 
   /** Batched point lookup `c IN (values)` with the same per-file Bloom
@@ -4580,21 +4397,18 @@ object CommitLog {
   private def scanPointsInSnap(spark: SparkSession, dir: String, s: Snapshot,
       c: String, values: Seq[Any]): (DataFrame, (Int, Int)) = {
     require(values.nonEmpty, "scanPointsIn: empty probe set")
+    scanWhere(spark, dir, bloomSnapshot(dir, s, c),
+      col(c).isin(values: _*))
+  }
+
+  /** `s`, checked to carry a committed Bloom filter on `c` — the point
+    * verbs refuse a column they cannot prune. */
+  private def bloomSnapshot(dir: String, s: Snapshot, c: String): Snapshot = {
     require(s.bloomCols.contains(c),
       s"$dir tracks no bloom filter for '$c' (bloomCols=${s.bloomCols})")
-    val m = s.manifest.getOrElse(throw new IllegalStateException(
-      s"$dir version ${s.version} carries no manifest"))
-    val survivors = probeSurvivorsCached(spark, dir, m, c, values)
-      .getOrElse {
-        spark.read.parquet(logFile(dir, m))
-          .filter(bloomMightAny(c, values))
-          .select(col("file")).collect().map(_.getString(0)).toSeq
-      }
-    val df =
-      if (survivors.isEmpty)
-        readSnapshot(spark, dir, s).filter(col(c).isin(values: _*)).limit(0)
-      else readFiles(spark, dir, s, survivors).filter(col(c).isin(values: _*))
-    (df, (survivors.size, s.files.size))
+    if (s.manifest.isEmpty) throw new IllegalStateException(
+      s"$dir version ${s.version} carries no manifest")
+    s
   }
 
   /** Quantile estimates for sketch column `c` over the LATEST snapshot,
@@ -4611,16 +4425,10 @@ object CommitLog {
   def quantiles(spark: SparkSession, dir: String, c: String,
       ranks: Seq[Double],
       partitionPrefix: Option[String] = None): Option[Seq[Double]] = {
-    val s = mustLatest(spark, dir)
-    require(s.dvs.isEmpty,
-      s"$dir has outstanding deletion vectors — the per-file sketches " +
-        "still cover tombstoned rows; compact to materialize the " +
-        "deletes, then ask again")
+    val s = dvFreeLatest(spark, dir)
     require(s.sketchCols.contains(c),
       s"$dir tracks no quantile sketch for '$c' (sketchCols=${s.sketchCols})")
-    val m = s.manifest.getOrElse(throw new IllegalStateException(
-      s"$dir version ${s.version} carries no manifest"))
-    val rows = spark.read.parquet(logFile(dir, m))
+    val rows = manifestFrame(spark, dir, s)
       .filter(partitionPrefix.fold(lit(true))(p =>
         col("file").startsWith(p + "/")))
       .agg(graft.functions.NativeSketches.kllMerge(col(s"kll_$c"), 200)

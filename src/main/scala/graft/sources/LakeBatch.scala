@@ -1,11 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{BaseRelation, PrunedFilteredScan, PrunedScan}
 import org.apache.spark.sql.types.StructType
@@ -20,18 +17,21 @@ import org.apache.spark.sql.types.StructType
   *
   * The READ plan matters at 100 TB: the common case (no outstanding
   * deletion vectors, no renamed columns) returns a real
-  * [[HadoopFsRelation]] over exactly the snapshot's committed files —
-  * the SAME scan node a parquet path read gets, so predicate pushdown,
+  * [[HadoopFsRelation]] over the snapshot's [[SnapshotFileIndex]] — the
+  * SAME scan node a parquet path read gets, so predicate pushdown,
   * partition pruning, column pruning, and whole-stage codegen all
-  * engage, and NO directory listing happens (the file index is built
-  * from the commit log's file list — the metadata plane IS the
-  * listing). Snapshots that need row-level semantics the file scan
-  * cannot express (outstanding deletion vectors' anti-join, rename
-  * aliasing) fall back to a [[PrunedScan]] relation that delegates to
-  * the commit log's own read path — column pruning still reaches the
-  * scan; Spark re-applies every filter above it (the V1 contract), so
-  * results are exact at the cost of the RDD[Row] boundary. Compaction
-  * materializes the vectors and the table returns to the fast path. */
+  * engage. The index lists exactly the committed files (no directory
+  * walk, no listing job; one `listStatus` per partition directory the
+  * scan opens, for file sizes) and prunes them against the committed
+  * manifest inside the scan node. Snapshots that need row-level
+  * semantics the file scan cannot express (outstanding deletion
+  * vectors' anti-join, rename aliasing) fall back to a
+  * [[PrunedFilteredScan]] relation that delegates to the commit log's
+  * own read path — which reads through the same index, so pushed
+  * filters still prune files; Spark re-applies every filter above it
+  * (the V1 contract), so results are exact at the cost of the RDD[Row]
+  * boundary. Compaction materializes the vectors and the table returns
+  * to the fast path. */
 private[graft] object LakeBatch {
 
   private def opt(parameters: Map[String, String], name: String)
@@ -61,24 +61,9 @@ private[graft] object LakeBatch {
     if (opt(parameters, "readChangeFeed").exists(_.toBoolean))
       return cdfRelation(spark, dir, parameters)
     val s = snapshotFor(spark, dir, parameters)
-    if (s.dvs.isEmpty && s.physNames.isEmpty) {
-      val (schema, partCols, _) = CommitLog.tableMeta(spark, dir, s)
-      // partition fields in PATH-NESTING order (partCols), not declared
-      // order: the file index infers partition values per path level,
-      // and a declared order differing from the nesting would silently
-      // swap the values between columns
-      val partF = partCols.map(c => schema(schema.fieldIndex(c))).toArray
-      val dataF = schema.fields.filterNot(f => partCols.contains(f.name))
-      val d = CommitLog.dataDir(dir)
-      val index = new InMemoryFileIndex(spark,
-        s.files.map(r => new Path(s"$d/$r")),
-        parameters + ("basePath" -> d),
-        // committed schema drives partition-column TYPES (path values
-        // otherwise re-infer, and '01' would come back as int 1)
-        Some(schema))
-      HadoopFsRelation(index, StructType(partF), StructType(dataF),
-        None, new ParquetFileFormat, parameters)(spark)
-    } else
+    if (s.dvs.isEmpty && s.physNames.isEmpty)
+      SnapshotFileIndex.relation(spark, dir, s, s.files, parameters)
+    else
       // row-level semantics beyond a file scan: DV anti-join / rename
       // aliasing — exact via the commit log's own read path
       GraftLakeScanRelation(spark, dir, s.version)
@@ -111,12 +96,8 @@ private[graft] object LakeBatch {
       // returns (derived from the table's own read schema, which is
       // what changeFeed's row images surface; a hand-reordered shape
       // here would flip the reader's column order between polls)
-      val shaped = StructType(
-        CommitLog.read(spark, dir).schema.fields :+
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType))
-      return GraftLakeFrameRelation(spark, spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), shaped))
+      return GraftLakeFrameRelation(spark, CommitLog.read(spark, dir)
+        .limit(0).withColumn("_change_type", lit(null).cast("string")))
     }
     GraftLakeFrameRelation(spark,
       CommitLog.changeFeed(spark, dir, from, to, keys))
@@ -239,26 +220,14 @@ private[graft] object LakeBatch {
 /** Exact fallback relation for snapshots a plain file scan cannot
   * express (outstanding deletion vectors, renamed columns): delegates
   * to the commit log's read path — the DV anti-join and rename
-  * aliasing live there — upgraded from a bare `PrunedScan` to a
-  * [[PrunedFilteredScan]] so a heavily-MoR table does not pay a full
-  * scan until its next compaction:
-  *
-  *  - FILE PRUNING: partition-column and zone-map-prunable conjuncts
-  *    select files through the commit log's metadata
-  *    ([[CommitLog.selectFilesForFilters]] — hive path values + the
-  *    committed manifest), so a partition-filtered read of a
-  *    DV-carrying table opens only the matching partitions' files;
-  *  - ROW-GROUP PUSHDOWN: every translatable filter is also applied
-  *    INSIDE the inner plan, where Catalyst pushes it through the DV
-  *    anti-join into the parquet scan;
-  *  - STATISTICS: [[sizeInBytes]] reports the snapshot's real byte
-  *    count (summed once per relation), so join planning still
-  *    broadcasts a small lake table on the fallback path instead of
-  *    defaulting to the sort-merge cliff.
-  *
-  * Spark's V1 contract re-applies every filter above [[buildScan]]
-  * (`unhandledFilters` keeps its conservative default), so both
-  * prunings are pure I/O wins — results stay exact. */
+  * aliasing live there — as a [[PrunedFilteredScan]]. Every
+  * translatable filter is applied INSIDE the inner plan, where Catalyst
+  * pushes it through the DV anti-join into the snapshot's file scan
+  * (its [[SnapshotFileIndex]] prunes files, the parquet reader row
+  * groups), so a heavily-MoR table does not pay a full scan until its
+  * next compaction; [[sizeInBytes]] is the index's real byte count, so
+  * a small table still broadcasts in a join. Spark's V1 contract
+  * re-applies every filter above [[buildScan]], so results stay exact. */
 private[graft] final case class GraftLakeScanRelation(
     spark: SparkSession, dir: String, version: Long) extends BaseRelation
     with PrunedFilteredScan {
@@ -277,34 +246,9 @@ private[graft] final case class GraftLakeScanRelation(
     StructType(dataF ++ partF)
   }
 
-  /** Real table size: the snapshot's files summed once per relation —
-    * ONE `listStatus` per partition DIRECTORY (not one RPC per file:
-    * at 50k files the per-file stat is minutes of serial planning on
-    * an object store; per-directory listing is O(partitions) calls),
-    * counting only committed names. Without it a BaseRelation defaults
-    * to `spark.sql.defaultSizeInBytes` (Long.MaxValue-ish) and every
-    * join against the fallback path loses its broadcast. Any listing
-    * failure falls back to that CONSERVATIVE default — never 0, which
-    * would broadcast a multi-TB table into an executor OOM. */
-  override lazy val sizeInBytes: Long = {
-    val d = CommitLog.dataDir(dir)
-    try {
-      val fs = new Path(d)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      snap.files.groupBy(r => r.lastIndexOf('/') match {
-        case -1 => ""
-        case i => r.substring(0, i)
-      }).map { case (sub, rels) =>
-        val names = rels.map(r => r.substring(r.lastIndexOf('/') + 1)).toSet
-        val p = if (sub.isEmpty) new Path(d) else new Path(d, sub)
-        fs.listStatus(p)
-          .filter(st => names.contains(st.getPath.getName))
-          .map(_.getLen).sum
-      }.sum
-    } catch {
-      case _: Exception => spark.sessionState.conf.defaultSizeInBytes
-    }
-  }
+  override lazy val sizeInBytes: Long =
+    new SnapshotFileIndex(spark, dir, snap, snap.files, new StructType())
+      .sizeInBytes
 
   /** Push-down [[Filter]] rendered back as a [[Column]] for the inner
     * plan — best-effort: an untranslatable node returns None and that
@@ -336,16 +280,10 @@ private[graft] final case class GraftLakeScanRelation(
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[org.apache.spark.sql.sources.Filter]): RDD[Row] = {
-    val survivors = CommitLog.selectFilesForFilters(
-      spark, dir, snap, filters.toIndexedSeq)
-    val base0 = CommitLog.readSnapshotFileSubset(spark, dir, snap,
-      survivors)
-    val base = filters.flatMap(toColumn)
-      .reduceOption(_ && _).map(base0.filter).getOrElse(base0)
-    val pruned =
-      if (requiredColumns.isEmpty) base.select() // COUNT(*): rows only
-      else base.select(requiredColumns.toIndexedSeq.map(col): _*)
-    pruned.rdd
+    // no required column (COUNT(*)) selects rows only
+    filters.flatMap(toColumn)
+      .foldLeft(CommitLog.readSnapshot(spark, dir, snap))(_.filter(_))
+      .select(requiredColumns.toIndexedSeq.map(col): _*).rdd
   }
 }
 
@@ -363,6 +301,5 @@ private[graft] final case class GraftLakeFrameRelation(
   override val schema: StructType = frame.schema
 
   override def buildScan(requiredColumns: Array[String]): RDD[Row] =
-    (if (requiredColumns.isEmpty) frame.select()
-    else frame.select(requiredColumns.toIndexedSeq.map(col): _*)).rdd
+    frame.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
 }

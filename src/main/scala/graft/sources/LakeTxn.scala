@@ -471,7 +471,10 @@ object LakeTxn {
     // are the sequential path's heal-forward window exactly: some
     // subset of tables committed, no manifest — the replayed batch
     // no-ops the committed ones (their ledgers hold the id under this
-    // family's appId), commits the rest, then pins once.
+    // family's appId), commits the rest, then pins once. A failed verb
+    // surfaces only after EVERY verb has settled: rethrowing at the
+    // first failure would return control while siblings still commit
+    // in the background, racing the caller's own replay.
     val pins: Map[String, Long] =
       if (writes.size == 1) Map(applyVerb(writes.head))
       else {
@@ -481,10 +484,11 @@ object LakeTxn {
           math.min(writes.size, 4))
         implicit val ec: ExecutionContext =
           ExecutionContext.fromExecutorService(pool)
-        try Await.result(
-          Future.sequence(writes.map(w => Future(applyVerb(w)))),
-          Duration.Inf).toMap
-        finally pool.shutdown()
+        val settled =
+          try Await.result(Future.sequence(writes.map(w =>
+            Future(applyVerb(w)).transform(scala.util.Try(_)))), Duration.Inf)
+          finally pool.shutdown()
+        settled.map(_.get).toMap
       }
     commit(spark, txnDir, pins, Some(batchId))
   }

@@ -26,7 +26,7 @@ import graft.sources.CommitLog
   *    `startingVersion=latest`, or history from `startingVersion=<v>` /
   *    `startingTimestamp=<ts>`;
   *  - every later batch = the rows in files ADDED over the version
-  *    range ([[CommitLog.addedRows]]) — append commits only;
+  *    range ([[CommitLog.addedFilesAt]]) — append commits only;
   *    compactions are invisible; rewrites/deletes abort the stream
   *    loudly unless `skipChangeCommits=true` (Delta's option for
   *    streaming appends off a mutating table).

@@ -385,4 +385,83 @@ class LakeBatchSpec extends AnyFunSuite {
       s"small lake side did not broadcast on the fallback path:\n$plan")
     assert(j.count() == 49L)
   }
+
+  /** 64 files, one contiguous 1000-id slice each, zone maps on `id`. */
+  private def sixtyFourFiles(): String = {
+    val dir = fresh()
+    spark.range(0, 64000, 1, 64).select($"id", ($"id" % 7).as("v"))
+      .write.parquet(dir)
+    CommitLog.init(spark, dir, statsCols = Seq("id"))
+    assert(CommitLog.latest(spark, dir).get.files.size == 64)
+    dir
+  }
+
+  private def fileScans(q: org.apache.spark.sql.DataFrame) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(q.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+
+  test("a point filter through spark.read opens ONE of 64 files: the " +
+    "scan node's numFiles metric counts the snapshot index's selection") {
+    val dir = sixtyFourFiles()
+    val q = spark.read.format("graft-lake").load(dir).filter($"id" === 12345L)
+    assert(q.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((12345L, 12345L % 7)))
+    val scans = fileScans(q)
+    assert(scans.size == 1, s"expected one file scan:\n${q.queryExecution.executedPlan}")
+    assert(scans.head.metrics("numFiles").value == 1L,
+      s"zone maps did not prune in the scan node: " +
+        s"${scans.head.metrics("numFiles").value} of 64 files")
+  }
+
+  test("planning a pruned read launches no Spark job: no listing job, " +
+    "the manifest is read on the driver") {
+    val dir = sixtyFourFiles()
+    var read = -1
+    val jobs = TestSpark.countJobs {
+      val q = spark.read.format("graft-lake").load(dir)
+        .filter($"id" === 42000L)
+      read = SnapshotFileIndex.filesScanned(q)
+    }
+    assert(read == 1, s"planned scan selected $read of 64 files")
+    assert(jobs == 0, s"planning launched $jobs Spark job(s)")
+  }
+
+  test("a committed data file deleted out of band fails the read " +
+    "loudly instead of returning fewer rows") {
+    val dir = fresh()
+    df(0, 300).write.format("graft-lake").partitionBy("pd").save(dir)
+    val victim = CommitLog.latest(spark, dir).get.files.head
+    Files.delete(java.nio.file.Paths.get(s"$dir/$victim"))
+    val e = intercept[java.io.FileNotFoundException](
+      spark.read.format("graft-lake").load(dir).count())
+    assert(e.getMessage.contains(victim), e.getMessage)
+    intercept[java.io.FileNotFoundException](
+      CommitLog.read(spark, dir).count())
+  }
+
+  test("outstanding deletion vectors: the same rows with and without " +
+    "a pruning filter, and the filter still prunes files") {
+    val dir = fresh()
+    spark.range(0, 6000, 1, 6).select($"id".as("k"), ($"id" % 7).as("v"))
+      .write.parquet(dir)
+    CommitLog.init(spark, dir, statsCols = Seq("k"))
+    CommitLog.deleteVectors(spark, dir, $"k" % 10 === 3L)
+    def inBox(k: Long) = k >= 2500L && k < 3500L
+    val all = spark.read.format("graft-lake").load(dir)
+      .select($"k", $"v").as[(Long, Long)].collect()
+    assert(all.length == 5400)
+    val want = all.filter(r => inBox(r._1)).toSet
+    assert(want.size == 900)
+    val viaProvider = spark.read.format("graft-lake").load(dir)
+      .filter($"k" >= 2500L && $"k" < 3500L)
+      .select($"k", $"v").as[(Long, Long)].collect().toSet
+    assert(viaProvider == want)
+    val (viaVerb, (read, total)) = CommitLog.scanRange(spark, dir, "k",
+      2500L, 3499L)
+    assert(viaVerb.select($"k", $"v").as[(Long, Long)].collect().toSet == want)
+    assert(total == 6 && read == 2,
+      s"zone maps should keep the 2 overlapping files: $read/$total")
+  }
 }

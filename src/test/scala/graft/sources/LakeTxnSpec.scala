@@ -490,6 +490,33 @@ class LakeTxnSpec extends AnyFunSuite {
       "the rejected batch must publish nothing")
   }
 
+  test("writeAll with one failing verb rethrows only after every " +
+    "sibling verb has settled (no commit racing the caller)") {
+    val w = work()
+    val slow = s"$w/slow"; val bad = s"$w/bad"; val txn = s"$w/txnf"
+    Seq((1L, 10.0)).toDF("k", "amt").write.parquet(slow)
+    CommitLog.init(spark, slow)
+    Seq((1L, "a")).toDF("k", "note").write.parquet(bad)
+    CommitLog.init(spark, bad)
+    LakeTxn.commit(spark, txn, Map(slow -> 1L, bad -> 1L))
+    val cut0 = LakeTxn.latest(spark, txn).get.txn
+    val v0 = CommitLog.latest(spark, slow).get.version
+    // the slow leg's rows take seconds to compute; the bad leg fails at
+    // once (its predicate names no column of the table)
+    val nap = udf((k: Long) => { Thread.sleep(3000); k })
+    val e = intercept[Exception](LakeTxn.writeAll(spark, txn, Seq(
+      LakeTxn.TxnAppend(slow,
+        Seq((2L, 20.0)).toDF("k", "amt").withColumn("k", nap($"k"))),
+      LakeTxn.TxnDelete(bad, col("no_such_column") === 1L)),
+      batchId = 3L))
+    assert(e.getMessage.contains("no_such_column"), e.getMessage)
+    // the slow verb had COMMITTED by the time writeAll threw
+    assert(CommitLog.latest(spark, slow).get.version == v0 + 1,
+      "writeAll returned while a sibling verb was still committing")
+    assert(LakeTxn.latest(spark, txn).get.txn == cut0,
+      "a failed writeAll must publish no manifest")
+  }
+
   test("writeAll delete leg: fact-append + retention delete is one " +
     "family cut; the crash window heals forward; replay no-ops by " +
     "LEDGER even when the predicate would re-match newer rows") {
