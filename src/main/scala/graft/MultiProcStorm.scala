@@ -94,15 +94,10 @@ object MultiProcStorm {
               case _: CommitLog.WriteConflict if attempt < 40 =>
                 attempt += 1
                 Thread.sleep(50L * (1 + attempt % 5))
-              case e: IllegalStateException
-                  if e.getMessage != null &&
-                    e.getMessage.contains("lost the commit race") &&
-                    attempt < 40 =>
-                // commitRebase exhausted ITS internal CAS retries under
-                // heavy cross-process contention — not a conflict, just
-                // contention; re-attempt like RebaseSpec's writers do
-                // (the generic exception carries no type, so the
-                // documented message is the discriminator here)
+              case _: CommitLog.CommitContention if attempt < 40 =>
+                // the commit protocol exhausted ITS internal CAS retries
+                // under heavy cross-process contention — not a conflict,
+                // just contention; re-attempt like RebaseSpec's writers do
                 attempt += 1
                 Thread.sleep(50L * (1 + attempt % 5))
             }

@@ -49,8 +49,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `key=value` path components of the file list, no directory listing);
   * vacuum cost is one listing plus unlink of dead files.
   *
-  * Multi-writer (optimistic concurrency): [[upsert]] is staged
-  * ([[stageUpsert]]) and committed ([[commitStaged]]) separately. The
+  * Multi-writer (optimistic concurrency): every verb commits through
+  * ONE protocol, [[LakeCommit.run]] (read, replay check, fence check,
+  * next snapshot, CAS; a lost CAS aborts, rebases or re-derives by the
+  * verb's rule). [[upsert]] is staged ([[stageUpsert]]) and committed
+  * ([[commitStaged]]) separately. The
   * staged files are invisible until the commit; when the CAS loses a
   * race, the committer re-reads the new latest snapshot, checks the
   * PARTITION-level conflict unit (did any intervening commit touch a
@@ -74,7 +77,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the floor are reclaimed, so a live writer's work survives and a
   * crashed writer's residue ages out (the Delta-VACUUM retention shape).
   */
-object CommitLog {
+object CommitLog extends org.apache.spark.internal.Logging {
+  import LakeCommit.{Abort, Rederive, assertUnfenced, bump, casWrite,
+    replayed, txnKey}
 
   private val LogDirName = "_graft_log"
   private val DefaultPartition = "__HIVE_DEFAULT_PARTITION__"
@@ -139,14 +144,14 @@ object CommitLog {
     * target: branch commits mint `branches/<name>/manifest-…` so their
     * metadata lives inside the branch's own log dir while staying
     * resolvable from any log over the table ([[logFile]]). */
-  private def relPrefix(target: String): String =
+  private[sources] def relPrefix(target: String): String =
     branchOf(target).map(b => s"branches/$b/").getOrElse("")
 
   /** A committed log-tree rel (manifest / deletion vector) resolved
     * against the table's ONE log tree — rels are log-tree-relative, so
     * a branch snapshot can reference main-minted artifacts (its
     * inherited seed) and vice versa (a fast-forwarded branch commit). */
-  private def logFile(target: String, rel: String): String =
+  private[sources] def logFile(target: String, rel: String): String =
     s"${dataDir(target)}/$LogDirName/$rel"
 
   /** One committed version: the live file list (dir-relative), the
@@ -187,23 +192,18 @@ object CommitLog {
     * so specs can exercise the compaction without 10k commits. */
   @volatile private[sources] var LedgerKeep: Int = 10000
 
-  /** Is `b` in the snapshot's exactly-once ledger? Explicit ids first,
-    * then the compacted floor (ids ≤ floor were pruned as committed). */
-  private def inLedger(s: Snapshot, b: Long): Boolean =
-    b <= s.batchFloor || s.batches.contains(b)
-
   private def logPath(target: String) = splitBranch(target) match {
     case (d, None) => new Path(d, LogDirName)
     case (d, Some(b)) => new Path(d, s"$LogDirName/branches/$b")
   }
-  private def versionFile(dir: String, v: Long) =
+  private[sources] def versionFile(dir: String, v: Long) =
     new Path(logPath(dir), f"v$v%020d.json")
-  private def hadoopFs(spark: SparkSession, dir: String): FileSystem =
+  private[sources] def hadoopFs(spark: SparkSession, dir: String): FileSystem =
     new Path(dataDir(dir))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ------------------------------------------------------------- codec
-  private def render(s: Snapshot): String = {
+  private[sources] def render(s: Snapshot): String = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
     JsonMethods.compact(JsonMethods.render(
@@ -251,11 +251,18 @@ object CommitLog {
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
-  /** A lost CAS race: the version this writer tried to publish already
-    * exists. [[commitStaged]] catches this to rebase-and-retry; it
-    * extends IllegalStateException so a writer that exhausts its retries
-    * (or a true conflict) still fails with the documented type. */
+  /** A lost CAS: the version (or pointer/manifest) file this writer
+    * tried to create already exists. Raised only by [[LogStore]];
+    * [[LakeCommit.run]] settles it by the verb's rule — rebase,
+    * re-derive, or abort with "lost the commit race". */
   final class CommitConflict(msg: String) extends IllegalStateException(msg)
+
+  /** Typed RETRY EXHAUSTION: a rebase or re-derive verb lost every one
+    * of its CAS attempts ([[LakeCommit.retrying]]) — contention, or a
+    * crashed writer's version file squatting on the next version. Not a
+    * true conflict: re-running the verb is safe. The message names both
+    * ("lost the commit race", "blocking the log"). */
+  final class CommitContention(msg: String) extends IllegalStateException(msg)
 
   /** Typed TRUE-CONFLICT signal: concurrent commits rewrote a
     * partition this writer also rewrote, so the write cannot rebase —
@@ -263,7 +270,9 @@ object CommitLog {
     * current snapshot. A TYPE (extending the documented
     * IllegalStateException) so retry harnesses classify it without
     * matching message text. Distinct from [[CommitConflict]], which is
-    * the benign version-number race the writer retries internally. */
+    * the benign version-number race the protocol retries internally.
+    * Also raised when a write pinned to an expected version finds the
+    * table moved (its work was derived from the stale snapshot). */
   final class WriteConflict(msg: String) extends IllegalStateException(msg)
 
   /** Typed divergence signal: the branch's fork point is behind the
@@ -293,29 +302,6 @@ object CommitLog {
     * (reference: database/schema.sql:31-33). */
   private[graft] val FenceProp = "graft.branch.fence"
 
-  /** Loud rejection of any non-merge commit against a fenced branch
-    * head. Called by [[commit]] (covering append/upsert/delete/compact/
-    * restore — everything riding [[commitRebase]]) and by each
-    * direct-CAS metadata verb (setProps, schema DDL). */
-  private def assertUnfenced(prev: Snapshot, dir: String): Unit =
-    prev.props.get(FenceProp).foreach { epoch =>
-      throw new IllegalStateException(
-        s"$dir is FENCED for merge (fence $epoch): a mergeBranch is " +
-          "adopting this branch into main — wait for its sync commit, " +
-          "or if the merge crashed, clear the fence with " +
-          "CommitLog.unfenceBranch and re-merge")
-    }
-
-  /** The commit point: a concurrent writer that raced to the same
-    * version number fails HERE, loudly, with the log unchanged. The
-    * actual primitive is the path's [[LogStore]]: atomic
-    * create-no-overwrite on POSIX/HDFS, a registered conditional-put
-    * backend on object stores ([[ConditionalPutLogStore]] — S3
-    * `If-None-Match`, GCS generation-0). LogStoreContractSpec drives
-    * both through the same barrier race. */
-  private[sources] def casWrite(f: FileSystem, p: Path, text: String): Unit =
-    LogStore.forPath(f, p).casWrite(f, p, text)
-
   // ----------------------------------------------------------- reading
   private val VersionName = "^v(\\d{20})\\.json$".r
 
@@ -336,15 +322,15 @@ object CommitLog {
     versionNumbers(f, dir).reverse.view.flatMap { v =>
       try Some(parse(readText(f, versionFile(dir, v))))
       catch { case e: Exception =>
-        System.err.println(
-          s"[commitlog] unreadable version $v in $dir (${e.getMessage}) — " +
+        logWarning(
+          s"unreadable version $v in $dir (${e.getMessage}) — " +
             "falling back to the previous version")
         None
       }
     }.headOption
   }
 
-  private def mustLatest(spark: SparkSession, dir: String): Snapshot =
+  private[sources] def mustLatest(spark: SparkSession, dir: String): Snapshot =
     latest(spark, dir).getOrElse {
       // a target that PARSED as a branch but has no branch log, while
       // the LITERAL path holds a table, is almost certainly a plain
@@ -469,7 +455,7 @@ object CommitLog {
   /** Hive partition columns encoded in a dir-relative file path — the
     * ONE decoder for the `key=value/.../file` shape, shared by the
     * commit-time persist and every maintenance verb's re-derivation. */
-  private def partColsFromRel(rel: String): Seq[String] =
+  private[sources] def partColsFromRel(rel: String): Seq[String] =
     rel.split('/').dropRight(1)
       .takeWhile(_.contains('=')).map(_.takeWhile(_ != '=')).toSeq
 
@@ -894,11 +880,7 @@ object CommitLog {
       s"each tuple must carry one value per partition column " +
         s"(${partitionCols.mkString(", ")})")
     val s = mustLatest(spark, dir)
-    if (batchId.exists(inLedger(s, _))) {
-      System.err.println(
-        s"[commitlog] batch ${batchId.get} already committed to $dir — replay skipped")
-      return s
-    }
+    if (replayed(s, dir, batchId)) return s
     val dirs = tuples.map(t =>
       partitionCols.zip(t).map { case (c, v) => partDirOf(c, v) }
         .mkString("/")).toSet
@@ -913,10 +895,10 @@ object CommitLog {
     val removed = s.files.filter(f => dirs.exists(d => f.startsWith(d + "/")))
     val newRels = stageWrite(spark, dir, replacement, partitionCols,
       s.physNames)
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, dirs, removed.toSet, newRels, batchId,
         Some(replacement.schema.json)),
-      "replace", maxRetries = 10)
+      "replace")
   }
 
   /** The `key=value` dir-name a row's partition value maps to — must
@@ -940,8 +922,8 @@ object CommitLog {
   /** Zone-map stats (+ per-file KLL sketches) for `rels`, keyed by
     * RELATIVE path so manifest rows join the snapshot's file list
     * directly. */
-  private def relStats(spark: SparkSession, dir: String, rels: Seq[String],
-      cols: Seq[String], sketchCols: Seq[String],
+  private[sources] def relStats(spark: SparkSession, dir: String,
+      rels: Seq[String], cols: Seq[String], sketchCols: Seq[String],
       bloomCols: Seq[String] = Nil, bloomExpect: Long = 1L << 20,
       thetaCols: Seq[String] = Nil, thetaLgK: Int = 14): DataFrame = {
     val base = hadoopFs(spark, dir).makeQualified(new Path(dataDir(dir))).toUri.getPath
@@ -952,12 +934,6 @@ object CommitLog {
         "^.*" + java.util.regex.Pattern.quote(base) + "/", ""))
   }
 
-  /** Publish `files` (+ ledger + stats) as the next version. The stats
-    * snapshot is incremental: rows for files carried over from the
-    * previous version are reused; only `newRels` are scanned. The
-    * manifest file name carries a random suffix so two racing committers
-    * never collide on it — the version file stays the ONLY commit point
-    * (a manifest that lost its race is [[vacuum]] garbage). */
   /** Is `from` → `to` a SAFE type widening the parquet reader upcasts
     * natively (verified on this Spark: requesting the wider type over
     * files storing the narrower one returns exact values)? The commit
@@ -992,7 +968,7 @@ object CommitLog {
   /** Additive schema merge: `base`'s fields (WIDENED where `more`
     * carries a safely-wider type — the write-side half of type
     * evolution), then `more`'s new ones. */
-  private def mergeSchemaJson(base: Option[String],
+  private[sources] def mergeSchemaJson(base: Option[String],
       more: Option[String]): Option[String] = (base, more) match {
     case (None, m) => m
     case (b, None) => b
@@ -1010,98 +986,6 @@ object CommitLog {
         ms.fields.filterNot(f => bs.fieldNames.contains(f.name))).json)
   }
 
-  private def commit(spark: SparkSession, dir: String, prev: Snapshot,
-      files: Seq[String], newRels: Seq[String],
-      batches: Seq[Long], op: String,
-      schemaJson: Option[String] = None,
-      propsDelta: Map[String, String] = Map.empty,
-      dvsNew: Option[Seq[String]] = None,
-      /** REPLACE TABLE mode: `schemaJson` is the EXACT new schema (no
-        * additive merge with the previous), the rename/drop
-        * bookkeeping resets (the new files carry the new schema's own
-        * names), and per-column stats/sketch/bloom/theta declarations
-        * survive only for columns the new schema still carries (a
-        * manifest builder asked for a vanished column would fail every
-        * later commit). */
-      schemaReplace: Boolean = false): Snapshot = {
-    assertUnfenced(prev, dir)
-    val f = hadoopFs(spark, dir)
-    val v = prev.version + 1
-    val keepCol: String => Boolean =
-      if (!schemaReplace) _ => true
-      else schemaJson.map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fieldNames.toSet.contains _).getOrElse(_ => true)
-    val statsCols = prev.statsCols.filter(keepCol)
-    val sketchCols = prev.sketchCols.filter(keepCol)
-    val bloomCols = prev.bloomCols.filter(keepCol)
-    val thetaCols = prev.thetaCols.filter(keepCol)
-    val manifestRel =
-      if (statsCols.isEmpty && sketchCols.isEmpty &&
-        bloomCols.isEmpty && thetaCols.isEmpty) None
-      else {
-        val tag = java.util.UUID.randomUUID.toString.take(8)
-        val rel = relPrefix(dir) + f"manifest-v$v%020d-$tag.parquet"
-        // carry-over filters by the REMOVED set (churn-sized), not the
-        // kept set (table-sized): at a million files an In-list over the
-        // kept files would put one literal per untouched file into the
-        // plan of every commit
-        val removedSet = prev.files.toSet -- files
-        // a schema REPLACE references no prior file (and the old
-        // manifest's column layout may no longer union with the new)
-        val kept =
-          if (schemaReplace) None
-          else prev.manifest.map { m =>
-            val df = spark.read.parquet(logFile(dir, m))
-            if (removedSet.isEmpty) df
-            else df.filter(!col("file").isInCollection(removedSet.toSeq))
-          }
-        val fresh =
-          if (newRels.isEmpty) None
-          else Some(relStats(spark, dir, newRels, statsCols,
-            sketchCols, bloomCols, prev.bloomExpect,
-            thetaCols, prev.thetaLgK))
-        val parts = kept.toSeq ++ fresh
-        if (parts.isEmpty) None
-        else {
-          val merged = parts.reduce(_ unionByName _)
-          merged.coalesce(1).write.mode(SaveMode.ErrorIfExists)
-            .parquet(logFile(dir, rel))
-          Some(rel)
-        }
-      }
-    // ledger compaction: oldest ids fold into the floor once over cap
-    val allB = batches.distinct.sorted
-    val (floorB, keptB) =
-      if (allB.size > LedgerKeep) {
-        val cut = allB.size - LedgerKeep
-        (math.max(allB(cut - 1), prev.batchFloor), allB.drop(cut))
-      } else (prev.batchFloor, allB)
-    val snap = Snapshot(v, files.sorted, keptB,
-      statsCols, manifestRel, op, sketchCols,
-      if (schemaReplace) schemaJson
-      else mergeSchemaJson(prev.schemaJson, schemaJson),
-      bloomCols, prev.bloomExpect, prev.props ++ propsDelta,
-      // persist the layout so a later zero-file snapshot still knows it
-      files.headOption.map(partColsFromRel).getOrElse(prev.partCols),
-      // wall-clock stamp for AS-OF resolution only — never read by any
-      // query result path, so clock skew costs time-travel precision,
-      // not correctness
-      System.currentTimeMillis(),
-      floorB,
-      thetaCols, prev.thetaLgK,
-      // deletion vectors: an explicit override (delete-mor appends; a
-      // whole-table rewrite clears; restore re-pins) else inherited —
-      // entries naming files this commit removed match nothing and are
-      // swept with the next whole-table rewrite
-      dvsNew.getOrElse(prev.dvs),
-      if (schemaReplace) Map.empty else prev.physNames,
-      if (schemaReplace) Nil else prev.retired)
-    casWrite(f, versionFile(dir, v), render(snap))
-    snap
-  }
-
   /** Properties-only commit: merge `kv` into the table's property map
     * (a null/absent-safe upsert of each key) against the current file
     * set. Table properties are the log-resident catalog state — view
@@ -1109,23 +993,12 @@ object CommitLog {
     * restores instead of relying on JVM-global registries; they ride
     * every subsequent commit unchanged. */
   def setProps(spark: SparkSession, dir: String,
-      kv: Map[String, String]): Snapshot = {
-    val s = mustLatest(spark, dir)
-    assertUnfenced(s, dir)
-    val merged = s.props ++ kv
-    if (merged == s.props) return s
-    val next = s.copy(version = s.version + 1, props = merged, op = "props",
-      batches = s.batches, committedAt = System.currentTimeMillis())
-    try {
-      casWrite(hadoopFs(spark, dir), versionFile(dir, next.version),
-        render(next))
-      next
-    } catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"setProps on $dir lost the commit race (${e.getMessage}) — " +
-          "re-read and retry")
+      kv: Map[String, String]): Snapshot =
+    LakeCommit.run(spark, dir, "setProps", Abort) { s =>
+      val merged = s.props ++ kv
+      if (merged == s.props) None
+      else Some(bump(s, "props").copy(props = merged))
     }
-  }
 
   /** Schema-only DDL commit: declare new NULLABLE columns ahead of any
     * write that carries them (the explicit `ALTER TABLE` twin of the
@@ -1138,41 +1011,31 @@ object CommitLog {
   def addColumns(spark: SparkSession, dir: String,
       newCols: org.apache.spark.sql.types.StructType): Snapshot = {
     require(newCols.nonEmpty, "addColumns needs at least one column")
-    val s = mustLatest(spark, dir)
-    assertUnfenced(s, dir)
-    val base = s.schemaJson
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(readSnapshot(spark, dir, s).schema)
-    newCols.fieldNames.foreach(n => require(!base.fieldNames.contains(n),
-      s"addColumns on $dir: column '$n' already exists"))
-    newCols.fields.foreach(f => require(f.nullable,
-      s"addColumns on $dir: '${f.name}' must be nullable — existing " +
-        "rows have no value for it"))
-    // physical-name hygiene: a new logical name whose physical twin is
-    // already on disk (a retired DROP, or the birth name a RENAME moved
-    // away from) must NOT read old files' values — mint a fresh
-    // physical name so existing files surface null, as an add must
-    val physInUse = base.fieldNames
-      .map(n => s.physNames.getOrElse(n, n)).toSet ++ s.retired
-    val mint = newCols.fieldNames.toSeq.collect {
-      case n if physInUse.contains(n) =>
-        n -> Iterator.from(s.version.toInt + 1)
-          .map(i => s"${n}__r$i")
-          .find(c => !physInUse.contains(c)).get
-    }.toMap
-    val merged = mergeSchemaJson(Some(base.json), Some(newCols.json))
-    val next = s.copy(version = s.version + 1, schemaJson = merged,
-      op = "schema", committedAt = System.currentTimeMillis(),
-      physNames = s.physNames ++ mint)
-    try {
-      casWrite(hadoopFs(spark, dir), versionFile(dir, next.version),
-        render(next))
-      next
-    } catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"addColumns on $dir lost the commit race (${e.getMessage}) — " +
-          "re-read and retry")
+    LakeCommit.run(spark, dir, "addColumns", Abort) { s =>
+      val base = s.schemaJson
+        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .getOrElse(readSnapshot(spark, dir, s).schema)
+      newCols.fieldNames.foreach(n => require(!base.fieldNames.contains(n),
+        s"addColumns on $dir: column '$n' already exists"))
+      newCols.fields.foreach(f => require(f.nullable,
+        s"addColumns on $dir: '${f.name}' must be nullable — existing " +
+          "rows have no value for it"))
+      // physical-name hygiene: a new logical name whose physical twin is
+      // already on disk (a retired DROP, or the birth name a RENAME moved
+      // away from) must NOT read old files' values — mint a fresh
+      // physical name so existing files surface null, as an add must
+      val physInUse = base.fieldNames
+        .map(n => s.physNames.getOrElse(n, n)).toSet ++ s.retired
+      val mint = newCols.fieldNames.toSeq.collect {
+        case n if physInUse.contains(n) =>
+          n -> Iterator.from(s.version.toInt + 1)
+            .map(i => s"${n}__r$i")
+            .find(c => !physInUse.contains(c)).get
+      }.toMap
+      Some(bump(s, "schema").copy(
+        schemaJson = mergeSchemaJson(Some(base.json), Some(newCols.json)),
+        physNames = s.physNames ++ mint))
     }
   }
 
@@ -1199,70 +1062,48 @@ object CommitLog {
     * forever and every read aliases it back ([[rawRead]]/[[toLogical]]
     * — the Delta-column-mapping shape). O(1) at any table size. */
   def renameColumn(spark: SparkSession, dir: String,
-      from: String, to: String): Snapshot = {
-    val s = mustLatest(spark, dir)
-    assertUnfenced(s, dir)
-    val base = logicalSchema(spark, dir, s)
-    require(base.fieldNames.contains(from),
-      s"renameColumn on $dir: no column '$from'")
-    require(!base.fieldNames.contains(to),
-      s"renameColumn on $dir: column '$to' already exists")
-    anchoredCols(s).get(from).foreach(role => throw new IllegalArgumentException(
-      s"renameColumn on $dir: '$from' is $role — its name anchors " +
-        "persisted metadata; rewrite the table instead"))
-    val phys = s.physNames.getOrElse(from, from)
-    val renamed = org.apache.spark.sql.types.StructType(base.fields.map(f =>
-      if (f.name == from) f.copy(name = to) else f))
-    val next = s.copy(version = s.version + 1,
-      schemaJson = Some(renamed.json), op = "schema",
-      committedAt = System.currentTimeMillis(),
-      physNames = (s.physNames - from) ++
-        (if (phys == to) Map.empty[String, String] else Map(to -> phys)))
-    try {
-      casWrite(hadoopFs(spark, dir), versionFile(dir, next.version),
-        render(next))
-      next
-    } catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"renameColumn on $dir lost the commit race (${e.getMessage}) — " +
-          "re-read and retry")
+      from: String, to: String): Snapshot =
+    LakeCommit.run(spark, dir, "renameColumn", Abort) { s =>
+      val base = logicalSchema(spark, dir, s)
+      require(base.fieldNames.contains(from),
+        s"renameColumn on $dir: no column '$from'")
+      require(!base.fieldNames.contains(to),
+        s"renameColumn on $dir: column '$to' already exists")
+      anchoredCols(s).get(from).foreach(role =>
+        throw new IllegalArgumentException(
+          s"renameColumn on $dir: '$from' is $role — its name anchors " +
+            "persisted metadata; rewrite the table instead"))
+      val phys = s.physNames.getOrElse(from, from)
+      val renamed = org.apache.spark.sql.types.StructType(
+        base.fields.map(f => if (f.name == from) f.copy(name = to) else f))
+      Some(bump(s, "schema").copy(schemaJson = Some(renamed.json),
+        physNames = (s.physNames - from) ++
+          (if (phys == to) Map.empty[String, String] else Map(to -> phys))))
     }
-  }
 
   /** DROP COLUMN as a zero-file schema commit: the column leaves the
     * committed logical schema (readers prune it at the parquet scan —
     * the bytes stay until the next rewrite, exactly Delta's logical
     * drop). Its PHYSICAL name is retired so a later ADD COLUMNS of the
     * same name cannot resurrect old values ([[addColumns]]'s mint). */
-  def dropColumn(spark: SparkSession, dir: String, name: String): Snapshot = {
-    val s = mustLatest(spark, dir)
-    assertUnfenced(s, dir)
-    val base = logicalSchema(spark, dir, s)
-    require(base.fieldNames.contains(name),
-      s"dropColumn on $dir: no column '$name'")
-    require(base.fields.length > 1,
-      s"dropColumn on $dir: cannot drop the last column")
-    anchoredCols(s).get(name).foreach(role => throw new IllegalArgumentException(
-      s"dropColumn on $dir: '$name' is $role — its name anchors " +
-        "persisted metadata; rewrite the table instead"))
-    val phys = s.physNames.getOrElse(name, name)
-    val remaining = org.apache.spark.sql.types.StructType(
-      base.fields.filterNot(_.name == name))
-    val next = s.copy(version = s.version + 1,
-      schemaJson = Some(remaining.json), op = "schema",
-      committedAt = System.currentTimeMillis(),
-      physNames = s.physNames - name,
-      retired = (s.retired :+ phys).distinct)
-    try {
-      casWrite(hadoopFs(spark, dir), versionFile(dir, next.version),
-        render(next))
-      next
-    } catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"dropColumn on $dir lost the commit race (${e.getMessage}) — " +
-          "re-read and retry")
+  def dropColumn(spark: SparkSession, dir: String, name: String): Snapshot =
+    LakeCommit.run(spark, dir, "dropColumn", Abort) { s =>
+      val base = logicalSchema(spark, dir, s)
+      require(base.fieldNames.contains(name),
+        s"dropColumn on $dir: no column '$name'")
+      require(base.fields.length > 1,
+        s"dropColumn on $dir: cannot drop the last column")
+      anchoredCols(s).get(name).foreach(role =>
+        throw new IllegalArgumentException(
+          s"dropColumn on $dir: '$name' is $role — its name anchors " +
+            "persisted metadata; rewrite the table instead"))
+      val phys = s.physNames.getOrElse(name, name)
+      val remaining = org.apache.spark.sql.types.StructType(
+        base.fields.filterNot(_.name == name))
+      Some(bump(s, "schema").copy(schemaJson = Some(remaining.json),
+        physNames = s.physNames - name,
+        retired = (s.retired :+ phys).distinct))
     }
-  }
 
   /** ALTER COLUMN TYPE as a zero-file schema commit: the committed
     * logical type widens along the safe lattice ([[widens]] — integral
@@ -1273,38 +1114,29 @@ object CommitLog {
     * schema change ([[mergeSchemaJson]]). Anchored columns refuse:
     * their per-file stats/sketches/Blooms are typed by the column. */
   def alterColumnType(spark: SparkSession, dir: String, name: String,
-      to: org.apache.spark.sql.types.DataType): Snapshot = {
-    val s = mustLatest(spark, dir)
-    assertUnfenced(s, dir)
-    val base = logicalSchema(spark, dir, s)
-    require(base.fieldNames.contains(name),
-      s"alterColumnType on $dir: no column '$name'")
-    val cur = base(name).dataType
-    if (cur == to) return s
-    require(widens(cur, to),
-      s"alterColumnType on $dir: ${cur.simpleString} -> " +
-        s"${to.simpleString} is not a safe widening (supported: " +
-        "byte<short<int<long, float<double, integral->decimal with " +
-        "enough integer digits, decimal->wider decimal)")
-    anchoredCols(s).get(name).foreach(role =>
-      throw new IllegalArgumentException(
-        s"alterColumnType on $dir: '$name' is $role — its persisted " +
-          "metadata is typed; rewrite the table instead"))
-    val widened = org.apache.spark.sql.types.StructType(base.fields.map(f =>
-      if (f.name == name) f.copy(dataType = to) else f))
-    val next = s.copy(version = s.version + 1,
-      schemaJson = Some(widened.json), op = "schema",
-      committedAt = System.currentTimeMillis())
-    try {
-      casWrite(hadoopFs(spark, dir), versionFile(dir, next.version),
-        render(next))
-      next
-    } catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"alterColumnType on $dir lost the commit race (${e.getMessage})" +
-          " — re-read and retry")
+      to: org.apache.spark.sql.types.DataType): Snapshot =
+    LakeCommit.run(spark, dir, "alterColumnType", Abort) { s =>
+      val base = logicalSchema(spark, dir, s)
+      require(base.fieldNames.contains(name),
+        s"alterColumnType on $dir: no column '$name'")
+      val cur = base(name).dataType
+      if (cur == to) None
+      else {
+        require(widens(cur, to),
+          s"alterColumnType on $dir: ${cur.simpleString} -> " +
+            s"${to.simpleString} is not a safe widening (supported: " +
+            "byte<short<int<long, float<double, integral->decimal with " +
+            "enough integer digits, decimal->wider decimal)")
+        anchoredCols(s).get(name).foreach(role =>
+          throw new IllegalArgumentException(
+            s"alterColumnType on $dir: '$name' is $role — its persisted " +
+              "metadata is typed; rewrite the table instead"))
+        val widened = org.apache.spark.sql.types.StructType(
+          base.fields.map(f =>
+            if (f.name == name) f.copy(dataType = to) else f))
+        Some(bump(s, "schema").copy(schemaJson = Some(widened.json)))
+      }
     }
-  }
 
   /** Start the log: snapshot the directory's current files as version 1.
     * With `statsCols`, every subsequent commit also maintains the
@@ -1341,8 +1173,10 @@ object CommitLog {
     // props ride the FIRST commit: a derived table whose rows and summary
     // properties must exist together (an index's corpus globals) gets
     // both in one crash-atomic step instead of init + setProps
-    commit(spark, dir, seed, rels, rels, initBatches, "init", Some(schema),
-      props)
+    LakeCommit.run(spark, dir, "init", Abort, from = Some(seed)) { s =>
+      Some(LakeCommit.build(spark, dir, s, rels, rels, initBatches, "init",
+        Some(schema), props))
+    }
   }
 
   /** CREATE TABLE: start the log on an EMPTY directory with a declared
@@ -1368,14 +1202,10 @@ object CommitLog {
     val f = hadoopFs(spark, dir)
     require(versionNumbers(f, dir).isEmpty, s"$dir already has a commit log")
     f.mkdirs(logPath(dir))
-    val snap = Snapshot(1L, Nil, Nil, statsCols, None, "create",
-      schemaJson = Some(schema.json), props = props, partCols = partCols,
-      committedAt = System.currentTimeMillis())
-    try { casWrite(f, versionFile(dir, 1L), render(snap)); snap }
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"create on $dir lost the commit race (${e.getMessage}) — " +
-          "another creator won; read the table instead")
+    val seed = Snapshot(0L, Nil, Nil, statsCols, None, "create",
+      schemaJson = Some(schema.json), props = props, partCols = partCols)
+    LakeCommit.run(spark, dir, "create", Abort, from = Some(seed)) { s =>
+      Some(bump(s, "create"))
     }
   }
 
@@ -1406,12 +1236,12 @@ object CommitLog {
       /** Per-QUERY sink transaction identity `(queryId, batchId)` —
         * checked against the props ledger on every rebase attempt, so a
         * concurrently-committed replay turns this commit into a no-op
-        * (the mid-flight mirror of [[txnDone]]). */
+        * (the mid-flight mirror of [[LakeCommit.txnDone]]). */
       txn: Option[(String, Long)] = None)
 
   /** Partition directory of a dir-relative data file ("" for an
     * unpartitioned layout — there the whole table is one conflict unit). */
-  private def partOf(rel: String): String = {
+  private[sources] def partOf(rel: String): String = {
     val i = rel.lastIndexOf('/')
     if (i < 0) "" else rel.substring(0, i)
   }
@@ -1428,9 +1258,9 @@ object CommitLog {
 
   /** Partition directories the given deletion vectors tombstone rows in
     * — the DV half of the commit-level conflict unit, shared by the
-    * same-log rebase ([[commitRebase]]), the cross-branch rebase
+    * same-log rebase ([[LakeCommit.rebase]]), the cross-branch rebase
     * ([[rebaseBranch]]) and [[partsBetween]]. */
-  private def dvTouchedParts(spark: SparkSession, target: String,
+  private[sources] def dvTouchedParts(spark: SparkSession, target: String,
       dvRels: Seq[String]): Set[String] =
     dvTouchedFiles(spark, target, dvRels).map(partOf)
 
@@ -1554,11 +1384,7 @@ object CommitLog {
       batchId: Option[Long] = None): Option[StagedUpsert] = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val s = mustLatest(spark, dir)
-    if (batchId.exists(inLedger(s, _))) {
-      System.err.println(
-        s"[commitlog] batch ${batchId.get} already committed to $dir — replay skipped")
-      return None
-    }
+    if (replayed(s, dir, batchId)) return None
     val parts = updates.select(col(partitionCol)).distinct().collect()
       .map(_.get(0)).toSeq // one value per touched partition — small
     val partDirs = parts.map(partDirOf(partitionCol, _)).toSet
@@ -1582,94 +1408,18 @@ object CommitLog {
       Some(updates.schema.json)))
   }
 
-  /** Commit a staged upsert, rebasing over disjoint concurrent commits.
-    *
-    * Loop: attempt the CAS one version past the current latest. On a
-    * lost race, re-read the latest snapshot and diff its file list
-    * against the staged base: the partitions whose file sets changed are
-    * what the intervening commits touched. Disjoint from ours → REBASE
-    * (drop the files we replaced, add ours, keep everything the winners
-    * published) and retry; overlapping (or a concurrent compaction,
-    * which rewrites every partition) → abort loudly with the log intact
-    * — re-run the upsert from the fresh snapshot. A `batchId` that
-    * appears in the ledger mid-flight (another worker committed the same
-    * micro-batch) turns the commit into a no-op instead of a
-    * double-apply. */
+  /** Commit a staged upsert through [[LakeCommit]]'s REBASE rule: on a
+    * lost race, the partitions whose files changed since the staged base
+    * are what the intervening commits touched. Disjoint from ours →
+    * republish our files on top of the winner's snapshot and retry;
+    * overlapping (or a concurrent compaction, which rewrites every
+    * partition) → a typed [[WriteConflict]] with the log intact — re-run
+    * the upsert from the fresh snapshot. A `batchId` that appears in the
+    * ledger mid-flight (another worker committed the same micro-batch)
+    * turns the commit into a no-op instead of a double-apply. */
   def commitStaged(spark: SparkSession, dir: String, staged: StagedUpsert,
       maxRetries: Int = 10): Snapshot =
-    commitRebase(spark, dir, staged, "upsert", maxRetries)
-
-  private def commitRebase(spark: SparkSession, dir: String,
-      staged: StagedUpsert, op: String, maxRetries: Int,
-      pinnedBase: Boolean = false): Snapshot = {
-    var attempt = 0
-    while (true) {
-      val s = mustLatest(spark, dir)
-      if (staged.batchId.exists(inLedger(s, _))) {
-        System.err.println(
-          s"[commitlog] batch ${staged.batchId.get} committed concurrently to " +
-            s"$dir — staged files abandoned for vacuum")
-        return s
-      }
-      staged.txn.foreach { case (q, b) =>
-        if (txnDone(s, q, b)) {
-          System.err.println(
-            s"[commitlog] sink txn $q#$b committed concurrently to $dir " +
-              "— staged files abandoned for vacuum")
-          return s
-        }
-      }
-      // a pinned-base commit (replaceWhere with expectedVersion: its
-      // propsDelta was DERIVED from the base snapshot) must not rebase
-      // over ANY intervening commit — even a file-disjoint or props-only
-      // one invalidates the derivation, which the partition-clash check
-      // below would wave through
-      if (pinnedBase && s.version != staged.base.version)
-        throw new CommitConflict(
-          s"$op on $dir pinned base version ${staged.base.version} but " +
-            s"latest is ${s.version} — re-derive from the current " +
-            "snapshot and re-run (staged files are vacuum garbage)")
-      if (s.version != staged.base.version) {
-        val baseSet = staged.base.files.toSet
-        val nowSet = s.files.toSet
-        // a delete-mor commit changes NO files — its intervening
-        // partitions live in the appended deletion vectors. Without
-        // this, a writer staged before the DV landed would rebase over
-        // it and republish the partition from its pre-DV image (the
-        // inherited dv entries then reference only files this commit
-        // removed), silently resurrecting tombstoned rows.
-        val dvNew = s.dvs.filterNot(staged.base.dvs.toSet)
-        val dvParts = dvTouchedParts(spark, dir, dvNew)
-        val interveningParts =
-          ((nowSet -- baseSet) ++ (baseSet -- nowSet)).map(partOf) ++ dvParts
-        val clash = interveningParts.intersect(staged.touchedParts)
-        if (clash.nonEmpty) throw new WriteConflict(
-          s"$op conflict on $dir: concurrent commits touched partition(s) " +
-            s"${clash.toSeq.sorted.mkString(", ")} this writer rewrote — " +
-            s"re-run the $op against the current snapshot " +
-            "(staged files are vacuum garbage)")
-      }
-      val files = s.files.filterNot(staged.removed) ++ staged.added
-      try {
-        return commit(spark, dir, s, files, staged.added,
-          s.batches ++ staged.batchId, op, staged.schemaJson,
-          staged.propsDelta,
-          if (staged.dvAppend.isEmpty && staged.dvDrop.isEmpty) None
-          else Some(s.dvs.filterNot(staged.dvDrop) ++ staged.dvAppend))
-      } catch {
-        case e: CommitConflict =>
-          attempt += 1
-          if (attempt >= maxRetries) throw new IllegalStateException(
-            s"$op on $dir lost the commit race $maxRetries times — " +
-              "if no live writer is active, a crashed writer's version file " +
-              s"is blocking the log (${e.getMessage})")
-          // brief backoff: the winner's version file becomes readable a
-          // moment after its create; the reload then rebases past it
-          Thread.sleep(20L * attempt)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    LakeCommit.rebase(spark, dir, staged, "upsert", maxRetries)
 
   /** Append-only commit: stage `rows` under their partition directories
     * and commit them as pure file ADDS — no partition read, no rewrite,
@@ -1694,10 +1444,7 @@ object CommitLog {
         * every rebase attempt. */
       txn: Option[(String, Long)] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    if (batchId.exists(inLedger(s, _))) return s
-    txn.foreach { case (q, b) =>
-      if (txnDone(s, q, b)) { txnSkip(dir, q, b); return s }
-    }
+    if (replayed(s, dir, batchId, txn)) return s
     checkSchemaCompatible(s, rows, dir)
     val partCols = partColsOf(s)
     val missingP = partCols.filterNot(rows.columns.contains)
@@ -1706,13 +1453,13 @@ object CommitLog {
         missingP.mkString(", "))
     val rels = stageWrite(spark, dir, rows, partCols, s.physNames)
     if (rels.isEmpty) return s
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, Set.empty, Set.empty, rels, batchId,
         Some(rows.schema.json),
         propsDelta = txn.map { case (q, b) =>
           Map(txnKey(q) -> b.toString) }.getOrElse(Map.empty),
         txn = txn),
-      "append", maxRetries = 10)
+      "append")
   }
 
   /** Keyed copy-on-write upsert: [[stageUpsert]] + [[commitStaged]].
@@ -1756,98 +1503,76 @@ object CommitLog {
             s"cannot bootstrap $dir from an empty batch — skip empty batches " +
               "until the first row arrives (a replayed empty batch is a no-op)")
         val seed = Snapshot(0L, Nil, Nil, statsCols, None, "init", sketchCols)
-        try commit(spark, dir, seed, rels, rels, batchId.toSeq, "init",
-          Some(updates.schema.json))
-        catch { case e: CommitConflict =>
-          throw new CreateRace(
-            s"create race on $dir — another writer bootstrapped the log " +
-              s"first (${e.getMessage}); re-invoke to upsert on top " +
-              "(staged files are vacuum garbage)")
+        LakeCommit.run(spark, dir, "init", Abort, from = Some(seed)) { s =>
+          Some(LakeCommit.build(spark, dir, s, rels, rels, batchId.toSeq,
+            "init", Some(updates.schema.json)))
         }
     }
 
   // ----------------------------------------------- streaming-sink txns
-  /** Per-QUERY transaction ledger for the native streaming sink
-    * (`df.writeStream.format("graft-lake")` /
-    * `.toTable("gcat.db.t")`): the table property
-    * `graft.txn.<queryId> = <last committed batch id>` rides each sink
-    * commit atomically with its data. Micro-batch ids are strictly
-    * monotone within one streaming query and sink commits are
-    * serialized by the log, so `batchId <= recorded` IS the replay
-    * test — the `(appId, version)` idempotence shape of Delta's txn
-    * action. Unlike the single-sequence `batches` ledger (which
-    * assumes ONE writer stream per table), the query id namespaces the
-    * entry: a RE-CREATED query (fresh checkpoint → batch ids restart
-    * at 0) gets a fresh ledger instead of silently skipping its first
-    * batches, and two queries feeding one table replay independently.
-    * One ~60-byte prop per query ever to write the table — planning
-    * metadata, not data-plane state. */
-  private def txnKey(queryId: String) = s"graft.txn.$queryId"
-  private[graft] def txnDone(s: Snapshot, queryId: String,
-      b: Long): Boolean =
-    s.props.get(txnKey(queryId)).exists(_.toLong >= b)
-  private def txnSkip(dir: String, queryId: String, b: Long): Unit =
-    System.err.println(
-      s"[commitlog] sink txn $queryId#$b already committed to $dir — " +
-        "replay skipped")
+  // Per-QUERY transaction ledger for the native streaming sink
+  // (`df.writeStream.format("graft-lake")` / `.toTable("gcat.db.t")`):
+  // the table property `graft.txn.<queryId> = <last committed batch id>`
+  // ([[LakeCommit.txnKey]]) rides each sink commit atomically with its
+  // data. Micro-batch ids are strictly monotone within one streaming
+  // query and sink commits are serialized by the log, so `batchId <=
+  // recorded` IS the replay test ([[LakeCommit.txnDone]]) — the
+  // `(appId, version)` idempotence shape of Delta's txn action. Unlike
+  // the single-sequence `batches` ledger (which assumes ONE writer
+  // stream per table), the query id namespaces the entry: a RE-CREATED
+  // query (fresh checkpoint → batch ids restart at 0) gets a fresh
+  // ledger instead of silently skipping its first batches, and two
+  // queries feeding one table replay independently. One ~60-byte prop
+  // per query ever to write the table — planning metadata, not
+  // data-plane state.
 
   /** Ledger-entry-ONLY commit: record `(queryId, batchId)` as done with
-    * NO file/dv/manifest churn — the setProps shape (copy the snapshot,
-    * bump the version, merge the prop), NOT the full [[commit]] path,
-    * which would reread and rewrite the table's entire stats manifest
-    * to publish a ~60-byte prop. Used when a txn-keyed verb matched
-    * nothing ([[delete]]/[[replaceWhere]] with an all-miss predicate):
-    * the identity must still land so a replay no-ops by LEDGER, but the
-    * commit is pure metadata at any table size. */
+    * NO file/dv/manifest churn — the setProps shape, NOT
+    * [[LakeCommit.build]], which would reread and rewrite the table's
+    * entire stats manifest to publish a ~60-byte prop. Used when a
+    * txn-keyed verb matched nothing ([[delete]]/[[replaceWhere]] with an
+    * all-miss predicate): the identity must still land so a replay
+    * no-ops by LEDGER, but the commit is pure metadata at any table
+    * size. */
   private def ledgerOnlyCommit(spark: SparkSession, dir: String,
-      queryId: String, batchId: Long, op: String): Snapshot = {
-    val f = hadoopFs(spark, dir)
-    var attempt = 0
-    while (true) {
-      val s = mustLatest(spark, dir)
-      assertUnfenced(s, dir)
-      if (txnDone(s, queryId, batchId)) { txnSkip(dir, queryId, batchId)
-        return s }
-      val next = s.copy(version = s.version + 1, op = op,
-        props = s.props + (txnKey(queryId) -> batchId.toString),
-        committedAt = System.currentTimeMillis())
-      try { casWrite(f, versionFile(dir, next.version), render(next))
-        return next }
-      catch { case e: CommitConflict =>
-        attempt += 1
-        if (attempt >= 10) throw new IllegalStateException(
-          s"$op ledger commit on $dir lost the race 10 times " +
-            s"(${e.getMessage})")
-        Thread.sleep(20L * attempt)
-      }
+      queryId: String, batchId: Long, op: String): Snapshot =
+    LakeCommit.run(spark, dir, s"$op ledger commit", Rederive,
+      txn = Some((queryId, batchId))) { s =>
+      Some(bump(s, op).copy(
+        props = s.props + (txnKey(queryId) -> batchId.toString)))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
-  /** First-ever sink batch into a directory with no commit log:
-    * bootstrap the table FROM the batch (version 1 = the batch, with
-    * the txn ledger entry riding the same commit). A crashed first
-    * batch left nothing visible; its replay bootstraps cleanly. */
-  private def sinkBootstrap(spark: SparkSession, rows: DataFrame,
-      dir: String, partCols: Seq[String], queryId: String,
-      batchId: Long): Snapshot = {
-    val f = hadoopFs(spark, dir)
-    f.mkdirs(logPath(dir))
-    val rels = stageWrite(spark, dir, rows, partCols)
-    if (rels.isEmpty)
-      throw new IllegalStateException(
-        s"cannot bootstrap $dir from an empty batch — the sink skips " +
-          "empty batches until the first row arrives")
-    val seed = Snapshot(0L, Nil, Nil, Nil, None, "init")
-    try commit(spark, dir, seed, rels, rels, Nil, "init",
-      Some(rows.schema.json), Map(txnKey(queryId) -> batchId.toString))
-    catch { case e: CommitConflict =>
-      throw new CreateRace(
-        s"create race on $dir — another writer bootstrapped the log " +
-          s"first (${e.getMessage}); re-run to land on top " +
-          "(staged files are vacuum garbage)")
+  /** The sink verbs' shared entry. A directory with no commit log is
+    * bootstrapped FROM the batch (version 1 = the batch, with the txn
+    * ledger entry riding the same commit; a crashed first batch left
+    * nothing visible and its replay bootstraps cleanly). Two streams
+    * bootstrapping one target: the loser of the create race lands ON
+    * TOP of the winner's table — the query must not die over a benign
+    * race. A replayed `(queryId, batchId)` returns the snapshot
+    * unchanged; anything else runs `onTable` against it. */
+  private def sinkWrite(spark: SparkSession, rows: DataFrame, dir: String,
+      bootstrapPartCols: Seq[String], queryId: String, batchId: Long)(
+      onTable: Snapshot => Snapshot): Snapshot =
+    latest(spark, dir) match {
+      case None =>
+        hadoopFs(spark, dir).mkdirs(logPath(dir))
+        val rels = stageWrite(spark, dir, rows, bootstrapPartCols)
+        if (rels.isEmpty)
+          throw new IllegalStateException(
+            s"cannot bootstrap $dir from an empty batch — the sink skips " +
+              "empty batches until the first row arrives")
+        try LakeCommit.run(spark, dir, "init", Abort,
+          from = Some(Snapshot(0L, Nil, Nil, Nil, None, "init"))) { s =>
+          Some(LakeCommit.build(spark, dir, s, rels, rels, Nil, "init",
+            Some(rows.schema.json), Map(txnKey(queryId) -> batchId.toString)))
+        }
+        catch { case _: CreateRace =>
+          sinkWrite(spark, rows, dir, bootstrapPartCols, queryId,
+            batchId)(onTable)
+        }
+      case Some(s0) if replayed(s0, dir, txn = Some((queryId, batchId))) => s0
+      case Some(s0) => onTable(s0)
     }
-  }
 
   /** The native streaming sink's APPEND verb (`OutputMode.Append`):
     * [[append]] semantics guarded by the per-query txn ledger. Pure
@@ -1857,34 +1582,21 @@ object CommitLog {
   def sinkAppend(spark: SparkSession, rows: DataFrame, dir: String,
       queryId: String, batchId: Long,
       bootstrapPartCols: Seq[String] = Nil): Snapshot =
-    latest(spark, dir) match {
-      case None =>
-        // two streams bootstrapping one target: the loser of the create
-        // race lands ON TOP of the winner's table (its staged files are
-        // vacuum garbage) — the query must not die over a benign race
-        try sinkBootstrap(spark, rows, dir, bootstrapPartCols, queryId,
-          batchId)
-        catch { case _: CreateRace =>
-          sinkAppend(spark, rows, dir, queryId, batchId,
-            bootstrapPartCols)
-        }
-      case Some(s0) if txnDone(s0, queryId, batchId) =>
-        txnSkip(dir, queryId, batchId); s0
-      case Some(s0) =>
-        checkSchemaCompatible(s0, rows, dir)
-        val partCols = partColsOf(s0)
-        val missingP = partCols.filterNot(rows.columns.contains)
-        require(missingP.isEmpty,
-          s"sink append into $dir must carry partition column(s): " +
-            missingP.mkString(", "))
-        val rels = stageWrite(spark, dir, rows, partCols, s0.physNames)
-        if (rels.isEmpty) s0 // empty batch: nothing to make exactly-once
-        else commitRebase(spark, dir,
-          StagedUpsert(s0, Set.empty, Set.empty, rels, None,
-            Some(rows.schema.json),
-            Map(txnKey(queryId) -> batchId.toString),
-            txn = Some((queryId, batchId))),
-          "append", maxRetries = 10)
+    sinkWrite(spark, rows, dir, bootstrapPartCols, queryId, batchId) { s0 =>
+      checkSchemaCompatible(s0, rows, dir)
+      val partCols = partColsOf(s0)
+      val missingP = partCols.filterNot(rows.columns.contains)
+      require(missingP.isEmpty,
+        s"sink append into $dir must carry partition column(s): " +
+          missingP.mkString(", "))
+      val rels = stageWrite(spark, dir, rows, partCols, s0.physNames)
+      if (rels.isEmpty) s0 // empty batch: nothing to make exactly-once
+      else LakeCommit.rebase(spark, dir,
+        StagedUpsert(s0, Set.empty, Set.empty, rels, None,
+          Some(rows.schema.json),
+          Map(txnKey(queryId) -> batchId.toString),
+          txn = Some((queryId, batchId))),
+        "append")
     }
 
   /** The native streaming sink's keyed UPSERT verb
@@ -1894,68 +1606,41 @@ object CommitLog {
     * from the first non-empty batch. */
   def sinkUpsert(spark: SparkSession, updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String,
-      seqCol: Option[String], queryId: String, batchId: Long): Snapshot =
-    latest(spark, dir) match {
-      case None =>
-        require(keyCols.nonEmpty, "upsert needs at least one key column")
-        try sinkBootstrap(spark, updates, dir, Seq(partitionCol),
-          queryId, batchId)
-        catch { case _: CreateRace =>
-          sinkUpsert(spark, updates, dir, keyCols, partitionCol, seqCol,
-            queryId, batchId)
-        }
-      case Some(s0) if txnDone(s0, queryId, batchId) =>
-        txnSkip(dir, queryId, batchId); s0
-      case Some(_) =>
-        stageUpsert(spark, updates, dir, keyCols, partitionCol, seqCol,
-          batchId = None) match {
-          case Some(st) => commitRebase(spark, dir, st.copy(
-            propsDelta =
-              st.propsDelta + (txnKey(queryId) -> batchId.toString),
-            txn = Some((queryId, batchId))), "upsert", maxRetries = 10)
-          case None => mustLatest(spark, dir)
-        }
+      seqCol: Option[String], queryId: String, batchId: Long): Snapshot = {
+    require(keyCols.nonEmpty, "upsert needs at least one key column")
+    sinkWrite(spark, updates, dir, Seq(partitionCol), queryId, batchId) { _ =>
+      stageUpsert(spark, updates, dir, keyCols, partitionCol, seqCol,
+        batchId = None) match {
+        case Some(st) => LakeCommit.rebase(spark, dir, st.copy(
+          propsDelta = st.propsDelta + (txnKey(queryId) -> batchId.toString),
+          txn = Some((queryId, batchId))), "upsert")
+        case None => mustLatest(spark, dir)
+      }
     }
+  }
 
   /** The native streaming sink's REPLACE verb (`OutputMode.Complete`:
     * each micro-batch carries the full result, e.g. a streaming
     * aggregate): an atomic whole-snapshot overwrite per batch, guarded
-    * by the per-query txn ledger. History stays time-travelable; old
-    * snapshots wait for vacuum. */
+    * by the per-query txn ledger. A lost race RE-DERIVES: the
+    * replacement is restaged against the new latest. History stays
+    * time-travelable; old snapshots wait for vacuum. */
   def sinkOverwrite(spark: SparkSession, replacement: DataFrame,
       dir: String, partitionCols: Seq[String], queryId: String,
-      batchId: Long): Snapshot = {
-    var attempt = 0
-    while (true) {
-      latest(spark, dir) match {
-        case None =>
-          try return sinkBootstrap(spark, replacement, dir,
-            partitionCols, queryId, batchId)
-          catch { case _: CreateRace =>
-            // loop: the winner's table exists now — overwrite it
-          }
-        case Some(s) if txnDone(s, queryId, batchId) =>
-          txnSkip(dir, queryId, batchId); return s
-        case Some(s) =>
-          val pc = {
-            val committed = partColsOf(s)
-            if (committed.nonEmpty) committed else partitionCols
-          }
-          val rels = stageWrite(spark, dir, replacement, pc, s.physNames)
-          try return commit(spark, dir, s, rels, rels, s.batches,
-            "overwrite", Some(replacement.schema.json),
-            Map(txnKey(queryId) -> batchId.toString), dvsNew = Some(Nil))
-          catch { case e: CommitConflict =>
-            attempt += 1
-            if (attempt >= 10) throw new IllegalStateException(
-              s"sink overwrite on $dir lost the commit race 10 times " +
-                s"(${e.getMessage})")
-            Thread.sleep(20L * attempt) // re-derive from the new latest
-          }
+      batchId: Long): Snapshot =
+    sinkWrite(spark, replacement, dir, partitionCols, queryId, batchId) { s0 =>
+      LakeCommit.run(spark, dir, "sink overwrite", Rederive, from = Some(s0),
+        txn = Some((queryId, batchId))) { s =>
+        val pc = {
+          val committed = partColsOf(s)
+          if (committed.nonEmpty) committed else partitionCols
+        }
+        val rels = stageWrite(spark, dir, replacement, pc, s.physNames)
+        Some(LakeCommit.build(spark, dir, s, rels, rels, s.batches,
+          "overwrite", Some(replacement.schema.json),
+          Map(txnKey(queryId) -> batchId.toString), dvsNew = Some(Nil)))
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** General conditional MERGE — the full three-clause verb on top of
     * the same copy-on-write machinery as [[upsert]]/[[delete]], in ONE
@@ -2062,19 +1747,12 @@ object CommitLog {
         * that silently widens the table is the worst failure mode. */
       evolveSchema: Boolean = false,
       /** Per-QUERY sink transaction identity — the streaming sink's
-        * replay guard ([[txnDone]]); rides the commit as a props
+        * replay guard ([[LakeCommit.txnDone]]); rides the commit as a props
         * entry, checked here and on every rebase attempt. */
       txn: Option[(String, Long)] = None): Snapshot = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val s = mustLatest(spark, dir)
-    if (batchId.exists(inLedger(s, _))) {
-      System.err.println(
-        s"[commitlog] batch ${batchId.get} already committed to $dir — replay skipped")
-      return s
-    }
-    txn.foreach { case (q, b) =>
-      if (txnDone(s, q, b)) { txnSkip(dir, q, b); return s }
-    }
+    if (replayed(s, dir, batchId, txn)) return s
     val evolve = evolveSchema || spark.conf
       .getOption("spark.graft.merge.schemaEvolution").exists(_.toBoolean)
     // a whole-row clause needs the full target schema in the source (and
@@ -2249,7 +1927,7 @@ object CommitLog {
       if (notMatchedBySourceDeleteWhen.isDefined)
         s.files.map(partOf).toSet ++ partDirs ++ newRels.map(partOf)
       else partDirs ++ newRels.map(partOf)
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, touchedParts, touched.toSet,
         newRels, batchId,
         // schema evolution through whole-row clauses (source image) or,
@@ -2273,7 +1951,7 @@ object CommitLog {
           txnKey(q) -> b.toString
         }.toMap,
         txn = txn),
-      "merge", maxRetries = 10)
+      "merge")
   }
 
   /** The native streaming sink's CDC-APPLY verb (`OutputMode.Update` +
@@ -2303,23 +1981,13 @@ object CommitLog {
       .filter(col("_change_type") =!= "update_preimage")
       .withColumn("__cdc_delete", col("_change_type") === "delete")
       .drop("_change_type")
-    latest(spark, dir) match {
-      case None =>
-        try sinkBootstrap(spark,
-          src.filter(!col("__cdc_delete")).drop("__cdc_delete"),
-          dir, Seq(partitionCol), queryId, batchId)
-        catch { case _: CreateRace =>
-          sinkApplyCdc(spark, changes, dir, keyCols, partitionCol,
-            queryId, batchId)
-        }
-      case Some(s0) if txnDone(s0, queryId, batchId) =>
-        txnSkip(dir, queryId, batchId); s0
-      case Some(_) =>
-        mergeClauses(spark, dir, src, keyCols, partitionCol,
-          matched = Seq(MergeMatched("s.__cdc_delete", delete = true),
-            MergeMatched("true")),
-          notMatched = Seq(MergeNotMatched("NOT s.__cdc_delete")),
-          txn = Some((queryId, batchId)))
+    sinkWrite(spark, src.filter(!col("__cdc_delete")).drop("__cdc_delete"),
+      dir, Seq(partitionCol), queryId, batchId) { _ =>
+      mergeClauses(spark, dir, src, keyCols, partitionCol,
+        matched = Seq(MergeMatched("s.__cdc_delete", delete = true),
+          MergeMatched("true")),
+        notMatched = Seq(MergeNotMatched("NOT s.__cdc_delete")),
+        txn = Some((queryId, batchId)))
     }
   }
 
@@ -2340,21 +2008,14 @@ object CommitLog {
       else df.repartition(targetPartitions, partCols.map(col): _*)
     val newRels = stageWrite(spark, dir, repartitioned, partCols,
       s.physNames)
-    try commit(spark, dir, s, newRels, newRels, s.batches, "compact",
-      dvsNew = Some(Nil))
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"compact on $dir lost the commit race (${e.getMessage}) — a " +
-          "concurrent commit made the rewrite stale; re-run compact " +
-          "(abandoned files are vacuum garbage)")
-    }
+    rewriteAll(spark, dir, s, newRels, "compact")
   }
 
   /** [[compact]] that also CLUSTERS the rewrite: rows are
     * range-partitioned on `clusterCols` (after any hive partition
     * columns, so each hive partition's rows stay contiguous) and sorted
     * within files, so every rewritten file covers a NARROW
-    * `[min, max]` interval of the cluster key — and because [[commit]]
+    * `[min, max]` interval of the cluster key — and because the commit
     * recomputes per-file stats for the new files atomically with the
     * file list, [[scanRange]]/[[scanBox]]/[[quantiles]] pruning engages
     * the moment the compaction lands.
@@ -2383,14 +2044,7 @@ object CommitLog {
       .repartitionByRange(targetPartitions, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
     val newRels = stageWrite(spark, dir, clustered, partCols, s.physNames)
-    try commit(spark, dir, s, newRels, newRels, s.batches, "compact",
-      dvsNew = Some(Nil))
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"compactClustered on $dir lost the commit race (${e.getMessage})" +
-          " — a concurrent commit made the rewrite stale; re-run " +
-          "(abandoned files are vacuum garbage)")
-    }
+    rewriteAll(spark, dir, s, newRels, "compact")
   }
 
   /** PARTITION-SCOPED copy-on-write compaction (`OPTIMIZE ... WHERE`):
@@ -2544,10 +2198,10 @@ object CommitLog {
         } // else: untouched vector, carried as-is
       }
     }
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, selected, removedSet, newRels, None,
         dvAppend = dvAppend, dvDrop = dvDrop),
-      "compact", maxRetries = 10)
+      "compact")
   }
 
   /** [[compactClustered]] with a Z-ORDER (Morton) layout: rows sort on
@@ -2582,14 +2236,7 @@ object CommitLog {
       .sortWithinPartitions(rangeCols: _*)
       .drop(zc)
     val newRels = stageWrite(spark, dir, clustered, partCols, s.physNames)
-    try commit(spark, dir, s, newRels, newRels, s.batches, "compact",
-      dvsNew = Some(Nil))
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"compactZordered on $dir lost the commit race (${e.getMessage})" +
-          " — a concurrent commit made the rewrite stale; re-run " +
-          "(abandoned files are vacuum garbage)")
-    }
+    rewriteAll(spark, dir, s, newRels, "compact")
   }
 
   /** Copy-on-write SNAPSHOT REPLACE: after the commit the table holds
@@ -2604,32 +2251,30 @@ object CommitLog {
       batchId: Option[Long] = None,
       expectedVersion: Option[Long] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    if (batchId.exists(inLedger(s, _))) {
-      System.err.println(
-        s"[commitlog] batch ${batchId.get} already committed to $dir — replay skipped")
-      return s
-    }
+    if (replayed(s, dir, batchId)) return s
     // same optimistic pin as replaceWhere's: a replacement DERIVED from
     // a snapshot (a view's fold of deltas onto its own prior state) must
     // abort when another writer moved the table in between — committing
     // it would double-apply the overlap
-    expectedVersion.filter(_ != s.version).foreach { e =>
-      throw new CommitConflict(
-        s"overwrite on $dir expected version $e but latest is " +
-          s"${s.version} — re-derive from the current snapshot and re-run")
-    }
+    expectedVersion.foreach(
+      LakeCommit.requireVersion("overwrite", dir, _, s.version))
     val newRels = stageWrite(spark, dir, replacement, partitionCols,
       s.physNames)
-    try commit(spark, dir, s, newRels, newRels,
-      s.batches ++ batchId.toSeq, "overwrite", Some(replacement.schema.json),
-      dvsNew = Some(Nil))
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"overwrite on $dir lost the commit race (${e.getMessage}) — " +
-          "re-derive from the fresh snapshot and re-run (staged files " +
-          "are vacuum garbage)")
-    }
+    rewriteAll(spark, dir, s, newRels, "overwrite", batchId,
+      Some(replacement.schema.json))
   }
+
+  /** Commit a WHOLE-TABLE rewrite of snapshot `s` (compaction,
+    * overwrite): `newRels` replace every file and clear the deletion
+    * vectors. It never rebases — the rewrite read `s`, so losing the
+    * race to any commit aborts ([[LakeCommit.Abort]]). */
+  private def rewriteAll(spark: SparkSession, dir: String, s: Snapshot,
+      newRels: Seq[String], op: String, batchId: Option[Long] = None,
+      schemaJson: Option[String] = None): Snapshot =
+    LakeCommit.run(spark, dir, op, Abort, from = Some(s)) { s =>
+      Some(LakeCommit.build(spark, dir, s, newRels, newRels,
+        s.batches ++ batchId, op, schemaJson, dvsNew = Some(Nil)))
+    }
 
   /** The table's commit history as a DataFrame — one row per readable
     * version (op, file/batch counts, files added/removed vs the
@@ -2735,12 +2380,9 @@ object CommitLog {
       s"cannot restore $dir to version $v — vacuum reclaimed its " +
         s"deletion vector(s) ${missingDv.mkString(", ")}")
     val readded = old.files.filterNot(cur.files.toSet)
-    try commit(spark, dir, cur, old.files, readded, cur.batches, "restore",
-      old.schemaJson, dvsNew = Some(old.dvs))
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"restore on $dir lost the commit race (${e.getMessage}) — " +
-          "re-examine the new latest state and re-run")
+    LakeCommit.run(spark, dir, "restore", Abort, from = Some(cur)) { s =>
+      Some(LakeCommit.build(spark, dir, s, old.files, readded, s.batches,
+        "restore", old.schemaJson, dvsNew = Some(old.dvs)))
     }
   }
 
@@ -2758,14 +2400,10 @@ object CommitLog {
       dir: String, partitionCols: Seq[String] = Nil): Snapshot = {
     val s = mustLatest(spark, dir)
     val newRels = stageWrite(spark, dir, replacement, partitionCols)
-    try commit(spark, dir, s, newRels, newRels, s.batches, "overwrite",
-      Some(replacement.schema.json), dvsNew = Some(Nil),
-      schemaReplace = true)
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"replaceTable on $dir lost the commit race (${e.getMessage}) " +
-          "— a concurrent commit made the replacement stale; re-run " +
-          "(abandoned files are vacuum garbage)")
+    LakeCommit.run(spark, dir, "replaceTable", Abort, from = Some(s)) { s =>
+      Some(LakeCommit.build(spark, dir, s, newRels, newRels, s.batches,
+        "overwrite", Some(replacement.schema.json), dvsNew = Some(Nil),
+        schemaReplace = true))
     }
   }
 
@@ -3000,9 +2638,7 @@ object CommitLog {
       name: String): Snapshot = {
     val d = dataDir(dir)
     val f = hadoopFs(spark, d)
-    val head = latest(spark, branchTarget(d, name)).getOrElse(
-      throw new IllegalArgumentException(
-        s"branch '$name' of $d does not exist"))
+    val head = branchHead(spark, d, name)
     val fork = head.props.get("graft.branch.fork").map(_.toLong)
       .getOrElse(throw new IllegalStateException(
         s"branch '$name' of $d carries no fork marker — not a " +
@@ -3059,7 +2695,7 @@ object CommitLog {
     * retry loop).
     *
     * Conflict semantics are the SAME commit-level units concurrent
-    * same-branch writers already use ([[commitRebase]]): the branch's
+    * same-branch writers already use ([[LakeCommit.rebase]]): the branch's
     * conflict unit is every partition it REWROTE (removed a file from,
     * or tombstoned rows in via a deletion vector — pure appends touch
     * nothing, exactly SQL INSERT's contract); main's intervening churn
@@ -3103,9 +2739,7 @@ object CommitLog {
     val d = dataDir(dir)
     val f = hadoopFs(spark, d)
     val target = branchTarget(d, name)
-    val head = latest(spark, target).getOrElse(
-      throw new IllegalArgumentException(
-        s"branch '$name' of $d does not exist"))
+    val head = branchHead(spark, d, name)
     val headFence = head.props.get(FenceProp)
     fence match {
       case None => assertUnfenced(head, target)
@@ -3401,82 +3035,71 @@ object CommitLog {
     // that path stays loud. No new branch work can be waiting (the
     // fence blocked every write), so returning the adoption is exactly
     // what the dead merge would have returned.
-    latest(spark, target).filter(_.props.contains(FenceProp))
-      .foreach { head =>
-        adoptionOf(spark, d, head).foreach { adopted =>
-          val sync = adopted.copy(
-            version = head.version + 1,
-            op = "rebase",
-            props = adopted.props +
-              ("graft.branch.name" -> name,
-                "graft.branch.fork" -> adopted.version.toString),
-            committedAt = System.currentTimeMillis())
-          val healed =
-            try { casWrite(f, versionFile(target, sync.version),
-              render(sync)); true }
-            catch { case _: CommitConflict => false }
-          if (healed) {
-            System.err.println(
-              s"[commitlog] mergeBranch '$name' into $d: recovered a " +
-                s"merge that died after adopting into main as " +
-                s"v${adopted.version} — sync commit completed, branch " +
-                "usable, no re-fork needed")
-            return adopted
-          }
-          // CAS lost: if a rival healer landed the identical sync, the
-          // merge IS complete — converge. Anything else falls through
-          // to the normal path, where the fence stays loud.
-          if (latest(spark, target).exists(h =>
-              !h.props.contains(FenceProp) &&
-              h.props.get("graft.branch.fork")
-                .contains(adopted.version.toString) &&
-              h.files.toSet == adopted.files.toSet))
-            return adopted
+    // the branch head that completes a merge of `adopted`: unfenced,
+    // fork marker at the adoption, the adoption's exact files
+    def syncs(adopted: Snapshot)(h: Snapshot): Boolean =
+      !h.props.contains(FenceProp) &&
+        h.props.get("graft.branch.fork").contains(adopted.version.toString) &&
+        h.files.toSet == adopted.files.toSet
+    def syncOf(adopted: Snapshot, v: Long): Snapshot = adopted.copy(
+      version = v,
+      op = "rebase",
+      props = adopted.props +
+        ("graft.branch.name" -> name,
+          "graft.branch.fork" -> adopted.version.toString),
+      committedAt = System.currentTimeMillis())
+    val healed = latest(spark, target).filter(_.props.contains(FenceProp))
+      .flatMap(head => adoptionOf(spark, d, head).filter { adopted =>
+        // direct CAS: a lost heal is not retried — if a rival healer
+        // landed the identical sync the merge IS complete (converge);
+        // anything else falls through to the normal path, where the
+        // fence stays loud
+        val sync = syncOf(adopted, head.version + 1)
+        try {
+          casWrite(f, versionFile(target, sync.version), render(sync))
+          logInfo(s"mergeBranch '$name' into $d: recovered a merge that " +
+            s"died after adopting into main as v${adopted.version} — sync " +
+            "commit completed, branch usable, no re-fork needed")
+          true
+        } catch { case _: CommitConflict =>
+          latest(spark, target).exists(syncs(adopted))
         }
-      }
+      })
+    if (healed.isDefined) return healed.get
     val epoch =
       java.util.UUID.randomUUID.toString.take(8) +
         "@" + System.currentTimeMillis
-    fenceBranch(spark, d, name, epoch, math.max(maxRetries, 16))
+    fenceBranch(spark, d, name, epoch)
     var adoptedOpt: Option[Snapshot] = None
     try {
-      var attempt = 0
-      while (true) {
-        try {
-          val rebased = rebaseBranch(spark, d, name, Some(epoch))
-          val adopted = fastForward(spark, d, name)
-          adoptedOpt = Some(adopted)
-          // cross-process fault-injection point: the storm's
-          // fence-violation leg holds the merge here — adopted into
-          // main, sync not yet committed — so a foreign process can
-          // demonstrably land a stale-code write through the fence
-          // and this merge's sync CAS must fail LOUDLY below.
-          // Production runs never set the variable.
-          sys.env.get("GRAFT_MERGE_SYNC_HOLD_MS")
-            .foreach(ms => Thread.sleep(ms.toLong))
-          val sync = adopted.copy(
-            version = rebased.version + 1,
-            op = "rebase",
-            props = adopted.props +
-              ("graft.branch.name" -> name,
-                "graft.branch.fork" -> adopted.version.toString),
-            committedAt = System.currentTimeMillis())
-          // under the fence this CAS has no legal competitor; a loss
-          // means the fence was violated (stale-code writer) or
-          // cleared (concurrent unfenceBranch) — surface it loudly,
-          // the branch must be re-forked, main's adoption stands.
-          // ONE benign exception: a concurrent mergeBranch judged THIS
-          // merge dead (post-adoption fence + adoption visible) and
-          // self-healed with the content-identical sync — converge.
-          try casWrite(f, versionFile(target, sync.version), render(sync))
-          catch { case e: CommitConflict =>
-            val winner = latest(spark, target)
-            if (winner.exists(h => h.version == sync.version &&
-                !h.props.contains(FenceProp) &&
-                h.props.get("graft.branch.fork")
-                  .contains(adopted.version.toString) &&
-                h.files.toSet == adopted.files.toSet))
-              return adopted
+      // retry-able: main advanced between the rebase and the adopt
+      // (typed DivergedException from fastForward's precondition or
+      // its CAS), or the rebase commit raced. Real conflicts surface
+      // as the rebase's own loud IllegalStateException, not these.
+      LakeCommit.retrying(s"mergeBranch '$name' into $d", maxRetries) {
+        val rebased = rebaseBranch(spark, d, name, Some(epoch))
+        val adopted = fastForward(spark, d, name)
+        adoptedOpt = Some(adopted)
+        // cross-process fault-injection point: the storm's
+        // fence-violation leg holds the merge here — adopted into
+        // main, sync not yet committed — so a foreign process can
+        // demonstrably land a stale-code write through the fence
+        // and this merge's sync CAS must fail LOUDLY below.
+        // Production runs never set the variable.
+        sys.env.get("GRAFT_MERGE_SYNC_HOLD_MS")
+          .foreach(ms => Thread.sleep(ms.toLong))
+        val sync = syncOf(adopted, rebased.version + 1)
+        // direct CAS: under the fence this CAS has no legal competitor;
+        // a loss means the fence was violated (stale-code writer) or
+        // cleared (concurrent unfenceBranch) — surface it loudly, the
+        // branch must be re-forked, main's adoption stands. ONE benign
+        // exception: a concurrent mergeBranch judged THIS merge dead
+        // (post-adoption fence + adoption visible) and self-healed
+        // with the content-identical sync — converge.
+        try casWrite(f, versionFile(target, sync.version), render(sync))
+        catch { case e: CommitConflict =>
+          if (!latest(spark, target).exists(h =>
+              h.version == sync.version && syncs(adopted)(h)))
             throw new IllegalStateException(
               s"mergeBranch '$name' into $d: ADOPTED into main as " +
                 s"v${adopted.version}, but the fenced sync commit lost " +
@@ -3484,20 +3107,9 @@ object CommitLog {
                 "the branch through the fence; the branch's fork " +
                 "marker is stale and unsafe: dropBranch and re-fork " +
                 "before further branch work. Main is correct.")
-          }
-          return adopted
-        } catch {
-          // retry-able: main advanced between the rebase and the adopt
-          // (typed DivergedException from fastForward's precondition or
-          // its CAS), or the rebase commit raced. Real conflicts surface
-          // as the rebase's own loud IllegalStateException, not these.
-          case e @ (_: CommitConflict | _: DivergedException)
-            if attempt < maxRetries - 1 =>
-            attempt += 1
-            Thread.sleep(20L * attempt)
         }
+        adopted
       }
-      throw new IllegalStateException("unreachable")
     } catch { case e: Throwable =>
       // pre-adoption failure: release the fence so the branch stays
       // writable (the loud conflict IS the outcome; locking the branch
@@ -3547,33 +3159,22 @@ object CommitLog {
     * delta); retry on top of them. A head already fenced by ANOTHER
     * epoch fails loudly — one merge at a time. */
   private[graft] def fenceBranch(spark: SparkSession, dir: String,
-      name: String, epoch: String, maxAttempts: Int = 16): Snapshot = {
+      name: String, epoch: String): Snapshot = {
     val d = dataDir(dir)
-    val target = branchTarget(d, name)
-    val f = hadoopFs(spark, d)
-    var attempt = 0
-    while (true) {
-      val head = latest(spark, target).getOrElse(
-        throw new IllegalArgumentException(
-          s"branch '$name' of $d does not exist"))
-      assertUnfenced(head, target) // another merge in flight → loud
-      val stamp = head.copy(version = head.version + 1, op = "fence",
-        props = head.props + (FenceProp -> epoch),
-        committedAt = System.currentTimeMillis())
-      try { casWrite(f, versionFile(target, stamp.version), render(stamp))
-        return stamp }
-      catch { case e: CommitConflict =>
-        attempt += 1
-        if (attempt >= maxAttempts)
-          throw new IllegalStateException(
-            s"mergeBranch '$name' into $d: could not fence the branch " +
-              s"after $attempt attempts — branch writers are " +
-              s"out-committing the merge (${e.getMessage})")
-        Thread.sleep(20L * attempt)
-      }
+    // another merge in flight → loud (the protocol's fence check)
+    LakeCommit.run(spark, branchTarget(d, name), "fence", Rederive,
+      from = Some(branchHead(spark, d, name)), maxAttempts = 16) { head =>
+      Some(bump(head, "fence").copy(props = head.props + (FenceProp -> epoch)))
     }
-    throw new IllegalStateException("unreachable")
   }
+
+  /** The head of branch `name` of data dir `d`; fails loudly on an
+    * unknown branch. */
+  private def branchHead(spark: SparkSession, d: String,
+      name: String): Snapshot =
+    latest(spark, branchTarget(d, name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"branch '$name' of $d does not exist"))
 
   /** Clear a crashed merge's [[FenceProp]] from branch `name`'s head —
     * the documented recovery when a [[mergeBranch]] died between its
@@ -3594,30 +3195,16 @@ object CommitLog {
   private def unfenceLoop(spark: SparkSession, dir: String,
       name: String, onlyEpoch: Option[String]): Snapshot = {
     val d = dataDir(dir)
-    val target = branchTarget(d, name)
-    val f = hadoopFs(spark, d)
-    var attempt = 0
-    while (true) {
-      val head = latest(spark, target).getOrElse(
-        throw new IllegalArgumentException(
-          s"branch '$name' of $d does not exist"))
-      if (!head.props.contains(FenceProp)) return head
-      if (onlyEpoch.exists(e => !head.props.get(FenceProp).contains(e)))
-        return head // the fence is no longer ours — leave it alone
-      val clear = head.copy(version = head.version + 1, op = "unfence",
-        props = head.props - FenceProp,
-        committedAt = System.currentTimeMillis())
-      try { casWrite(f, versionFile(target, clear.version), render(clear))
-        return clear }
-      catch { case e: CommitConflict =>
-        attempt += 1
-        if (attempt >= 8) throw new IllegalStateException(
-          s"unfenceBranch '$name' of $d lost the commit race $attempt " +
-            s"times (${e.getMessage})")
-        Thread.sleep(20L * attempt)
+    LakeCommit.run(spark, branchTarget(d, name), "unfenceBranch", Rederive,
+      from = Some(branchHead(spark, d, name)), fenced = false) { head =>
+      head.props.get(FenceProp) match {
+        case None => None
+        // the fence is no longer ours — leave it alone
+        case Some(e) if onlyEpoch.exists(_ != e) => None
+        case _ =>
+          Some(bump(head, "unfence").copy(props = head.props - FenceProp))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** STORM-RITUAL ONLY ([[graft.MultiProcStorm]]'s violator role): a
@@ -3628,16 +3215,16 @@ object CommitLog {
     * loudly with the re-fork guidance, which the storm's
     * fence-violation leg asserts end-to-end across real process
     * boundaries. Never call from production paths — every real verb
-    * goes through [[commit]] or a guarded direct-CAS. */
+    * goes through [[LakeCommit.run]] or a named direct-CAS site. */
   private[graft] def commitStaleBypassingFence(spark: SparkSession,
       dir: String, key: String, value: String): Snapshot = {
-    val f = hadoopFs(spark, dir)
     val head = latest(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"$dir has no commit log"))
-    val stale = head.copy(version = head.version + 1, op = "stale-write",
-      props = head.props + (key -> value),
-      committedAt = System.currentTimeMillis())
-    casWrite(f, versionFile(dir, stale.version), render(stale))
+    val stale = bump(head, "stale-write").copy(
+      props = head.props + (key -> value))
+    // direct CAS: this writer must skip the protocol's fence check
+    casWrite(hadoopFs(spark, dir), versionFile(dir, stale.version),
+      render(stale))
     stale
   }
 
@@ -3753,16 +3340,12 @@ object CommitLog {
     * exactly-once cursor past a base range that contained no data
     * commits (pure compactions). Replay of an already-recorded id is a
     * no-op. */
-  def noteBatch(spark: SparkSession, dir: String, batchId: Long): Snapshot = {
-    val s = mustLatest(spark, dir)
-    if (inLedger(s, batchId)) return s
-    try commit(spark, dir, s, s.files, Nil, s.batches :+ batchId, "note")
-    catch { case e: CommitConflict =>
-      throw new IllegalStateException(
-        s"noteBatch on $dir lost the commit race (${e.getMessage}) — " +
-          "re-read and retry")
+  def noteBatch(spark: SparkSession, dir: String, batchId: Long): Snapshot =
+    LakeCommit.run(spark, dir, "noteBatch", Abort,
+      batchId = Some(batchId)) { s =>
+      Some(LakeCommit.build(spark, dir, s, s.files, Nil,
+        s.batches :+ batchId, "note"))
     }
-  }
 
   /** Copy-on-write DELETE of every row matching `cond`, at FILE
     * granularity — the missing verb between upsert (keyed replace) and
@@ -3795,8 +3378,7 @@ object CommitLog {
         * ledger, never from the predicate happening to miss. */
       txn: Option[(String, Long)] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    txn.foreach { case (q, b) =>
-      if (txnDone(s, q, b)) { txnSkip(dir, q, b); return s } }
+    if (replayed(s, dir, txn = txn)) return s
     val ledger = txn.map { case (q, b) => txnKey(q) -> b.toString }.toMap
     val hitFiles = filesOf(spark, dir, readSnapshot(spark, dir, s).filter(cond))
     if (hitFiles.isEmpty) {
@@ -3813,10 +3395,10 @@ object CommitLog {
     val survivors = readFiles(spark, dir, s, hitFiles.toSeq.sorted)
       .filter(!coalesce(cond, lit(false)))
     val newRels = stageWrite(spark, dir, survivors, partCols, s.physNames)
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, hitFiles.map(partOf), hitFiles, newRels, None,
         propsDelta = ledger, txn = txn),
-      "delete", maxRetries = 10)
+      "delete")
   }
 
   /** MERGE-ON-READ delete: rows matching `cond` are tombstoned in a
@@ -3877,10 +3459,10 @@ object CommitLog {
       f.delete(new Path(logFile(dir, rel)), true)
       return s
     }
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, hitFiles.map(partOf).toSet, Set.empty, Nil, None,
         dvAppend = Seq(rel)),
-      "delete-mor", maxRetries = 10)
+      "delete-mor")
   }
 
   /** Copy-on-write row replacement in ONE atomic commit: rows matching
@@ -3913,18 +3495,14 @@ object CommitLog {
         * with exactly-once replay. */
       txn: Option[(String, Long)] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    txn.foreach { case (q, b) =>
-      if (txnDone(s, q, b)) { txnSkip(dir, q, b); return s } }
+    if (replayed(s, dir, txn = txn)) return s
     // optimistic-concurrency guard: a caller whose propsDelta was DERIVED
     // from a snapshot (InvertedIndex.update folds absolute globals off
     // the version it read) pins that version here — a commit that landed
     // in between would otherwise raise no partition conflict (the delta
     // is against latest) yet silently publish the stale-derived props
-    expectedVersion.filter(_ != s.version).foreach { e =>
-      throw new CommitConflict(
-        s"replaceWhere on $dir expected version $e but latest is " +
-          s"${s.version} — re-derive from the current snapshot and re-run")
-    }
+    expectedVersion.foreach(
+      LakeCommit.requireVersion("replaceWhere", dir, _, s.version))
     checkSchemaCompatible(s, additions, dir)
     val candidates: Seq[String] = probe match {
       case Some((c, values)) =>
@@ -3957,12 +3535,11 @@ object CommitLog {
     val newRels = survivorRels ++ addedRels
     val touched = hitFiles.map(partOf) ++ newRels.map(partOf)
     val ledger = txn.map { case (q, b) => txnKey(q) -> b.toString }.toMap
-    commitRebase(spark, dir,
+    LakeCommit.rebase(spark, dir,
       StagedUpsert(s, touched, hitFiles, newRels, None,
         if (addedRels.isEmpty) None else Some(additions.schema.json),
         propsDelta ++ ledger, txn = txn),
-      "replace", maxRetries = 10,
-      pinnedBase = expectedVersion.isDefined)
+      "replace", pinnedBase = expectedVersion.isDefined)
   }
 
   /** Box scan `lo <= c <= hi` (every bound) over the LATEST snapshot:
@@ -4451,8 +4028,9 @@ object CommitLog {
     * nothing younger than `staleStagingMs` is ever deleted. That covers
     * every not-yet-committed artifact a live operation may hold:
     * `_staging/<tag>` dirs (mid-[[stageWrite]]), published-but-
-    * uncommitted data files and pre-CAS manifests ([[commit]] writes the
-    * manifest before the version-file CAS), and a dropped version's
+    * uncommitted data files and pre-CAS manifests
+    * ([[LakeCommit.build]] writes the manifest before the version-file
+    * CAS), and a dropped version's
     * files that a concurrent [[restore]] read moments ago and is about
     * to re-reference. On tables registered in a transaction FAMILY the
     * fence also covers young version files: an in-flight
@@ -4524,8 +4102,8 @@ object CommitLog {
     def safeParse(t: String)(v: Long): Option[Snapshot] =
       try Some(parse(readText(f, versionFile(t, v))))
       catch { case e: Exception =>
-        System.err.println(s"[commitlog] vacuum: unreadable version $v " +
-          s"in $t (${e.getMessage}) — treated as holding no references")
+        logWarning(s"vacuum: unreadable version $v in $t " +
+          s"(${e.getMessage}) — treated as holding no references")
         None
       }
     val dropSnaps = dropV.flatMap(safeParse(dir))

@@ -47,7 +47,7 @@ import graft.ops.Constraints
   * data), independent of table size. The audit reads the candidate
   * snapshot through the committed file list (one pass, row-local checks
   * fused into a single aggregate). */
-object LakeRefs {
+object LakeRefs extends org.apache.spark.internal.Logging {
 
   /** Refs bind MAIN-line versions; [[tag]] and [[publish]] reject
     * branch targets loudly (a ref on a branch head would dangle when
@@ -86,7 +86,8 @@ object LakeRefs {
     requireVersionExists(spark, dir, version)
     val f = fs(spark, dir)
     f.mkdirs(refsPath(dir, "tags"))
-    try CommitLog.casWrite(f, new Path(refsPath(dir, "tags"), name),
+    // direct CAS: a lost race means the tag exists — immutable, no retry
+    try LakeCommit.casWrite(f, new Path(refsPath(dir, "tags"), name),
       version.toString)
     catch { case e: CommitLog.CommitConflict =>
       throw new IllegalStateException(
@@ -141,9 +142,8 @@ object LakeRefs {
       val p = new Path(refsPath(dir, "published"), f"p$n%020d.json")
       try Some(readText(f, p).trim.toLong)
       catch { case _: Exception =>
-        System.err.println(
-          s"[lakerefs] unreadable publish pointer $p — degrading to the " +
-            "previous publish")
+        logWarning(s"unreadable publish pointer $p — degrading to the " +
+          "previous publish")
         None
       }
     }.collectFirst { case Some(v) => v }
@@ -154,7 +154,8 @@ object LakeRefs {
     * "published only moves forward" — use [[CommitLog.restore]] +
     * publish of the NEW restore commit to roll back). Concurrent
     * publishers race on the CAS of the next pointer file; the loser
-    * re-checks monotonicity against the winner and retries or aborts. */
+    * re-checks monotonicity against the winner and retries
+    * ([[LakeCommit.retrying]]) or aborts. */
   def publish(spark: SparkSession, dir: String, version: Long): Unit = {
     require(CommitLog.branchOf(dir).isEmpty,
       s"publish binds main-line versions — got branch target $dir; " +
@@ -162,26 +163,17 @@ object LakeRefs {
     requireVersionExists(spark, dir, version)
     val f = fs(spark, dir)
     f.mkdirs(refsPath(dir, "published"))
-    var attempt = 0
-    while (attempt < 10) {
+    LakeCommit.retrying(s"publish($version) on $dir") {
       publishedVersion(spark, dir).filter(_ >= version).foreach { cur =>
         throw new IllegalStateException(
           s"publish($version) on $dir but $cur is already published — " +
             "the pointer only moves forward")
       }
       val next = pubSeqs(f, dir).lastOption.getOrElse(0L) + 1L
-      try {
-        CommitLog.casWrite(f,
-          new Path(refsPath(dir, "published"), f"p$next%020d.json"),
-          version.toString)
-        return
-      } catch {
-        case _: CommitLog.CommitConflict => attempt += 1 // racer won; re-check
-      }
+      LakeCommit.casWrite(f,
+        new Path(refsPath(dir, "published"), f"p$next%020d.json"),
+        version.toString)
     }
-    throw new IllegalStateException(
-      s"publish($version) on $dir lost the pointer race 10 times — " +
-        "check for a publisher storm")
   }
 
   /** The table at the published pointer. A table never published serves
@@ -247,8 +239,9 @@ object LakeRefs {
     val p = familyRef(participantDir, txnDir)
     if (f.exists(p)) return
     f.mkdirs(p.getParent)
-    try CommitLog.casWrite(f, p, txnDir)
-    catch { case _: CommitLog.CommitConflict => () } // racer registered it
+    // direct CAS: a lost race means a twin registered the same family
+    try LakeCommit.casWrite(f, p, txnDir)
+    catch { case _: CommitLog.CommitConflict => () }
   }
 
   /** The family manifest dirs registered against `dir` (empty when the
@@ -275,9 +268,8 @@ object LakeRefs {
       .collect().map(_.getString(0)).toSeq // ≤ one row per check — small
     if (failing.isEmpty) { publish(spark, dir, version); (true, report) }
     else {
-      System.err.println(
-        s"[lakerefs] publish of $dir v$version BLOCKED by audit: " +
-          failing.mkString("; "))
+      logWarning(s"publish of $dir v$version BLOCKED by audit: " +
+        failing.mkString("; "))
       (false, report)
     }
   }

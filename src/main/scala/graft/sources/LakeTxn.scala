@@ -56,7 +56,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At 100 TB the manifest is metadata-plane: one tiny JSON per family
   * commit, independent of table size or count of files.
   */
-object LakeTxn {
+object LakeTxn extends org.apache.spark.internal.Logging {
 
   /** One committed family cut: manifest sequence number, per-table
     * version pins (keyed by normalized table dir), committed batch ids.
@@ -145,8 +145,8 @@ object LakeTxn {
     txnNumbers(f, txnDir).reverse.view.flatMap { t =>
       try Some(parse(readText(f, txnFile(txnDir, t))))
       catch { case e: Exception =>
-        System.err.println(
-          s"[laketxn] unreadable manifest $t in $txnDir (${e.getMessage}) " +
+        logWarning(
+          s"unreadable manifest $t in $txnDir (${e.getMessage}) " +
             "— falling back to the previous one")
         None
       }
@@ -239,11 +239,11 @@ object LakeTxn {
     * manifest number; on a lost race, re-reads and retries on top of the
     * winner (pins are per-table monotone, so merging is just
     * re-publishing ours over the winner's — a LOWER pin than the
-    * winner's aborts instead, it would un-publish state). With
-    * `batchId`, replay is a no-op via the manifest ledger. */
+    * winner's aborts instead, it would un-publish state). The retry and
+    * backoff are [[LakeCommit.retrying]]'s. With `batchId`, replay is a
+    * no-op via the manifest ledger. */
   def commit(spark: SparkSession, txnDir: String,
-      pins: Map[String, Long], batchId: Option[Long] = None,
-      maxRetries: Int = 10): State = {
+      pins: Map[String, Long], batchId: Option[Long] = None): State = {
     val f = fs(spark, txnDir)
     f.mkdirs(new Path(txnDir))
     val normPins = pins.map { case (d, v) =>
@@ -259,67 +259,57 @@ object LakeTxn {
     // crash in between leaves a ref resolving to no pins, which is
     // harmless residue, never a reclaimable pinned version
     pins.keys.foreach(d => LakeRefs.registerFamily(spark, d, txnDir))
-    var attempt = 0
-    while (true) {
+    LakeCommit.retrying(s"txn commit on $txnDir") {
       val cur = latest(spark, txnDir)
       if (batchId.exists(b => cur.exists(_.committed(b)))) {
-        System.err.println(
-          s"[laketxn] batch ${batchId.get} already committed to $txnDir — " +
-            "replay skipped")
-        return cur.get
-      }
-      batchId.filter(b => cur.exists(_.foldedAway(b))).foreach { b =>
-        throw new IllegalStateException(
-          s"txn commit on $txnDir: batch id $b is below the ledger " +
-            s"compaction floor ${cur.get.floor} — the fold erased the " +
-            "ability to tell a stale replay from a batch that never " +
-            "committed, and proceeding either way risks silent loss or " +
-            "double-apply. If this is a replay it committed long ago " +
-            "(drop it); if its data never landed, reconcile manually " +
-            "and re-issue above the watermark.")
-      }
-      val curPins = cur.map(_.pins).getOrElse(Map.empty)
-      normPins.foreach { case (d, v) =>
-        curPins.get(d).filter(_ > v).foreach { held =>
+        logInfo(s"batch ${batchId.get} already committed to $txnDir — " +
+          "replay skipped")
+        cur.get
+      } else {
+        batchId.filter(b => cur.exists(_.foldedAway(b))).foreach { b =>
           throw new IllegalStateException(
-            s"txn commit on $txnDir would move $d BACKWARD " +
-              s"(pinned $held, proposed $v) — pins are monotone; " +
-              "re-derive from the current family state")
+            s"txn commit on $txnDir: batch id $b is below the ledger " +
+              s"compaction floor ${cur.get.floor} — the fold erased the " +
+              "ability to tell a stale replay from a batch that never " +
+              "committed, and proceeding either way risks silent loss or " +
+              "double-apply. If this is a replay it committed long ago " +
+              "(drop it); if its data never landed, reconcile manually " +
+              "and re-issue above the watermark.")
         }
+        val curPins = cur.map(_.pins).getOrElse(Map.empty)
+        normPins.foreach { case (d, v) =>
+          curPins.get(d).filter(_ > v).foreach { held =>
+            throw new IllegalStateException(
+              s"txn commit on $txnDir would move $d BACKWARD " +
+                s"(pinned $held, proposed $v) — pins are monotone; " +
+                "re-derive from the current family state")
+          }
+        }
+        // ledger compaction, mirroring the per-table logs: once over
+        // LedgerKeep ids, the oldest fold into the floor — replay checks
+        // ([[State.committed]]) and the monotone watermark consult the
+        // floor, so correctness survives the fold
+        val allB = (cur.map(_.batches).getOrElse(Nil) ++ batchId)
+          .distinct.sorted
+        val prevFloor = cur.map(_.floor).getOrElse(-1L)
+        val (floorB, keptB) =
+          if (allB.size > CommitLog.LedgerKeep) {
+            val cut = allB.size - CommitLog.LedgerKeep
+            (math.max(allB(cut - 1), prevFloor), allB.drop(cut))
+          } else (prevFloor, allB)
+        val next = State(
+          cur.map(_.txn + 1).getOrElse(1L),
+          curPins ++ normPins,
+          keptB, floorB,
+          cur.map(_.dirs).getOrElse(Map.empty) ++ origDirs)
+        val p = txnFile(txnDir, next.txn)
+        // the SAME hardened CAS as the per-table commit point (O_EXCL on
+        // local filesystems — Hadoop's local create-no-overwrite is
+        // check-then-create and loses manifests under a tight race)
+        LakeCommit.casWrite(f, p, render(next))
+        next
       }
-      // ledger compaction, mirroring the per-table logs: once over
-      // LedgerKeep ids, the oldest fold into the floor — replay checks
-      // ([[State.committed]]) and the monotone watermark consult the
-      // floor, so correctness survives the fold
-      val allB = (cur.map(_.batches).getOrElse(Nil) ++ batchId)
-        .distinct.sorted
-      val prevFloor = cur.map(_.floor).getOrElse(-1L)
-      val (floorB, keptB) =
-        if (allB.size > CommitLog.LedgerKeep) {
-          val cut = allB.size - CommitLog.LedgerKeep
-          (math.max(allB(cut - 1), prevFloor), allB.drop(cut))
-        } else (prevFloor, allB)
-      val next = State(
-        cur.map(_.txn + 1).getOrElse(1L),
-        curPins ++ normPins,
-        keptB, floorB,
-        cur.map(_.dirs).getOrElse(Map.empty) ++ origDirs)
-      val p = txnFile(txnDir, next.txn)
-      // the SAME hardened CAS as the per-table commit point (O_EXCL on
-      // local filesystems — Hadoop's local create-no-overwrite is
-      // check-then-create and loses manifests under a tight race)
-      val created =
-        try { CommitLog.casWrite(f, p, render(next)); true }
-        catch { case _: CommitLog.CommitConflict => false }
-      if (created) return next
-      attempt += 1
-      if (attempt >= maxRetries) throw new IllegalStateException(
-        s"txn commit on $txnDir lost the manifest race $maxRetries times — " +
-          "if no live writer is active, a crashed run's manifest file is " +
-          "blocking the sequence")
-      Thread.sleep(20L * attempt)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** ATOMIC MULTI-TABLE WRITE — the dim+fact dual-append as ONE
@@ -416,9 +406,8 @@ object LakeTxn {
       "writeAll: one write per table — merge duplicate targets first")
     latest(spark, txnDir) match {
       case Some(cur) if cur.committed(batchId) =>
-        System.err.println(
-          s"[laketxn] writeAll batch $batchId already committed to " +
-            s"$txnDir — replay skipped")
+        logInfo(s"writeAll batch $batchId already committed to " +
+          s"$txnDir — replay skipped")
         return cur
       case Some(cur) if cur.foldedAway(batchId) =>
         // below the compaction floor, committed-or-lost is unprovable:
@@ -545,9 +534,8 @@ object LakeTxn {
       val pinsHere = txnNumbers(f, txnDir).flatMap { t =>
         (try Some(parse(readText(f, txnFile(txnDir, t))))
         catch { case e: Exception =>
-          System.err.println(
-            s"[laketxn] unreadable manifest $t in $txnDir " +
-              s"(${e.getMessage}) — it contributes no retention pins")
+          logWarning(s"unreadable manifest $t in $txnDir " +
+            s"(${e.getMessage}) — it contributes no retention pins")
           None
         }).flatMap(_.pins.get(key))
       }.distinct.sorted

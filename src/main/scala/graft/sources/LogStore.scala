@@ -8,7 +8,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * version publish: atomically create `p` with `text`, failing with
   * [[CommitLog.CommitConflict]] when `p` already exists — the
   * compare-and-swap every multi-writer guarantee in the engine rests
-  * on. Pluggable because the RIGHT primitive differs by storage tier:
+  * on. It is step 5 of the one commit protocol ([[LakeCommit.run]]:
+  * read, replay check, fence check, next snapshot, CAS), whose caller
+  * settles a lost CAS by one of three rules — abort, rebase over
+  * disjoint partitions, or re-derive from the new latest. Pluggable
+  * because the RIGHT primitive differs by storage tier:
   *
   *  - POSIX: `O_CREAT|O_EXCL` ([[AtomicCreateLogStore]]);
   *  - HDFS: namenode-atomic `create(p, overwrite = false)` (same);

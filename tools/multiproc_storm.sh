@@ -16,8 +16,15 @@ PER_WRITER="${2:-6}"
 CHURNERS=2
 PER_CHURNER=4
 
+# offline build defaults (the same as the Tier-1 test command); a
+# caller's own COURSIER_MODE / SBT_OPTS win
+export COURSIER_MODE="${COURSIER_MODE:-offline}"
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 echo "[storm] compiling…"
-sbt -batch compile > /dev/null 2>&1
+if ! BUILD_LOG="$(sbt -batch compile 2>&1)"; then
+  echo "$BUILD_LOG"
+  echo "[storm] FAILED: compile"; exit 1
+fi
 
 CP="target/scala-2.13/classes"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
