@@ -33,12 +33,13 @@ object StreamingQueries {
   /** The exactly-once keyed upsert flow, end to end: two versions of
     * every key staged across three parquet files, streamed one file per
     * trigger (so versions of one key genuinely cross micro-batch
-    * boundaries in arbitrary order), merged into the lake through
-    * [[StreamingIngest.upsertStream]] — foreachBatch + `_graft_commits`
-    * ledger + version-aware partition-pruned upsert. The returned
-    * summary proves convergence structurally: `min_seq` = `max_seq` = 2
-    * per partition means only the newest version of each key survived,
-    * whatever order the batches delivered.
+    * boundaries in arbitrary order), merged into the lake through the
+    * native sink — `writeStream.format("graft-lake")` in update mode:
+    * per-query ledger + version-aware partition-pruned copy-on-write
+    * upsert. The returned summary proves convergence structurally:
+    * `min_seq` = `max_seq` = 2 per partition means only the newest
+    * version of each key survived, whatever order the batches
+    * delivered.
     */
   private def q132Upsert(s: SparkSession, dir: String): DataFrame = {
     val work = Files.createTempDirectory("graft_q132_").toString
@@ -52,11 +53,15 @@ object StreamingQueries {
       .schema(v1.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$work/landing")
-    val q = StreamingIngest.upsertStream(
-      updates, s"$work/lake", keyCols = Seq("id"), partitionCol = "part",
-      seqCol = "seq", checkpointDir = s"$work/chk")
+    val q = updates.writeStream.format("graft-lake")
+      .outputMode("update")
+      .option("keyColumns", "id")
+      .option("partitionColumn", "part")
+      .option("sequenceColumn", "seq")
+      .option("checkpointLocation", s"$work/chk")
+      .start(s"$work/lake")
     try q.processAllAvailable() finally q.stop()
-    s.read.parquet(s"$work/lake")
+    graft.sources.CommitLog.read(s, s"$work/lake")
       .groupBy(col("part"))
       .agg(count(lit(1)).as("n_keys"),
         sum(col("payload_len")).as("payload_bytes"),
@@ -66,15 +71,14 @@ object StreamingQueries {
   }
 
   // ------------------------------------------- q145_stream_upsert_logged
-  /** q132's exactly-once upsert flow, re-based on the versioned commit
-    * log ([[StreamingIngest.upsertStreamLogged]]): the batch-id ledger
-    * and zone-map stats ride each atomic commit instead of living in
-    * sidecar marker files, so the crash window between "upsert applied"
-    * and "marker written" does not exist. Same structural convergence
-    * proof as q132 — min_seq = max_seq = 2 per partition — but the final
-    * state is read through [[graft.sources.CommitLog.read]] (a snapshot,
-    * not a directory glob) and the summary additionally proves the
-    * ledger: one committed version per delivered micro-batch. */
+  /** q132's exactly-once upsert flow through the `foreachBatch`
+    * pipeline ([[StreamingIngest.upsertStreamLogged]]), which lands each
+    * batch through the same sink body with zone-map stats from birth:
+    * the per-query ledger entry rides each atomic commit. Same
+    * structural convergence proof as q132 — min_seq = max_seq = 2 per
+    * partition — and the summary additionally proves the ledger: one
+    * committed log version per delivered micro-batch (`n_commits`
+    * counts the log's versions). */
   private def q145UpsertLogged(s: SparkSession, dir: String): DataFrame = {
     val work = Files.createTempDirectory("graft_q145_").toString
     val docs = Tables.documents(s, dir).filter(col("doc_id") < 200)
@@ -92,13 +96,14 @@ object StreamingQueries {
       seqCol = "seq", checkpointDir = s"$work/chk", statsCols = Seq("id"))
     try q.processAllAvailable() finally q.stop()
     val snap = graft.sources.CommitLog.latest(s, s"$work/lake").get
+    val nCommits = graft.sources.CommitLog.history(s, s"$work/lake").count()
     graft.sources.CommitLog.read(s, s"$work/lake")
       .groupBy(col("part"))
       .agg(count(lit(1)).as("n_keys"),
         sum(col("payload_len")).as("payload_bytes"),
         min(col("seq")).as("min_seq"),
         max(col("seq")).as("max_seq"))
-      .withColumn("n_commits", lit(snap.batches.size))
+      .withColumn("n_commits", lit(nCommits.toInt))
       .withColumn("log_version", lit(snap.version))
       .orderBy(col("part"))
   }

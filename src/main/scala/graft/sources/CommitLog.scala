@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned commit log for a parquet lake — ONE metadata mechanism
-  * replacing the three uncoordinated sidecars that grew around the lake
-  * (the streaming upsert's `_graft_commits` marker files, the zone-map
-  * `_graft_manifest`, and compaction's rename swap), so a reader always
+  * replacing the uncoordinated sidecars that grew around the lake (the
+  * zone-map `_graft_manifest` and compaction's rename swap), so a reader always
   * sees a complete pre- or post-commit snapshot and never a torn mix.
   * This is the lake-format answer to the reference's Postgres schema,
   * where the unique index + `equipment_files` ledger give writers
@@ -1322,14 +1321,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
     moved.toSeq.sorted
   }
 
-  /** Stage a keyed copy-on-write upsert against the CURRENT snapshot
-    * (same merge semantics as [[Sources.upsertPartitioned]], including
-    * version-aware `seqCol`). Reads ONLY the touched partitions' files —
-    * pruned via the `key=value` components of the snapshot's file list,
-    * no directory listing — and writes the merged slice as new files.
-    * Nothing is visible until [[commitStaged]]. Returns None when
-    * `batchId` is already in the ledger (an at-least-once replay — the
-    * whole upsert is a no-op). */
   /** Additive schema evolution guard: incoming rows may ADD columns (old
     * rows read them as null through the committed schema) but must carry
     * every existing column — a partial-column write would silently null
@@ -1378,6 +1369,52 @@ object CommitLog extends org.apache.spark.internal.Logging {
             "TABLE ADD COLUMNS, which assigns a fresh physical name"))
     }
 
+  /** Keyed merge of `updates` over `old` rows. Without `seqCol` the
+    * update wins unconditionally (anti-join shape). With `seqCol`, a
+    * per-key argmax on (seq, source): greatest seq wins; on a tie the
+    * update (source = 1) beats the lake row (source = 0). One shuffle
+    * over the inputs. Unmatched lake rows survive as singleton groups;
+    * several versions of one key inside `updates` collapse to the
+    * newest. Null seq sorts lowest, so it never beats a real one. */
+  private def mergeKeyed(old: DataFrame, updates: DataFrame,
+      keyCols: Seq[String], seqCol: Option[String]): DataFrame =
+    seqCol match {
+      case None =>
+        updates.unionByName(
+          old.join(updates.select(keyCols.map(col): _*), keyCols, "left_anti"))
+      case Some(sc) =>
+        val dataCols = updates.columns.filterNot(keyCols.contains).toSeq
+        val keys = keyCols.map(col)
+        val ver = struct(
+          col(sc) +: lit(0).as("__src") +: dataCols.filterNot(_ == sc).map(col): _*)
+        updates.withColumn("__v", ver).withColumn("__v",
+            col("__v").withField("__src", lit(1)))
+          .unionByName(old.withColumn("__v", ver))
+          .groupBy(keys: _*)
+          .agg(max(col("__v")).as("__v"))
+          .select(keys ++ dataCols.map(c => col(s"__v.$c").as(c)): _*)
+    }
+
+  /** What a keyed upsert lands where no committed row competes (the
+    * bootstrap, partitions the table does not hold yet): with `seqCol`,
+    * [[mergeKeyed]] against an empty slice, so a batch carrying several
+    * versions of one key lands only the newest, in the batch's column
+    * order; without one, the batch as it is. */
+  private def newestPerKey(updates: DataFrame, keyCols: Seq[String],
+      seqCol: Option[String]): DataFrame =
+    if (seqCol.isEmpty) updates
+    else mergeKeyed(updates.limit(0), updates, keyCols, seqCol)
+      .select(updates.columns.toSeq.map(col): _*)
+
+  /** Stage a keyed copy-on-write upsert against the CURRENT snapshot
+    * ([[mergeKeyed]] semantics, including version-aware `seqCol`: per
+    * key the newest row lands, also where the batch only opens new
+    * partitions). Reads ONLY the touched partitions' files — pruned via
+    * the `key=value` components of the snapshot's file list, no
+    * directory listing — and writes the merged slice as new files.
+    * Nothing is visible until [[commitStaged]]. Returns None when
+    * `batchId` is already in the ledger (an at-least-once replay — the
+    * whole upsert is a no-op). */
   def stageUpsert(spark: SparkSession, updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String,
       seqCol: Option[String] = None,
@@ -1392,7 +1429,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       s.files.partition(f => partDirs.exists(d => f.startsWith(d + "/")))
     checkSchemaCompatible(s, updates, dir)
     val merged =
-      if (touched.isEmpty) updates
+      if (touched.isEmpty) newestPerKey(updates, keyCols, seqCol)
       else {
         val old = readFiles(spark, dir, s, touched)
         // columns the updates add don't exist in the old slice yet
@@ -1400,7 +1437,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
           .foldLeft(old) { (df, c) =>
             df.withColumn(c, lit(null).cast(updates.schema(c).dataType))
           }
-        Sources.mergeKeyed(aligned, updates, keyCols, seqCol)
+        mergeKeyed(aligned, updates, keyCols, seqCol)
       }
     val newRels = stageWrite(spark, dir, merged, Seq(partitionCol),
       s.physNames)
@@ -1476,38 +1513,49 @@ object CommitLog extends org.apache.spark.internal.Logging {
       .map(commitStaged(spark, dir, _))
       .getOrElse(mustLatest(spark, dir))
 
-  /** [[upsert]] into a table that may not exist yet: the first non-empty
-    * batch BOOTSTRAPS the log (version 1 = the batch itself, with
-    * `statsCols` zone-map stats from birth); later batches upsert
-    * normally. The create is itself a CAS commit, so two racing creators
-    * resolve to one winner — the loser's staged files are vacuum
-    * garbage and its call fails loudly (re-invoke to upsert on top).
-    * This is the streaming sink's entry point: a crashed first batch
-    * left nothing visible and replays cleanly. */
+  /** [[upsert]] into a table that may not exist yet: the first call
+    * BOOTSTRAPS the log ([[bootstrap]] — version 1 = the newest row per
+    * key of `updates`, with `statsCols` zone-map stats from birth); later
+    * calls upsert normally. Two racing creators resolve to one winner —
+    * the loser's call fails loudly with [[CreateRace]] (re-invoke to
+    * upsert on top). Streams land through the sink verbs instead
+    * ([[sinkUpsert]]), whose per-query ledger makes a replay a no-op. */
   def upsertOrCreate(spark: SparkSession, updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String,
       seqCol: Option[String] = None,
-      batchId: Option[Long] = None,
-      statsCols: Seq[String] = Nil,
-      sketchCols: Seq[String] = Nil): Snapshot =
+      statsCols: Seq[String] = Nil): Snapshot =
     latest(spark, dir) match {
       case Some(_) =>
-        upsert(spark, updates, dir, keyCols, partitionCol, seqCol, batchId)
+        upsert(spark, updates, dir, keyCols, partitionCol, seqCol)
       case None =>
         require(keyCols.nonEmpty, "upsert needs at least one key column")
-        val f = hadoopFs(spark, dir)
-        f.mkdirs(logPath(dir))
-        val rels = stageWrite(spark, dir, updates, Seq(partitionCol))
-        if (rels.isEmpty)
-          throw new IllegalStateException(
-            s"cannot bootstrap $dir from an empty batch — skip empty batches " +
-              "until the first row arrives (a replayed empty batch is a no-op)")
-        val seed = Snapshot(0L, Nil, Nil, statsCols, None, "init", sketchCols)
-        LakeCommit.run(spark, dir, "init", Abort, from = Some(seed)) { s =>
-          Some(LakeCommit.build(spark, dir, s, rels, rels, batchId.toSeq,
-            "init", Some(updates.schema.json)))
-        }
+        bootstrap(spark, dir, newestPerKey(updates, keyCols, seqCol),
+          Seq(partitionCol), statsCols, Map.empty)
     }
+
+  /** The ONE create-from-data path: a directory with no commit log
+    * starts from `rows` — version 1 = the rows, with `statsCols`
+    * zone-map stats from birth and `props` (a sink's ledger entry)
+    * riding the same commit, so a crashed first write left nothing
+    * visible and replays cleanly. The create is a CAS commit: two racing
+    * creators resolve to one winner, the loser gets [[CreateRace]] and
+    * its staged files are vacuum garbage. Empty `rows` are refused —
+    * writers skip empty batches until the first row arrives. */
+  private def bootstrap(spark: SparkSession, dir: String, rows: DataFrame,
+      partCols: Seq[String], statsCols: Seq[String],
+      props: Map[String, String]): Snapshot = {
+    hadoopFs(spark, dir).mkdirs(logPath(dir))
+    val rels = stageWrite(spark, dir, rows, partCols)
+    if (rels.isEmpty)
+      throw new IllegalStateException(
+        s"cannot bootstrap $dir from an empty batch — skip empty batches " +
+          "until the first row arrives")
+    LakeCommit.run(spark, dir, "init", Abort,
+      from = Some(Snapshot(0L, Nil, Nil, statsCols, None, "init"))) { s =>
+      Some(LakeCommit.build(spark, dir, s, rels, rels, Nil, "init",
+        Some(rows.schema.json), props))
+    }
+  }
 
   // ----------------------------------------------- streaming-sink txns
   // Per-QUERY transaction ledger for the native streaming sink
@@ -1543,32 +1591,24 @@ object CommitLog extends org.apache.spark.internal.Logging {
     }
 
   /** The sink verbs' shared entry. A directory with no commit log is
-    * bootstrapped FROM the batch (version 1 = the batch, with the txn
-    * ledger entry riding the same commit; a crashed first batch left
-    * nothing visible and its replay bootstraps cleanly). Two streams
-    * bootstrapping one target: the loser of the create race lands ON
-    * TOP of the winner's table — the query must not die over a benign
-    * race. A replayed `(queryId, batchId)` returns the snapshot
-    * unchanged; anything else runs `onTable` against it. */
-  private def sinkWrite(spark: SparkSession, rows: DataFrame, dir: String,
-      bootstrapPartCols: Seq[String], queryId: String, batchId: Long)(
+    * bootstrapped FROM `rows` ([[bootstrap]], with the txn ledger entry
+    * riding version 1; `rows` is by-name, so an existing table never
+    * plans the bootstrap frame). Two streams bootstrapping one target:
+    * the loser of the create race lands ON TOP of the winner's table —
+    * the query must not die over a benign race. A replayed
+    * `(queryId, batchId)` returns the snapshot unchanged; anything else
+    * runs `onTable` against it. */
+  private def sinkWrite(spark: SparkSession, rows: => DataFrame, dir: String,
+      bootstrapPartCols: Seq[String], queryId: String, batchId: Long,
+      statsCols: Seq[String] = Nil)(
       onTable: Snapshot => Snapshot): Snapshot =
     latest(spark, dir) match {
       case None =>
-        hadoopFs(spark, dir).mkdirs(logPath(dir))
-        val rels = stageWrite(spark, dir, rows, bootstrapPartCols)
-        if (rels.isEmpty)
-          throw new IllegalStateException(
-            s"cannot bootstrap $dir from an empty batch — the sink skips " +
-              "empty batches until the first row arrives")
-        try LakeCommit.run(spark, dir, "init", Abort,
-          from = Some(Snapshot(0L, Nil, Nil, Nil, None, "init"))) { s =>
-          Some(LakeCommit.build(spark, dir, s, rels, rels, Nil, "init",
-            Some(rows.schema.json), Map(txnKey(queryId) -> batchId.toString)))
-        }
+        try bootstrap(spark, dir, rows, bootstrapPartCols, statsCols,
+          Map(txnKey(queryId) -> batchId.toString))
         catch { case _: CreateRace =>
-          sinkWrite(spark, rows, dir, bootstrapPartCols, queryId,
-            batchId)(onTable)
+          sinkWrite(spark, rows, dir, bootstrapPartCols, queryId, batchId,
+            statsCols)(onTable)
         }
       case Some(s0) if replayed(s0, dir, txn = Some((queryId, batchId))) => s0
       case Some(s0) => onTable(s0)
@@ -1601,14 +1641,17 @@ object CommitLog extends org.apache.spark.internal.Logging {
 
   /** The native streaming sink's keyed UPSERT verb
     * (`OutputMode.Update` + `keyColumns`): [[upsert]] semantics —
-    * copy-on-write merge of the touched partitions, `seqCol`-aware —
-    * guarded by the per-query txn ledger. Bootstraps a missing table
-    * from the first non-empty batch. */
+    * copy-on-write merge of the touched partitions, `seqCol`-aware (the
+    * newest row per key lands, also from the bootstrap batch) — guarded
+    * by the per-query txn ledger. Bootstraps a missing table from the
+    * first non-empty batch, with `statsCols` zone-map stats from birth. */
   def sinkUpsert(spark: SparkSession, updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String,
-      seqCol: Option[String], queryId: String, batchId: Long): Snapshot = {
+      seqCol: Option[String], queryId: String, batchId: Long,
+      statsCols: Seq[String] = Nil): Snapshot = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    sinkWrite(spark, updates, dir, Seq(partitionCol), queryId, batchId) { _ =>
+    sinkWrite(spark, newestPerKey(updates, keyCols, seqCol), dir,
+      Seq(partitionCol), queryId, batchId, statsCols) { _ =>
       stageUpsert(spark, updates, dir, keyCols, partitionCol, seqCol,
         batchId = None) match {
         case Some(st) => LakeCommit.rebase(spark, dir, st.copy(

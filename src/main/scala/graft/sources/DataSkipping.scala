@@ -26,9 +26,8 @@ import org.apache.spark.sql.functions._
   * and falls back to the unpruned scan (with a stderr warning) on any
   * mismatch — a stale zone map must degrade to correct-but-slower, never
   * to wrong answers. The lake's own maintenance ops self-maintain it:
-  * `LakeMaintenance.compact`/`compactBucketed` and
-  * `Sources.upsertPartitioned` call [[refreshManifest]] after their
-  * write, so the fallback only covers out-of-band writers.
+  * `LakeMaintenance.compact`/`compactBucketed` call [[refreshManifest]]
+  * after their write, so the fallback only covers out-of-band writers.
   *
   * The survivor file list is driver-resident: one string per data file,
   * the same metadata-plane footprint every table format's planning phase
@@ -67,7 +66,7 @@ object DataSkipping {
     * so a top-level-only listing would see zero data files, trip the
     * staleness check, and permanently disable pruning exactly where it
     * matters. Files under any `_`- or `.`-prefixed path component
-    * (sidecars like `_graft_manifest`/`_graft_commits`, hidden dirs) are
+    * (sidecars like `_graft_manifest`, hidden dirs) are
     * excluded — the same visibility rule Spark's own file index applies. */
   private[sources] def dataFiles(spark: SparkSession, dir: String): Set[String] = {
     val path = new Path(dir)
@@ -187,9 +186,8 @@ object DataSkipping {
     * degrades to a `buildManifest`-equivalent full pass. No-op when the
     * lake has no manifest — skipping stays opt-in per lake — and when the
     * manifest is already fresh. This is the self-maintenance hook
-    * `LakeMaintenance.compact`/`compactBucketed` and
-    * `Sources.upsertPartitioned` call, mirroring how the reference's
-    * Postgres indexes maintain themselves on write
+    * `LakeMaintenance.compact`/`compactBucketed` call, mirroring how the
+    * reference's Postgres indexes maintain themselves on write
     * (`/root/reference/database/schema.sql:31-33`). */
   def refreshManifest(spark: SparkSession, dir: String): Unit = {
     val manifestPath = new Path(s"$dir/$ManifestDir")

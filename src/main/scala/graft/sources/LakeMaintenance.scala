@@ -100,10 +100,10 @@ object LakeMaintenance {
         fs.rename(old, new Path(dir)) // roll back
         throw new IllegalStateException(s"compaction swap failed for $dir")
       }
-      // metadata sidecars (e.g. the streaming upsert's _graft_commits
+      // metadata sidecars (`_`-prefixed directories such as a writer's
       // ledger) are invisible to the parquet read, so the rewrite never
       // carries them — move them across before the staged copy is deleted
-      // or a replayed micro-batch would re-apply after every compaction
+      // or their state would be lost with every compaction
       fs.listStatus(old).map(_.getPath)
         .filter(p => p.getName.startsWith("_") && p.getName != "_SUCCESS")
         .foreach { p =>

@@ -75,114 +75,4 @@ object Sources {
 
   def orcTable(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
-
-  /** MERGE-like keyed upsert into a partitioned parquet table — the
-    * no-extra-deps equivalent of the reference's Postgres upsert path
-    * (insert guarded by an existing-keys anti-join,
-    * clean_data.py:176-180), lifted to a lake layout. Rows in `updates`
-    * replace same-key rows; everything else inserts. Replay-safe:
-    * re-running the same upsert is a no-op on the final state.
-    *
-    * Scale design: the rewrite is PARTITION-PRUNED. Only partitions
-    * present in `updates` are read (partition-value IN-filter → Spark
-    * prunes the scan to those directories) and only they are rewritten
-    * (per-write dynamic partition overwrite — untouched partitions'
-    * files are never opened, moved, or rewritten; a spec pins their
-    * on-disk file identity). Cost scales with the touched slice, never
-    * with the table. Keys must not move across partitions — with a
-    * stable partition function of the key (the lake layout here) that
-    * invariant holds by construction.
-    *
-    * The merged slice is localCheckpoint'd before the overwrite: the
-    * write must not scan the files it replaces (Spark rejects reading
-    * and overwriting one path in a single job), and the checkpoint —
-    * bounded by the touched partitions, released in a finally — breaks
-    * that cycle without a staging directory and second rewrite. True
-    * multi-writer transactionality is a table format's job (Delta /
-    * Iceberg MERGE); single-writer batch upsert — the reference's
-    * deployment shape — is exactly this.
-    *
-    * With `seqCol` set, the merge is VERSION-AWARE: per key, the row
-    * with the greatest non-null `seqCol` wins, and on a seq tie the
-    * update wins (deterministically). An update carrying an OLDER seq
-    * than the lake row therefore cannot regress state — the protection a
-    * reordered CDC feed needs. Without `seqCol` the update wins
-    * unconditionally (last-writer semantics).
-    */
-  /** Keyed merge of `updates` over `old` rows. Without `seqCol` the
-    * update wins unconditionally (anti-join shape). With `seqCol`, a
-    * per-key argmax on (seq, source): greatest seq wins; on a tie the
-    * update (source = 1) beats the lake row (source = 0). One shuffle
-    * over the inputs. Unmatched lake rows survive as singleton groups.
-    * Null seq sorts lowest, so it never beats a real one. Shared by the
-    * in-place upsert here and the commit log's copy-on-write upsert. */
-  private[sources] def mergeKeyed(old: DataFrame, updates: DataFrame,
-      keyCols: Seq[String], seqCol: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, max, struct}
-    seqCol match {
-      case None =>
-        updates.unionByName(
-          old.join(updates.select(keyCols.map(col): _*), keyCols, "left_anti"))
-      case Some(sc) =>
-        val dataCols = updates.columns.filterNot(keyCols.contains).toSeq
-        val keys = keyCols.map(col)
-        val ver = struct(
-          col(sc) +: lit(0).as("__src") +: dataCols.filterNot(_ == sc).map(col): _*)
-        updates.withColumn("__v", ver).withColumn("__v",
-            col("__v").withField("__src", lit(1)))
-          .unionByName(old.withColumn("__v", ver))
-          .groupBy(keys: _*)
-          .agg(max(col("__v")).as("__v"))
-          .select(keys ++ dataCols.map(c => col(s"__v.$c").as(c)): _*)
-    }
-  }
-
-  def upsertPartitioned(
-      spark: SparkSession, updates: DataFrame, path: String,
-      keyCols: Seq[String], partitionCol: String,
-      seqCol: Option[String] = None): Unit = {
-    require(keyCols.nonEmpty, "upsertPartitioned needs at least one key column")
-    import org.apache.spark.sql.functions.{col, lit, max, struct}
-    val exists = {
-      // cheap FS probe first: letting the reader throw on a missing
-      // path logs a full FileNotFoundException stack into every
-      // first-batch stream log before the catch below swallows it
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p) &&
-        (try spark.read.parquet(path).schema.nonEmpty
-        catch { case _: org.apache.spark.sql.AnalysisException => false })
-    }
-    val merged =
-      if (!exists) updates
-      else {
-        val parts = updates.select(col(partitionCol)).distinct().collect()
-          .map(_.get(0)).toSeq // one value per TOUCHED partition — small
-        // NULL-safe membership: isin() is three-valued, so a null partition
-        // value in `updates` would silently EXCLUDE the existing null-slice
-        // rows from the merge while dynamic overwrite still rewrites
-        // __HIVE_DEFAULT_PARTITION__ — deleting them. Treat null as its own
-        // partition key instead.
-        val nonNull = parts.filter(_ != null)
-        val inNonNull =
-          if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*)
-          else org.apache.spark.sql.functions.lit(false)
-        val touched =
-          if (parts.contains(null)) inNonNull || col(partitionCol).isNull
-          else inNonNull
-        mergeKeyed(spark.read.parquet(path).filter(touched), updates,
-          keyCols, seqCol)
-      }
-    val snapshot = merged.localCheckpoint()
-    try {
-      snapshot.write
-        .partitionBy(partitionCol)
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite)
-        .parquet(path)
-    } finally graft.runtime.Lifetime.release(snapshot)
-    // keep the zone-map manifest fresh: dynamic overwrite replaced only
-    // the touched partitions' files, so the incremental refresh scans
-    // exactly that slice — untouched files keep their manifest rows
-    DataSkipping.refreshManifest(spark, path)
-  }
 }

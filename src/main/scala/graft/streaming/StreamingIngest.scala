@@ -1,11 +1,13 @@
 package graft.streaming
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.jobs.IngestJob
+import graft.sources.CommitLog.Snapshot
 
 /** Streaming face of the ingest pipeline (SURVEY.md §2.8): the reference's
   * cron-batch + S3 consume-once queue (scrape.py:112-118,
@@ -13,8 +15,16 @@ import graft.jobs.IngestJob
   * the landing prefix with `cleanSource` post-commit handling, and the
   * idempotent load runs inside foreachBatch — at-least-once delivery with
   * a dedup sink, exactly like the reference's unique-index guard.
+  *
+  * Every keyed pipeline here (logged, view, index, dedup-index,
+  * audited) is ONE write path plus its own after-commit hook:
+  * [[keyedUpsertStream]] lands each micro-batch through the native
+  * `graft-lake` sink's update-mode body with the sink's per-query
+  * exactly-once ledger. A plain keyed upsert stream needs no wrapper at
+  * all: `writeStream.format("graft-lake").outputMode("update")` with
+  * `keyColumns`/`partitionColumn`/`sequenceColumn`.
   */
-object StreamingIngest {
+object StreamingIngest extends Logging {
 
   /** binaryFile source schema (fixed by Spark's BinaryFileFormat). */
   private val binaryFileSchema = StructType(Seq(
@@ -52,7 +62,7 @@ object StreamingIngest {
         val report = IngestJob.runOnFilesAndArchive(
           batch.sparkSession, batch, lake, archiveDir)
         // S10 run-report log line, one per micro-batch.
-        println(s"[ingest-stream] batch=$batchId seen=${report.filesSeen} " +
+        logInfo(s"[ingest-stream] batch=$batchId seen=${report.filesSeen} " +
           s"parsed=${report.filesParsed} failed=${report.filesFailed} " +
           s"new=${report.filesNew} rows=${report.flowRowsAppended}")
         ()
@@ -60,116 +70,66 @@ object StreamingIngest {
       .start()
   }
 
-  /** Stream the keyed-update flow into the parquet lake through
-    * [[graft.sources.Sources.upsertPartitioned]] — the streaming face of
-    * the MERGE-like sink. Each micro-batch is first reduced to ONE row
-    * per key (greatest `seqCol` wins, so a batch carrying several
-    * versions of a key lands only the newest), then upserted with
-    * dynamic partition overwrite touching only the partitions the batch
-    * names.
+  /** THE keyed streaming upsert every pipeline below is built from:
+    * each micro-batch of `updates` lands in the commit-logged table at
+    * `dir` through [[LakeStreamSink.upsertBatch]] — the native
+    * `graft-lake` sink's update-mode body, so a `foreachBatch` pipeline
+    * and `writeStream.format("graft-lake")` share one write path — and
+    * then `afterCommit` runs with the batch, its id and the committed
+    * snapshot.
     *
-    * Delivery from the source is at-least-once (foreachBatch re-runs a
-    * batch after a crash before the commit log records it); the sink
-    * makes it EXACTLY-ONCE with two independent guards, the same
-    * discipline as the reference's `equipment_files` ledger + unique
-    * index (schema.sql:22-33, clean_data.py:176-180):
+    * What the one path guarantees, the same discipline as the
+    * reference's `equipment_files` ledger + unique index
+    * (schema.sql:22-33, clean_data.py:176-180):
+    *  - the newest row per key lands (greatest `seqCol`), within the
+    *    batch and against the table, so an older seq from a reordered
+    *    delivery never regresses a key;
+    *  - the batch commits ONCE: the per-query ledger entry
+    *    (`graft.txn.<queryId>`, the running query's id read as the sink
+    *    reads it) rides the data commit, so an at-least-once replay
+    *    (crash between the commit and Spark's checkpoint) is a no-op,
+    *    while a query on a FRESH checkpoint gets a fresh ledger and
+    *    lands its first batches;
+    *  - the first non-empty batch bootstraps the table, with
+    *    `statsCols` zone-map stats from birth; empty batches commit
+    *    nothing and skip the hook.
     *
-    *  1. a `_graft_commits/<batchId>` marker inside the table directory
-    *     (underscore-prefixed, so table reads never see it), written
-    *     AFTER the upsert commits and checked BEFORE applying — a
-    *     replayed batch is a true no-op regardless of seq semantics;
-    *  2. the upsert itself runs version-aware (`seqCol` passed through
-    *     to [[graft.sources.Sources.upsertPartitioned]]): per key the
-    *     greatest seq wins, so even a genuinely NEW batch that carries
-    *     an older seq for a key (cross-trigger reordering) cannot
-    *     regress the lake row.
-    *
-    * A crash BETWEEN the upsert and the marker write replays the batch;
-    * guard 2 makes that replay converge to the same state, after which
-    * the marker lands. The ledger is per-table and single-stream, the
-    * same single-writer contract as the batch upsert.
-    *
-    * At scale the cost per trigger is the batch size plus a rewrite of
-    * the touched partitions only — partition pruning bounds it, so keep
-    * partitions date-sized, not table-sized. */
-  def upsertStream(
-      updates: DataFrame, path: String,
+    * A replayed batch still runs `afterCommit` (with the unchanged
+    * snapshot), so hooks must be idempotent — each one below says why
+    * it is. At scale a trigger costs the batch plus a rewrite of the
+    * touched partitions only; keep partitions date-sized. */
+  private def keyedUpsertStream(updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String, seqCol: String,
-      checkpointDir: String): StreamingQuery = {
+      checkpointDir: String, statsCols: Seq[String] = Nil)(
+      afterCommit: (DataFrame, Long, Snapshot) => Unit): StreamingQuery =
     updates.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sess = batch.sparkSession
-        val ledger = new org.apache.hadoop.fs.Path(path, "_graft_commits")
-        val fs = ledger.getFileSystem(sess.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(ledger, batchId.toString)
-        if (fs.exists(marker)) {
-          println(s"[upsert-stream] batch=$batchId already in ledger — replay skipped")
-        } else {
-          val keys = keyCols.map(col)
-          val latest = batch
-            .groupBy(keys: _*)
-            .agg(max(struct(col(seqCol) +: batch.columns.filterNot(c =>
-              keyCols.contains(c) || c == seqCol).map(col) :_*)).as("__v"))
-            .select(keys ++ batch.columns.filterNot(keyCols.contains).map(c =>
-              col(s"__v.$c").as(c)) :_*)
-          graft.sources.Sources.upsertPartitioned(
-            sess, latest, path, keyCols, partitionCol, seqCol = Some(seqCol))
-          fs.mkdirs(ledger)
-          fs.create(marker, true).close()
-          println(s"[upsert-stream] batch=$batchId committed")
-        }
-        ()
+        val s = batch.sparkSession
+        LakeStreamSink.upsertBatch(s, dir, batch, keyCols, partitionCol,
+          Some(seqCol), applyCdc = false, LakeStreamSink.runningQueryId(s),
+          batchId, statsCols).foreach(afterCommit(batch, batchId, _))
       }
       .start()
-  }
 
-  /** [[upsertStream]] riding the versioned commit log — the unified
-    * successor to the marker-file ledger above for LOGGED tables. Each
-    * micro-batch reduces to one row per key (greatest `seqCol` wins) and
-    * lands via [[graft.sources.CommitLog.upsertOrCreate]] with the
-    * batch id IN the commit: the "crash between upsert and marker"
-    * window of the two-guard dance is gone by construction (either the
-    * version file exists and carries the batch id, or nothing of the
-    * batch is visible), replays are no-ops read straight off the
-    * ledger-in-the-log, zone-map stats ride every commit (`statsCols`),
-    * readers time-travel past any batch, and the optimistic-concurrency
-    * path even tolerates a second worker running the same sink against
-    * disjoint partitions. Consumers read with
+  /** The keyed upsert stream on its own ([[keyedUpsertStream]], no
+    * hook beyond a log line). Consumers read with
     * [[graft.sources.CommitLog.read]] (old versions' files stay on disk
     * until vacuum), and incremental consumers tail
     * [[graft.sources.CommitLog.changesBetween]]. */
   def upsertStreamLogged(
       updates: DataFrame, path: String,
       keyCols: Seq[String], partitionCol: String, seqCol: String,
-      checkpointDir: String, statsCols: Seq[String] = Nil): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val keys = keyCols.map(col)
-          val latest = batch
-            .groupBy(keys: _*)
-            .agg(max(struct(col(seqCol) +: batch.columns.filterNot(c =>
-              keyCols.contains(c) || c == seqCol).map(col) :_*)).as("__v"))
-            .select(keys ++ batch.columns.filterNot(keyCols.contains).map(c =>
-              col(s"__v.$c").as(c)) :_*)
-          val snap = graft.sources.CommitLog.upsertOrCreate(
-            batch.sparkSession, latest, path, keyCols, partitionCol,
-            seqCol = Some(seqCol), batchId = Some(batchId),
-            statsCols = statsCols)
-          println(s"[upsert-stream-logged] batch=$batchId at version ${snap.version}")
-        }
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String, statsCols: Seq[String] = Nil): StreamingQuery =
+    keyedUpsertStream(updates, path, keyCols, partitionCol, seqCol,
+      checkpointDir, statsCols) { (_, batchId, snap) =>
+      logInfo(s"[upsert-stream-logged] batch=$batchId at version ${snap.version}")
+    }
 
-  /** [[upsertStreamLogged]] that also keeps an
+  /** [[keyedUpsertStream]] that also keeps an
     * [[graft.sources.IncrementalView]] current: after each micro-batch's
-    * atomic commit, the view catches up through its normal incremental
+    * commit, the view catches up through its normal incremental
     * refresh — recomputing only the partitions that batch touched. The
     * view's OWN refresh ledger carries the base version it refreshed to,
     * so a replayed or crashed-and-restarted batch's refresh is a
@@ -183,44 +143,45 @@ object StreamingIngest {
   def upsertStreamMaintainingView(
       updates: DataFrame, defn: graft.sources.IncrementalView.Definition,
       keyCols: Seq[String], seqCol: String,
-      checkpointDir: String, statsCols: Seq[String] = Nil): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val keys = keyCols.map(col)
-          val latest = batch
-            .groupBy(keys: _*)
-            .agg(max(struct(col(seqCol) +: batch.columns.filterNot(c =>
-              keyCols.contains(c) || c == seqCol).map(col) :_*)).as("__v"))
-            .select(keys ++ batch.columns.filterNot(keyCols.contains).map(c =>
-              col(s"__v.$c").as(c)) :_*)
-          val snap = graft.sources.CommitLog.upsertOrCreate(
-            batch.sparkSession, latest, defn.baseDir, keyCols,
-            defn.partitionCol, seqCol = Some(seqCol),
-            batchId = Some(batchId), statsCols = statsCols)
-          val touched =
-            graft.sources.IncrementalView.refresh(batch.sparkSession, defn)
-          println(s"[upsert-stream-view] batch=$batchId at version " +
-            s"${snap.version}; view refreshed ${touched.size} partition(s)")
-        }
-        ()
-      }
-      .start()
+      checkpointDir: String, statsCols: Seq[String] = Nil): StreamingQuery =
+    keyedUpsertStream(updates, defn.baseDir, keyCols, defn.partitionCol,
+      seqCol, checkpointDir, statsCols) { (batch, batchId, snap) =>
+      val touched =
+        graft.sources.IncrementalView.refresh(batch.sparkSession, defn)
+      logInfo(s"[upsert-stream-view] batch=$batchId at version " +
+        s"${snap.version}; view refreshed ${touched.size} partition(s)")
+    }
+
+  /** The committed post-image of a micro-batch's docs, read back with
+    * PARTITION PRUNING off the committed file list: one small collect of
+    * the batch's (partition, id) pairs, then only the touched
+    * partitions' files are opened and filtered to the batch's ids. A
+    * micro-batch therefore costs a churn-sized read at any corpus size —
+    * never a full-lake scan per tick. */
+  private def batchPostImage(s: org.apache.spark.sql.SparkSession,
+      corpusDir: String, batch: DataFrame, idCol: String, textCol: String,
+      partitionCol: String): DataFrame = {
+    val pairs = batch.select(col(partitionCol), col(idCol)).distinct()
+      .collect() // batch-sized: one row per upserted doc
+    val parts: Seq[Any] = pairs.map(_.get(0)).distinct.toSeq
+    val ids: Seq[Any] = pairs.map(_.get(1)).distinct.toSeq
+    graft.sources.CommitLog.readPartitions(s, corpusDir, partitionCol, parts)
+      .filter(col(idCol).isin(ids: _*))
+      .select(col(idCol), col(textCol))
   }
 
   /** Streamed document upserts that keep a persisted BM25 inverted index
     * ([[graft.text.InvertedIndex]]) fresh: each micro-batch lands in the
-    * corpus lake through the exactly-once logged upsert, then the index
-    * is updated with the touched docs' POST-image read back from the
-    * committed corpus — not the batch rows — so a stale batch row that
-    * lost the seq race can never plant wrong postings. The first
-    * non-empty batch bootstraps BOTH tables (corpus via upsertOrCreate's
-    * CAS create, index via a build over the just-committed corpus).
+    * corpus lake through [[keyedUpsertStream]] (keyed on `idCol`), then
+    * the index is updated with the touched docs' POST-image read back
+    * from the committed corpus — not the batch rows — so a stale batch
+    * row that lost the seq race can never plant wrong postings. The
+    * first non-empty batch bootstraps BOTH tables (corpus through the
+    * sink's bootstrap, index via a build over the just-committed
+    * corpus).
     *
     * Replays are safe without an index-side ledger: the corpus upsert
-    * no-ops off the in-commit batch ledger, and
+    * no-ops off its per-query ledger, and
     * [[graft.text.InvertedIndex.update]] is idempotent — re-applying a
     * post-image replaces postings with themselves under a zero globals
     * delta (InvertedIndexSpec pins the no-op). Idempotence substitutes
@@ -232,189 +193,121 @@ object StreamingIngest {
     * each micro-batch reads churn-touched partitions, never the corpus
     * — the index side is already churn-bounded through its committed
     * doc_id filters. */
-  /** The committed post-image of a micro-batch's docs, read back with
-    * PARTITION PRUNING off the committed file list: one small collect of
-    * the batch's (partition, id) pairs, then only the touched
-    * partitions' files are opened and filtered to the batch's ids. A
-    * micro-batch therefore costs a churn-sized read at any corpus size —
-    * never a full-lake scan per tick. */
-  private def batchPostImage(s: org.apache.spark.sql.SparkSession,
-      corpusDir: String, latest: DataFrame, idCol: String, textCol: String,
-      partitionCol: String): DataFrame = {
-    val pairs = latest.select(col(partitionCol), col(idCol)).distinct()
-      .collect() // batch-sized: one row per upserted doc
-    val parts: Seq[Any] = pairs.map(_.get(0)).distinct.toSeq
-    val ids: Seq[Any] = pairs.map(_.get(1)).distinct.toSeq
-    graft.sources.CommitLog.readPartitions(s, corpusDir, partitionCol, parts)
-      .filter(col(idCol).isin(ids: _*))
-      .select(col(idCol), col(textCol))
-  }
-
   def upsertStreamMaintainingIndex(
       updates: DataFrame, corpusDir: String, indexDir: String,
       idCol: String, textCol: String, seqCol: String, partitionCol: String,
       checkpointDir: String,
-      txnDir: Option[String] = None): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val latest = batch
-            .groupBy(col(idCol))
-            .agg(max(struct(col(seqCol) +: batch.columns.filterNot(c =>
-              c == idCol || c == seqCol).map(col) :_*)).as("__v"))
-            .select(col(idCol) +: batch.columns.filterNot(_ == idCol).map(c =>
-              col(s"__v.$c").as(c)) :_*)
-          val snap = graft.sources.CommitLog.upsertOrCreate(
-            s, latest, corpusDir, Seq(idCol), partitionCol,
-            seqCol = Some(seqCol), batchId = Some(batchId))
-          val indexSnap = graft.sources.CommitLog.latest(s, indexDir)
-          if (indexSnap.isEmpty) {
-            graft.text.InvertedIndex.build(s,
-              graft.sources.CommitLog.read(s, corpusDir)
-                .select(col(idCol), col(textCol)),
-              idCol, textCol, indexDir)
-          } else {
-            // replay safety for logs built before the one-commit
-            // bootstrap: a crash between their init and setProps left
-            // postings without globals — repair (recompute + commit the
-            // props) instead of letting update() fail the stream forever
-            if (!indexSnap.get.props.contains("bm25.n"))
-              graft.text.InvertedIndex.repairProps(s, indexDir, idCol, textCol)
-            graft.text.InvertedIndex.update(s, indexDir,
-              batchPostImage(s, corpusDir, latest, idCol, textCol,
-                partitionCol))
-          }
-          // with a transaction manifest, the (corpus, index) pair becomes
-          // visible to family readers in ONE CAS — a crash between the
-          // two per-table commits above leaves manifest readers on the
-          // previous consistent cut, and this replayed pin is a ledger
-          // no-op. Without one, readers of the raw logs can see corpus
-          // version N beside index state N-1 (documented single-table
-          // atomicity).
-          txnDir.foreach { td =>
-            graft.sources.LakeTxn.commit(s, td, Map(
-              corpusDir -> graft.sources.CommitLog.latest(s, corpusDir)
-                .get.version,
-              indexDir -> graft.sources.CommitLog.latest(s, indexDir)
-                .get.version), batchId = Some(batchId))
-          }
-          println(s"[upsert-stream-index] batch=$batchId at corpus " +
-            s"version ${snap.version}; index fresh")
-        }
-        ()
+      txnDir: Option[String] = None): StreamingQuery =
+    keyedUpsertStream(updates, corpusDir, Seq(idCol), partitionCol, seqCol,
+      checkpointDir) { (batch, batchId, snap) =>
+      val s = batch.sparkSession
+      val indexSnap = graft.sources.CommitLog.latest(s, indexDir)
+      if (indexSnap.isEmpty) {
+        graft.text.InvertedIndex.build(s,
+          graft.sources.CommitLog.read(s, corpusDir)
+            .select(col(idCol), col(textCol)),
+          idCol, textCol, indexDir)
+      } else {
+        // replay safety for logs built before the one-commit
+        // bootstrap: a crash between their init and setProps left
+        // postings without globals — repair (recompute + commit the
+        // props) instead of letting update() fail the stream forever
+        if (!indexSnap.get.props.contains("bm25.n"))
+          graft.text.InvertedIndex.repairProps(s, indexDir, idCol, textCol)
+        graft.text.InvertedIndex.update(s, indexDir,
+          batchPostImage(s, corpusDir, batch, idCol, textCol,
+            partitionCol))
       }
-      .start()
-  }
+      // with a transaction manifest, the (corpus, index) pair becomes
+      // visible to family readers in ONE CAS — a crash between the
+      // two per-table commits above leaves manifest readers on the
+      // previous consistent cut, and this replayed pin is a ledger
+      // no-op. Without one, readers of the raw logs can see corpus
+      // version N beside index state N-1 (documented single-table
+      // atomicity).
+      txnDir.foreach { td =>
+        graft.sources.LakeTxn.commit(s, td, Map(
+          corpusDir -> graft.sources.CommitLog.latest(s, corpusDir)
+            .get.version,
+          indexDir -> graft.sources.CommitLog.latest(s, indexDir)
+            .get.version), batchId = Some(batchId))
+      }
+      logInfo(s"[upsert-stream-index] batch=$batchId at corpus " +
+        s"version ${snap.version}; index fresh")
+    }
 
   /** Streamed document upserts that keep a persisted NEAR-DUP index
     * ([[graft.dedup.DedupIndex]]) fresh — the dedup twin of
     * [[upsertStreamMaintainingIndex]], same discipline throughout: each
-    * micro-batch lands in the corpus through the exactly-once logged
-    * upsert, the index absorbs the touched docs' POST-image read back
-    * from the committed corpus (never the raw batch rows — a stale
-    * seq-race loser cannot plant wrong postings), the first non-empty
-    * batch bootstraps both, and replays are safe because the corpus
-    * upsert no-ops off the in-commit ledger while
+    * micro-batch lands in the corpus through [[keyedUpsertStream]], the
+    * index absorbs the touched docs' POST-image read back from the
+    * committed corpus (never the raw batch rows — a stale seq-race
+    * loser cannot plant wrong postings), the first non-empty batch
+    * bootstraps both, and replays are safe because the corpus upsert
+    * no-ops off its per-query ledger while
     * [[graft.dedup.DedupIndex.update]] converges (it recomputes the
     * touched docs' postings ABSOLUTELY from the given post-image, so a
     * re-applied post-image rewrites identical postings — replay is
     * idempotent by recomputation, not by delta algebra). The post-image
     * read is pruned to the batch's partitions, as in
     * [[upsertStreamMaintainingIndex]]. The index's OWN LakeTxn manifest
-    * pins each (postings,
-    * terms) cut, so a search between a crash and its replay serves the
-    * previous consistent cut. Net effect: arriving batches can be
-    * near-dup-probed against everything that streamed in before them,
-    * with no corpus re-tokenize anywhere. */
+    * pins each (postings, terms) cut, so a search between a crash and
+    * its replay serves the previous consistent cut. Net effect:
+    * arriving batches can be near-dup-probed against everything that
+    * streamed in before them, with no corpus re-tokenize anywhere. */
   def upsertStreamMaintainingDedupIndex(
       updates: DataFrame, corpusDir: String, indexDir: String,
       idCol: String, textCol: String, seqCol: String, partitionCol: String,
-      checkpointDir: String): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val latest = batch
-            .groupBy(col(idCol))
-            .agg(max(struct(col(seqCol) +: batch.columns.filterNot(c =>
-              c == idCol || c == seqCol).map(col) :_*)).as("__v"))
-            .select(col(idCol) +: batch.columns.filterNot(_ == idCol).map(c =>
-              col(s"__v.$c").as(c)) :_*)
-          val snap = graft.sources.CommitLog.upsertOrCreate(
-            s, latest, corpusDir, Seq(idCol), partitionCol,
-            seqCol = Some(seqCol), batchId = Some(batchId))
-          if (!graft.dedup.DedupIndex.exists(s, indexDir)) {
-            graft.dedup.DedupIndex.build(s,
-              graft.sources.CommitLog.read(s, corpusDir)
-                .select(col(idCol), col(textCol)),
-              idCol, textCol, indexDir)
-          } else {
-            graft.dedup.DedupIndex.update(s, indexDir,
-              batchPostImage(s, corpusDir, latest, idCol, textCol,
-                partitionCol))
-          }
-          println(s"[upsert-stream-dedup] batch=$batchId at corpus " +
-            s"version ${snap.version}; dedup index fresh")
-        }
-        ()
+      checkpointDir: String): StreamingQuery =
+    keyedUpsertStream(updates, corpusDir, Seq(idCol), partitionCol, seqCol,
+      checkpointDir) { (batch, batchId, snap) =>
+      val s = batch.sparkSession
+      if (!graft.dedup.DedupIndex.exists(s, indexDir)) {
+        graft.dedup.DedupIndex.build(s,
+          graft.sources.CommitLog.read(s, corpusDir)
+            .select(col(idCol), col(textCol)),
+          idCol, textCol, indexDir)
+      } else {
+        graft.dedup.DedupIndex.update(s, indexDir,
+          batchPostImage(s, corpusDir, batch, idCol, textCol,
+            partitionCol))
       }
-      .start()
-  }
+      logInfo(s"[upsert-stream-dedup] batch=$batchId at corpus " +
+        s"version ${snap.version}; dedup index fresh")
+    }
 
   /** Streamed upserts behind a WRITE-AUDIT-PUBLISH gate: each
-    * micro-batch lands in the commit log through the exactly-once keyed
-    * upsert as usual, then the NEW version runs the declarative
-    * constraint audit and the table's published pointer
-    * ([[graft.sources.LakeRefs]]) advances only on a clean report.
-    * Consumers following [[graft.sources.LakeRefs.readPublished]] can
-    * never observe a micro-batch that failed its audit — and a failed
-    * batch needs no rollback or dead-letter replumbing: the pointer
-    * simply does not move, and the next clean commit publishes past it
-    * (the poison stays queryable at its unpublished version for
-    * debugging). A replayed batch is a ledger no-op on the upsert side
-    * and skips the publish when the pointer already covers its version,
-    * so at-least-once delivery cannot double-publish or trip the
+    * micro-batch lands in the commit log through [[keyedUpsertStream]],
+    * then the NEW version runs the declarative constraint audit and the
+    * table's published pointer ([[graft.sources.LakeRefs]]) advances
+    * only on a clean report. Consumers following
+    * [[graft.sources.LakeRefs.readPublished]] can never observe a
+    * micro-batch that failed its audit — and a failed batch needs no
+    * rollback or dead-letter replumbing: the pointer simply does not
+    * move, and the next clean commit publishes past it (the poison
+    * stays queryable at its unpublished version for debugging). A
+    * replayed batch is a ledger no-op on the upsert side and skips the
+    * publish when the pointer already covers its version, so
+    * at-least-once delivery cannot double-publish or trip the
     * monotonicity guard. */
   def auditedUpsertStream(
       updates: DataFrame, baseDir: String, keyCols: Seq[String],
       seqCol: String, partitionCol: String, checkpointDir: String,
-      checks: Seq[graft.ops.Constraints.Check]): StreamingQuery = {
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val keys = keyCols.map(col)
-          val latest = batch
-            .groupBy(keys: _*)
-            .agg(max(struct(col(seqCol) +: batch.columns.filterNot(c =>
-              keyCols.contains(c) || c == seqCol).map(col) :_*)).as("__v"))
-            .select(keys ++ batch.columns.filterNot(keyCols.contains).map(c =>
-              col(s"__v.$c").as(c)) :_*)
-          val snap = graft.sources.CommitLog.upsertOrCreate(
-            s, latest, baseDir, keyCols, partitionCol,
-            seqCol = Some(seqCol), batchId = Some(batchId))
-          // replay guard: the pointer may already cover this version —
-          // publishing it again would (correctly) trip the monotone check
-          val already = graft.sources.LakeRefs.publishedVersion(s, baseDir)
-            .exists(_ >= snap.version)
-          val ok =
-            if (already) true
-            else graft.sources.LakeRefs.publishAudited(
-              s, baseDir, snap.version, checks)._1
-          println(s"[audited-upsert-stream] batch=$batchId at version " +
-            s"${snap.version}; published=$ok")
-        }
-        ()
-      }
-      .start()
-  }
+      checks: Seq[graft.ops.Constraints.Check]): StreamingQuery =
+    keyedUpsertStream(updates, baseDir, keyCols, partitionCol, seqCol,
+      checkpointDir) { (batch, batchId, snap) =>
+      val s = batch.sparkSession
+      // replay guard: the pointer may already cover this version —
+      // publishing it again would (correctly) trip the monotone check
+      val already = graft.sources.LakeRefs.publishedVersion(s, baseDir)
+        .exists(_ >= snap.version)
+      val ok =
+        if (already) true
+        else graft.sources.LakeRefs.publishAudited(
+          s, baseDir, snap.version, checks)._1
+      logInfo(s"[audited-upsert-stream] batch=$batchId at version " +
+        s"${snap.version}; published=$ok")
+    }
 
   /** ATOMIC MULTI-TABLE STREAMING — one stream maintaining N tables as
     * ONE transaction per micro-batch: every trigger's writes (any mix
@@ -459,7 +352,7 @@ object StreamingIngest {
         if (!batch.isEmpty) {
           val st = graft.sources.LakeTxn.writeAll(
             batch.sparkSession, txnDir, writes(batch), batchId)
-          println(s"[txn-fanout-stream] batch=$batchId pinned " +
+          logInfo(s"[txn-fanout-stream] batch=$batchId pinned " +
             s"${st.pins.size} table(s) at manifest t${st.txn}")
         }
         ()

@@ -37,7 +37,7 @@ class LakeMaintenanceSpec extends AnyFunSuite {
       Seq((i, "d1", s"a$i"), (i + 100, "d2", s"b$i")).toDF("id", "day", "v")
         .repartition(3).write.partitionBy("day").mode("append").parquet(lake)
     }
-    // a commit-ledger sidecar exactly like upsertStream's
+    // a `_`-prefixed commit-ledger sidecar (one marker file per batch)
     val ledger = new java.io.File(s"$lake/_graft_commits")
     assert(ledger.mkdirs() && new java.io.File(ledger, "7").createNewFile())
 
@@ -54,13 +54,6 @@ class LakeMaintenanceSpec extends AnyFunSuite {
     // the ledger survived — a replayed micro-batch must still see marker 7
     assert(new java.io.File(s"$lake/_graft_commits/7").exists(),
       "commit ledger lost in compaction: replays would re-apply")
-    // and the keyed upsert still works against the compacted layout
-    Sources.upsertPartitioned(spark,
-      Seq((0, "d1", "updated")).toDF("id", "day", "v"), lake, Seq("id"), "day")
-    val got = spark.read.parquet(lake)
-      .filter($"id" === 0).select($"v").as[String].collect().toSeq
-    assert(got == Seq("updated"))
-    assert(spark.read.parquet(lake).count() == 10)
   }
 
   test("compact refreshes the zone-map manifest (no silent permanent fallback)") {

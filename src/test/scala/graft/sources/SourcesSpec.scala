@@ -42,106 +42,42 @@ class SourcesSpec extends AnyFunSuite {
     assert(row == (("FS551JOI", true, false)))
   }
 
-  test("upsertPartitioned: keyed merge, partition-pruned rewrite, replay-safe") {
-    // Residue check is a DELTA: other suites in the shared session may hold
-    // their own caches (e.g. a live IVF index); this spec only asserts that
-    // the upsert itself leaves nothing behind.
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val dir = Files.createTempDirectory("upsert-spec").toString + "/t"
-    val base = Seq(
-      (1L, "a", "d1"), (2L, "b", "d1"),
-      (3L, "c", "d2"), (4L, "d", "d3"))
-      .toDF("k", "v", "pd")
-    Sources.upsertPartitioned(spark, base, dir, Seq("k"), "pd")
-    def filesOf(p: String): Set[(String, Long)] = {
-      val d = new java.io.File(p)
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet
-    }
-    val d1Before = filesOf(s"$dir/pd=d1")
-    val d3Before = filesOf(s"$dir/pd=d3")
-    // update key 3 in place, insert key 5 into d2, open partition d4
-    val updates = Seq(
-      (3L, "c2", "d2"), (5L, "e", "d2"), (6L, "f", "d4"))
-      .toDF("k", "v", "pd")
-    Sources.upsertPartitioned(spark, updates, dir, Seq("k"), "pd")
-    val got = spark.read.parquet(dir)
-      .select($"k", $"v", $"pd").as[(Long, String, String)].collect().toSet
-    assert(got == Set(
-      (1L, "a", "d1"), (2L, "b", "d1"),
-      (3L, "c2", "d2"), (5L, "e", "d2"),
-      (4L, "d", "d3"), (6L, "f", "d4")))
-    // untouched partitions keep their exact files — the rewrite pruned
-    assert(filesOf(s"$dir/pd=d1") == d1Before, "d1 was rewritten")
-    assert(filesOf(s"$dir/pd=d3") == d3Before, "d3 was rewritten")
-    // replay the same upsert: final state unchanged (idempotent)
-    Sources.upsertPartitioned(spark, updates, dir, Seq("k"), "pd")
-    val replay = spark.read.parquet(dir)
-      .select($"k", $"v", $"pd").as[(Long, String, String)].collect().toSet
-    assert(replay == got)
-    // no block-manager residue from the overwrite snapshots
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
-    assert(leaked.isEmpty, s"upsert leaked persistent RDDs: $leaked")
-  }
+  // The keyed lake upsert is CommitLog.upsert; its merge, untouched-
+  // partition file identity and replay cases live in CommitLogSpec
+  // ("upsert is copy-on-write…", "a committed batch id replays as a
+  // no-op…") and its zone-map freshness in "stats ride the commit…".
 
-  test("upsertPartitioned: a null partition value merges the null slice, never deletes it") {
+  test("CommitLog.upsert: a null partition value merges the null slice, never deletes it") {
     val dir = Files.createTempDirectory("upsert-null").toString + "/t"
     val base = Seq((1L, "a", Some("d1")), (2L, "b", None), (3L, "c", None))
       .toDF("k", "v", "pd")
-    Sources.upsertPartitioned(spark, base, dir, Seq("k"), "pd")
+    CommitLog.upsertOrCreate(spark, base, dir, Seq("k"), "pd")
     // update key 2 inside the null partition; key 3 must SURVIVE even
-    // though isin(null) is three-valued (the old silent-delete bug)
+    // though isin(null) is three-valued
     val updates = Seq((2L, "b2", None: Option[String])).toDF("k", "v", "pd")
-    Sources.upsertPartitioned(spark, updates, dir, Seq("k"), "pd")
-    val got = spark.read.parquet(dir)
+    CommitLog.upsert(spark, updates, dir, Seq("k"), "pd")
+    val got = CommitLog.read(spark, dir)
       .select($"k", $"v", $"pd").as[(Long, String, Option[String])].collect().toSet
     assert(got == Set(
       (1L, "a", Some("d1")), (2L, "b2", None), (3L, "c", None)))
   }
 
-  test("upsertPartitioned with seqCol: stale updates lose, ties prefer the update") {
+  test("CommitLog.upsert with seqCol: stale updates lose, ties prefer the update") {
     val dir = Files.createTempDirectory("upsert-seq").toString + "/t"
     val base = Seq((1L, 5L, "v5", "d1"), (2L, 1L, "b1", "d1"))
       .toDF("k", "seq", "v", "pd")
-    Sources.upsertPartitioned(spark, base, dir, Seq("k"), "pd", seqCol = Some("seq"))
+    CommitLog.upsertOrCreate(spark, base, dir, Seq("k"), "pd", seqCol = Some("seq"))
     val updates = Seq(
       (1L, 3L, "v3", "d1"),  // stale: must NOT regress the seq-5 row
       (2L, 1L, "b1b", "d1"), // seq tie: the update wins
       (3L, 1L, "c", "d1"))   // plain insert
       .toDF("k", "seq", "v", "pd")
-    Sources.upsertPartitioned(spark, updates, dir, Seq("k"), "pd", seqCol = Some("seq"))
-    val got = spark.read.parquet(dir)
+    CommitLog.upsert(spark, updates, dir, Seq("k"), "pd", seqCol = Some("seq"))
+    val got = CommitLog.read(spark, dir)
       .select($"k", $"seq", $"v", $"pd").as[(Long, Long, String, String)]
       .collect().toSet
     assert(got == Set(
       (1L, 5L, "v5", "d1"), (2L, 1L, "b1b", "d1"), (3L, 1L, "c", "d1")))
-  }
-
-  test("upsertPartitioned keeps the zone-map manifest fresh (pruning still engages)") {
-    val dir = Files.createTempDirectory("upsert-manifest").toString + "/t"
-    // 3 partitions whose id ranges are disjoint — stats on id prune to one
-    val base = spark.range(0, 3000)
-      .select($"id".as("k"), ($"id" % 7).as("v"),
-        concat(lit("d"), ($"id" / 1000).cast("long")).as("pd"))
-    Sources.upsertPartitioned(spark, base, dir, Seq("k"), "pd")
-    DataSkipping.buildManifest(spark, dir, Seq("k"))
-    // merge into d1 only; the auto-refresh must rescan just that slice
-    val updates = spark.range(1000, 1100)
-      .select($"id".as("k"), lit(99L).as("v"), lit("d1").as("pd"))
-    Sources.upsertPartitioned(spark, updates, dir, Seq("k"), "pd")
-    // fresh manifest: an out-of-range probe opens ZERO files (a stale
-    // manifest would fall back and open all of them)
-    val (_, (probeRead, probeTotal)) =
-      DataSkipping.scanRange(spark, dir, "k", 5000000L, 6000000L)
-    assert(probeTotal > 0 && probeRead == 0,
-      s"manifest stale after upsert: opened $probeRead/$probeTotal")
-    // untouched partitions' manifest rows survived: d0 range still prunes
-    val (d0, (read, total)) = DataSkipping.scanRange(spark, dir, "k", 0L, 999L)
-    assert(read < total, s"pruning lost after upsert: $read/$total")
-    assert(d0.count() == 1000L)
-    // and the merged slice is visible through the refreshed manifest
-    val (d1, _) = DataSkipping.scanRange(spark, dir, "k", 1000L, 1099L)
-    assert(d1.filter($"v" === 99L).count() == 100L)
   }
 
   test("flows CSV sink partitions by pubdate") {

@@ -328,15 +328,25 @@ class StreamingIngestSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** The keyed streaming upsert with no hook: the native sink in
+    * update mode, keyed on `id`, sequenced by `seq`. */
+  private def keyedUpsert(updates: org.apache.spark.sql.DataFrame,
+      lake: String, chk: String) =
+    updates.writeStream.format("graft-lake")
+      .outputMode("update")
+      .option("keyColumns", "id")
+      .option("partitionColumn", "day")
+      .option("sequenceColumn", "seq")
+      .option("checkpointLocation", chk)
+      .start(lake)
+
   test("streaming upsert: last writer per key lands, partitions accumulate") {
     implicit val ctx = spark.sqlContext
     val work = Files.createTempDirectory("upsert-stream").toString
     val lake = s"$work/lake"
     val stream = MemoryStream[(Long, String, Long, String)]
     val updates = stream.toDF().toDF("id", "day", "seq", "payload")
-    val q = StreamingIngest.upsertStream(
-      updates, lake, keyCols = Seq("id"), partitionCol = "day",
-      seqCol = "seq", checkpointDir = s"$work/chk")
+    val q = keyedUpsert(updates, lake, s"$work/chk")
     try {
       stream.addData((1L, "d1", 1L, "a"), (2L, "d1", 1L, "b"))
       q.processAllAvailable()
@@ -344,7 +354,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       // id 3 opens partition d2; id 2 untouched
       stream.addData((1L, "d1", 3L, "a3"), (1L, "d1", 2L, "a2"), (3L, "d2", 1L, "c"))
       q.processAllAvailable()
-      val got = spark.read.parquet(lake)
+      val got = graft.sources.CommitLog.read(spark, lake)
         .select($"id", $"day", $"seq", $"payload")
         .as[(Long, String, Long, String)].collect().sortBy(_._1)
       assert(got.toSeq == Seq(
@@ -358,10 +368,8 @@ class StreamingIngestSpec extends AnyFunSuite {
     val lake = s"$work/lake"
     val stream = MemoryStream[(Long, String, Long, String)]
     val updates = stream.toDF().toDF("id", "day", "seq", "payload")
-    def startQ() = StreamingIngest.upsertStream(
-      updates, lake, keyCols = Seq("id"), partitionCol = "day",
-      seqCol = "seq", checkpointDir = s"$work/chk")
-    def state() = spark.read.parquet(lake)
+    def startQ() = keyedUpsert(updates, lake, s"$work/chk")
+    def state() = graft.sources.CommitLog.read(spark, lake)
       .select($"id", $"day", $"seq", $"payload")
       .as[(Long, String, Long, String)].collect().sortBy(_._1).toSeq
     var q = startQ()
@@ -373,11 +381,12 @@ class StreamingIngestSpec extends AnyFunSuite {
       stream.addData((1L, "d1", 3L, "v3"), (2L, "d1", 1L, "b"))
       q.processAllAvailable()
       assert(state() == Seq((1L, "d1", 5L, "v5"), (2L, "d1", 1L, "b")))
+      val before = graft.sources.CommitLog.latest(spark, lake).get.version
       // crash window: the upsert for batch 1 committed but the streaming
       // commit log never recorded it. Simulate by dropping the commit
       // record and restarting — Spark replays batch 1 from the offset log;
-      // the _graft_commits ledger already has it, so the replay is a no-op
-      // (regardless of the batch's seq values).
+      // the query's ledger entry in the table log already has it, so the
+      // replay is a no-op (regardless of the batch's seq values).
       q.stop()
       assert(Files.deleteIfExists(java.nio.file.Paths.get(s"$work/chk/commits/1")),
         "streaming commit-log layout changed; replay simulation broken")
@@ -387,9 +396,8 @@ class StreamingIngestSpec extends AnyFunSuite {
       q = startQ()
       q.processAllAvailable()
       assert(state() == Seq((1L, "d1", 5L, "v5"), (2L, "d1", 1L, "b")))
-      val markers = new java.io.File(s"$lake/_graft_commits").list()
-        .filterNot(_.startsWith(".")).sorted.toSeq
-      assert(markers == Seq("0", "1"), s"ledger markers: $markers")
+      assert(graft.sources.CommitLog.latest(spark, lake).get.version == before,
+        "a replayed batch minted a new log version")
     } finally q.stop()
   }
 
@@ -416,9 +424,11 @@ class StreamingIngestSpec extends AnyFunSuite {
       stream.addData((1L, "d1", 1L, "stale"), (2L, "d2", 1L, "b"))
       q.processAllAvailable()
       assert(state() == Seq((1L, "d1", 2L, "v2"), (2L, "d2", 1L, "b")))
-      // the exactly-once ledger is IN the commit, not a sidecar
+      // the exactly-once ledger is IN the commit, not a sidecar: the
+      // query's own entry records its last batch
       val snap = CommitLog.latest(spark, lake).get
-      assert(snap.batches == Seq(0L, 1L), s"ledger: ${snap.batches}")
+      assert(snap.props.get(s"graft.txn.${q.id}").contains("1"),
+        s"ledger: ${snap.props}")
       assert(!new java.io.File(s"$lake/_graft_commits").exists(),
         "logged sink must not write the legacy marker sidecar")
       // crash window: drop Spark's OWN commit record for batch 1 so the
