@@ -48,14 +48,13 @@ object Verify {
       case None => base
     }
     // Per-query sidecar diagnostics (round-9 verdict ask): every
-    // bracket-tagged runtime line ([matview]/[commitlog]/[lake-mirror]/
-    // [upsert-stream-*]...) printed while a query runs is captured into
+    // bracket-tagged runtime line ([lake]/[lake-sql]/[zorder]...)
+    // printed while a query runs is captured into
     // <name>.diag.json beside its parquet, with wall ms, written row
     // count (parquet-footer count — no data scan), and any error. The
-    // NEXT unexplained driver discrepancy is then attributable from the
-    // driver's own artifact: route decisions, lake versions, and fixture
-    // sizes ride along. Sidecars are plain files, so the driver's
-    // directory-per-query compare is unaffected.
+    // NEXT unexplained discrepancy is then attributable from the run's
+    // own artifact: lake versions and fixture sizes ride along. Sidecars
+    // are plain files, so a directory-per-query compare is unaffected.
     val diagBuf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def tee(base: java.io.PrintStream): java.io.PrintStream =
       new java.io.PrintStream(base, true) {

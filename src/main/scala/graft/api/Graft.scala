@@ -527,9 +527,10 @@ object Graft {
       CommitLog.addColumns(spark, dir, newCols)
       ()
     }
-    /** Pure-append commit: new files only, no partition rewrite. */
-    def append(rows: DataFrame, batchId: Option[Long] = None): Unit = {
-      CommitLog.append(spark, rows, dir, batchId)
+    /** Pure-append commit: new files only, no partition rewrite. With
+      * `txn = (appId, version)` a replay is a no-op. */
+    def append(rows: DataFrame, txn: Option[(String, Long)] = None): Unit = {
+      CommitLog.append(spark, rows, dir, txn)
       ()
     }
     def vacuum(keepLast: Int = 1): Seq[String] =

@@ -168,10 +168,11 @@ object MatViewCatalog {
   *    read ([[CommitLog.readAt]]), a raw directory read (which would
   *    see pre-vacuum files the log no longer references), or any
   *    manually assembled file list therefore never matches.
-  *  - '''Freshness''': the view's refresh ledger carries the base
-  *    version it refreshed to ([[IncrementalView]]'s `batchId`
-  *    convention); it must be ≥ the scanned snapshot's version. A stale
-  *    view silently costs the rewrite, never correctness.
+  *  - '''Freshness''': the view's own `graft.txn.view:<base>`
+  *    entry carries the base version it refreshed to
+  *    ([[IncrementalView.refreshedTo]]); it must match the scanned
+  *    snapshot's version. A stale view silently costs the rewrite,
+  *    never correctness.
   *  - '''Containment''': grouping expressions are bare base columns and
   *    a subset of the view's grouping (rollup to a COARSER grouping
   *    re-aggregates the view's partials — sound because view groups
@@ -207,15 +208,15 @@ class RewriteAggregateOnView(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Every routing decision is OBSERVABLE: one stderr line per rewrite
-    * records base dir, base version, and the ledger version served —
+  /** Every routing decision is OBSERVABLE: one INFO log line per rewrite
+    * records base dir, base version, and the refreshed-to version served —
     * so a wrong-answer report from a driver/CI run pinpoints whether
     * the query was answered from the view (and at which versions) or
     * fell through to the base scan, without re-running anything. */
   private def logRouted(base: String, baseVersion: Long,
       refreshedTo: Long, viewDir: String): Unit =
-    System.err.println(s"[matview] routed aggregate over $base " +
-      s"(base v$baseVersion, view $viewDir refreshed-to v$refreshedTo)")
+    logInfo(s"routed aggregate over $base (base v$baseVersion, view " +
+      s"$viewDir refreshed-to v$refreshedTo)")
 
   private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     val (scan, conds) = peel(agg.child, Nil).getOrElse(return None)
@@ -269,11 +270,12 @@ class RewriteAggregateOnView(spark: SparkSession) extends Rule[LogicalPlan] {
     // unless the gap holds no data commits. Props-only commits and
     // compactions move no rows in either direction (partsBetween
     // reports them as touching nothing).
-    // ONE view snapshot read serves both the ledger check and the
+    // ONE view snapshot read serves both the cursor check and the
     // content below — re-resolving "latest" twice would let a refresh
-    // landing in between serve content newer than the checked ledger
+    // landing in between serve content newer than the checked cursor
     val viewSnap = CommitLog.latest(spark, d.viewDir).getOrElse(return None)
-    val refreshedTo = viewSnap.batches.maxOption.getOrElse(return None)
+    val refreshedTo =
+      IncrementalView.refreshedTo(viewSnap, d).getOrElse(return None)
     // the gap probe reads one version file per version — bound it so a
     // long-stale (or far-ahead) view costs a cheap decline, not a
     // planning-time walk
@@ -285,7 +287,7 @@ class RewriteAggregateOnView(spark: SparkSession) extends Rule[LogicalPlan] {
     if (refreshedTo > baseVersion &&
       !gapIsDataFree(baseVersion, refreshedTo)) return None
 
-    // the view's analyzed plan, PINNED to the snapshot whose ledger was
+    // the view's analyzed plan, PINNED to the snapshot whose cursor was
     // just checked (fresh exprIds per rewrite — no clashes). A vacuum
     // racing this planning could drop the pinned version — decline, not
     // fail the query

@@ -643,8 +643,9 @@ object EngineQueries {
   // The versioned commit log (graft.sources.CommitLog) exercised as a
   // full lifecycle whose FINAL STATE is DuckDB-oracle-checkable: seed a
   // flag-partitioned lineitem slice, init the log with l_orderkey stats,
-  // upsert a keyed quantity bump as batch 1, REPLAY batch 1 (must be a
-  // no-op — the exactly-once ledger rides the commit), copy-on-write
+  // upsert a keyed quantity bump as version 1 of a fixed writer id,
+  // REPLAY it (must be a no-op — the writer's txn entry rides the
+  // commit), copy-on-write
   // compact, then answer a range query through the committed zone-map
   // stats. Like q137, the lifecycle is the fixture (built once per
   // session); the timed query is the pruned scan + aggregate.
@@ -663,9 +664,9 @@ object EngineQueries {
         .withColumn("l_quantity", col("l_quantity") + lit(5.0))
       def applyBatch(): Unit = graft.sources.CommitLog.upsert(
         s, updates, lake, Seq("l_orderkey", "l_linenumber"), "flag",
-        batchId = Some(1L))
+        txn = Some(("q140", 1L)))
       applyBatch()
-      applyBatch() // at-least-once replay: committed batch id → no-op
+      applyBatch() // at-least-once replay: committed version → no-op
       graft.sources.CommitLog.compact(s, lake, targetPartitions = 2)
       sys.addShutdownHook {
         def rm(f: java.io.File): Unit = {
@@ -1430,8 +1431,8 @@ object EngineQueries {
   // source's PRE-mutation cut, then the whole mutation range's CDF
   // (q179's lake: COW delete + UPDATE + append) is applied as ONE
   // atomic merge (inserts/postimages upsert, deletes tombstone via the
-  // clause-only __cdc_delete flag, batchId = source version for
-  // exactly-once replay). The DuckDB oracle recomputes the source's
+  // clause-only __cdc_delete flag, txn = the follow id at the source
+  // version for exactly-once replay). The DuckDB oracle recomputes the source's
   // post state from first principles and buckets it — a hash-match
   // proves the replica converged row for row under re-partitioning.
   private val q180Lakes = scala.collection.concurrent.TrieMap[String, String]()
@@ -1444,7 +1445,8 @@ object EngineQueries {
         df.withColumn("bucket", pmod(col("o_orderkey"), lit(4L)))
       derive(graft.sources.CommitLog.readAt(s, srcLake, 1L))
         .write.partitionBy("bucket").parquet(rep)
-      graft.sources.CommitLog.init(s, rep, initBatches = Seq(1L))
+      graft.sources.CommitLog.init(s, rep,
+        txn = Some((graft.streaming.LakeFollow.followAppId(srcLake), 1L)))
       graft.streaming.LakeFollow.applyCdf(s, srcLake, rep,
         Seq("o_orderkey"), "bucket", derive)
       sys.addShutdownHook {
@@ -2617,8 +2619,9 @@ object EngineQueries {
   // stream attaches, and TWO source commits land while it runs — a keyed
   // price-doubling upsert and a predicate delete. Each observed version
   // range moves only the touched partitions' post-image into the replica
-  // via replacePartitions with batchId = source version (the replica's
-  // own ledger is the resume cursor AND the replay guard — LakeFollowSpec
+  // via replacePartitions with txn = (follow id, source version) (the
+  // replica's own follow entry is the resume cursor AND the replay
+  // guard — LakeFollowSpec
   // pins convergence, replay no-op, and crash-gap resume). A THIRD
   // commit is a merge-on-read delete: it adds no files, only a deletion
   // vector, so the follower only converges because partsBetween surfaces
@@ -2653,8 +2656,10 @@ object EngineQueries {
           col("o_custkey") % 10 === 7)
         val want = graft.sources.CommitLog.latest(s, src).get.version
         val t0 = System.currentTimeMillis()
+        val follow = graft.streaming.LakeFollow.followAppId(src)
         while (graft.sources.CommitLog.latest(s, dst)
-            .flatMap(_.batches.maxOption).getOrElse(-1L) < want) {
+            .flatMap(graft.sources.CommitLog.txnVersion(_, follow))
+            .getOrElse(-1L) < want) {
           require(System.currentTimeMillis() - t0 < 120000,
             s"q168 mirror did not converge to source v$want")
           Thread.sleep(100)

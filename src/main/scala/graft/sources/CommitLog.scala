@@ -29,12 +29,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    loudly on the second create — the single-writer contract is now
   *    ENFORCED, not just documented.
   *  - The version file carries everything that must change atomically
-  *    with the data: the live file list, the set of committed streaming
-  *    batch ids (the exactly-once ledger rides the commit — a replayed
-  *    batch id is a no-op), and a per-version zone-map stats snapshot
-  *    (`manifest`). Because the stats are pinned to the version they
-  *    describe, the skipping-manifest STALENESS failure mode is gone by
-  *    construction — [[scanBox]] needs no freshness check at all.
+  *    with the data: the live file list, the table properties — among
+  *    them each idempotent writer's exactly-once entry
+  *    `graft.txn.<appId> = <last committed version>` (the table's ONE
+  *    replay identity, Delta's `txn` action: the entry rides the commit,
+  *    so a replayed `(appId, version)` is a no-op) — and a per-version
+  *    zone-map stats snapshot (`manifest`). Because the stats are
+  *    pinned to the version they describe, the skipping-manifest
+  *    STALENESS failure mode is gone by construction — [[scanBox]]
+  *    needs no freshness check at all.
   *  - Readers resolve the latest version file and read exactly its file
   *    list (`basePath` keeps hive partition columns). An uncommitted
   *    data file (a crashed writer's residue) is invisible: it is on
@@ -78,7 +81,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object CommitLog extends org.apache.spark.internal.Logging {
   import LakeCommit.{Abort, Rederive, assertUnfenced, bump, casWrite,
-    replayed, txnKey}
+    replayed}
 
   private val LogDirName = "_graft_log"
   private val DefaultPartition = "__HIVE_DEFAULT_PARTITION__"
@@ -154,20 +157,23 @@ object CommitLog extends org.apache.spark.internal.Logging {
     s"${dataDir(target)}/$LogDirName/$rel"
 
   /** One committed version: the live file list (dir-relative), the
-    * committed streaming batch ids, the zone-map stats snapshot
-    * (relative path of a parquet directory under the log, if stats
-    * columns were declared at [[init]]), and the operation that produced
-    * it (`init` | `upsert` | `compact` — [[changesBetween]] uses this to
-    * tell data commits from pure rewrites). */
+    * zone-map stats snapshot (relative path of a parquet directory under
+    * the log, if stats columns were declared at [[init]]), the
+    * operation that produced it (`init` | `upsert` | `compact` —
+    * [[changesBetween]] uses this to tell data commits from pure
+    * rewrites), and the table properties, which carry each idempotent
+    * writer's `graft.txn.<appId>` entry ([[txnVersion]]). Version files
+    * written before the entries became the only replay identity also
+    * carry a shared batch-id set and its compaction floor; they still
+    * parse, and those ids are ignored. */
   final case class Snapshot(
-      version: Long, files: Seq[String], batches: Seq[Long],
+      version: Long, files: Seq[String],
       statsCols: Seq[String], manifest: Option[String], op: String,
       sketchCols: Seq[String] = Nil, schemaJson: Option[String] = None,
       bloomCols: Seq[String] = Nil, bloomExpect: Long = 1L << 20,
       props: Map[String, String] = Map.empty,
       partCols: Seq[String] = Nil,
       committedAt: Long = 0L,
-      batchFloor: Long = -1L,
       thetaCols: Seq[String] = Nil,
       thetaLgK: Int = 14,
       dvs: Seq[String] = Nil,
@@ -181,14 +187,16 @@ object CommitLog extends org.apache.spark.internal.Logging {
         * resurrecting the dropped column's values from old files. */
       retired: Seq[String] = Nil)
 
-  /** How many batch ids a version file carries verbatim. Streaming
-    * batch ids are monotone per writer, so the exactly-once ledger does
-    * not need every id ever: once the list exceeds this cap the OLDEST
-    * ids compact into `batchFloor` — "everything at or below this id is
-    * committed" — keeping the version file bounded (a ledger that
+  /** How many batch ids a [[LakeTxn]] family manifest carries
+    * verbatim. Family batch ids are monotone, so its ledger does not
+    * need every id ever: once the list exceeds this cap the OLDEST ids
+    * compact into the manifest's `floor` — "everything at or below this
+    * id is committed" — keeping the manifest bounded (a ledger that
     * republished its whole history made per-commit metadata O(n) and
-    * total log size O(n²) for a long-lived streaming sink). `var` only
-    * so specs can exercise the compaction without 10k commits. */
+    * total log size O(n²) for a long-lived writer). Per-table replay
+    * needs no cap: it is one `graft.txn.<appId>` entry per writer.
+    * `var` only so specs can exercise the compaction without 10k
+    * commits. */
   @volatile private[sources] var LedgerKeep: Int = 10000
 
   private def logPath(target: String) = splitBranch(target) match {
@@ -207,12 +215,12 @@ object CommitLog extends org.apache.spark.internal.Logging {
     import org.json4s.jackson.JsonMethods
     JsonMethods.compact(JsonMethods.render(
       ("version" -> s.version) ~ ("files" -> s.files) ~
-        ("batches" -> s.batches) ~ ("statsCols" -> s.statsCols) ~
+        ("statsCols" -> s.statsCols) ~
         ("manifest" -> s.manifest) ~ ("op" -> s.op) ~
         ("sketchCols" -> s.sketchCols) ~ ("schemaJson" -> s.schemaJson) ~
         ("bloomCols" -> s.bloomCols) ~ ("bloomExpect" -> s.bloomExpect) ~
         ("props" -> s.props) ~ ("partCols" -> s.partCols) ~
-        ("committedAt" -> s.committedAt) ~ ("batchFloor" -> s.batchFloor) ~
+        ("committedAt" -> s.committedAt) ~
         ("thetaCols" -> s.thetaCols) ~ ("thetaLgK" -> s.thetaLgK) ~
         ("dvs" -> s.dvs) ~ ("physNames" -> s.physNames) ~
         ("retired" -> s.retired)))
@@ -226,7 +234,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
     Snapshot(
       (j \ "version").extract[Long],
       (j \ "files").extract[Seq[String]],
-      (j \ "batches").extract[Seq[Long]],
       (j \ "statsCols").extract[Seq[String]],
       (j \ "manifest").extractOpt[String],
       (j \ "op").extractOpt[String].getOrElse("unknown"),
@@ -237,7 +244,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
       (j \ "props").extractOpt[Map[String, String]].getOrElse(Map.empty),
       (j \ "partCols").extractOpt[Seq[String]].getOrElse(Nil),
       (j \ "committedAt").extractOpt[Long].getOrElse(0L),
-      (j \ "batchFloor").extractOpt[Long].getOrElse(-1L),
       (j \ "thetaCols").extractOpt[Seq[String]].getOrElse(Nil),
       (j \ "thetaLgK").extractOpt[Int].getOrElse(14),
       (j \ "dvs").extractOpt[Seq[String]].getOrElse(Nil),
@@ -590,8 +596,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
   def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
     readAt(spark, dir, versionAsOf(spark, dir, tsMillis))
 
-  /** The committed metadata of version `v` (file list, ledger, props…) —
-    * the snapshot-typed sibling of [[readAt]]. */
+  /** The committed metadata of version `v` (file list, props…) — the
+    * snapshot-typed sibling of [[readAt]]. */
   def snapshotAt(spark: SparkSession, dir: String, v: Long): Snapshot = {
     val f = hadoopFs(spark, dir)
     val p = versionFile(dir, v)
@@ -853,14 +859,14 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * replacement rows ends up empty). The primitive behind
     * [[IncrementalView]] refreshes — "recompute these slices" — and the
     * natural way to re-materialize any partition-aligned derivation.
-    * Same conflict unit, rebase loop, ledger semantics, and additive
+    * Same conflict unit, rebase loop, `txn` identity, and additive
     * schema rules as [[upsert]]; `replacement` rows outside `parts` are
     * rejected loudly (they would silently vanish under the replace). */
   def replacePartitions(spark: SparkSession, replacement: DataFrame,
       dir: String, partitionCol: String, parts: Seq[Any],
-      batchId: Option[Long] = None): Snapshot =
+      txn: Option[(String, Long)] = None): Snapshot =
     replacePartitionTuples(spark, replacement, dir, Seq(partitionCol),
-      parts.map(Seq(_)), batchId)
+      parts.map(Seq(_)), txn)
 
   /** Multi-column generalization of [[replacePartitions]]: each tuple
     * names one partition of the nested hive layout
@@ -872,14 +878,14 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * partition overwrite (`INSERT OVERWRITE ... PARTITION (a, b)`). */
   def replacePartitionTuples(spark: SparkSession, replacement: DataFrame,
       dir: String, partitionCols: Seq[String], tuples: Seq[Seq[Any]],
-      batchId: Option[Long] = None): Snapshot = {
+      txn: Option[(String, Long)] = None): Snapshot = {
     require(partitionCols.nonEmpty,
       "replacePartitionTuples needs at least one partition column")
     require(tuples.forall(_.length == partitionCols.length),
       s"each tuple must carry one value per partition column " +
         s"(${partitionCols.mkString(", ")})")
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, batchId)) return s
+    if (replayed(s, dir, txn)) return s
     val dirs = tuples.map(t =>
       partitionCols.zip(t).map { case (c, v) => partDirOf(c, v) }
         .mkString("/")).toSet
@@ -895,8 +901,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
     val newRels = stageWrite(spark, dir, replacement, partitionCols,
       s.physNames)
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, dirs, removed.toSet, newRels, batchId,
-        Some(replacement.schema.json)),
+      StagedUpsert(s, dirs, removed.toSet, newRels,
+        Some(replacement.schema.json), txn = txn),
       "replace")
   }
 
@@ -1142,13 +1148,14 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * zone-map stats snapshot for [[scanBox]]/[[scanRange]]; with
     * `sketchCols`, per-file KLL(200) quantile sketches ride the same
     * manifest so [[quantiles]] answers percentile queries from the
-    * metadata plane alone. */
+    * metadata plane alone. With `txn`, version 1 records that writer
+    * identity (a derived table's cursor from birth). */
   def init(spark: SparkSession, dir: String,
       statsCols: Seq[String] = Nil,
       sketchCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomExpect: Long = 1L << 20,
-      initBatches: Seq[Long] = Nil,
+      txn: Option[(String, Long)] = None,
       props: Map[String, String] = Map.empty,
       thetaCols: Seq[String] = Nil,
       thetaLgK: Int = 14,
@@ -1166,14 +1173,15 @@ object CommitLog extends org.apache.spark.internal.Logging {
     val schema = spark.read.option("basePath", dataDir(dir))
       .option("mergeSchema", "true")
       .parquet(absolute(dir, rels): _*).schema.json
-    val seed = Snapshot(0L, Nil, Nil, statsCols, None, "init", sketchCols,
+    val seed = Snapshot(0L, Nil, statsCols, None, "init", sketchCols,
       None, bloomCols, bloomExpect, thetaCols = thetaCols,
       thetaLgK = thetaLgK)
     // props ride the FIRST commit: a derived table whose rows and summary
     // properties must exist together (an index's corpus globals) gets
     // both in one crash-atomic step instead of init + setProps
-    LakeCommit.run(spark, dir, "init", Abort, from = Some(seed)) { s =>
-      Some(LakeCommit.build(spark, dir, s, rels, rels, initBatches, "init",
+    LakeCommit.run(spark, dir, "init", Abort, from = Some(seed),
+      txn = txn) { s =>
+      Some(LakeCommit.build(spark, dir, s, rels, rels, "init",
         Some(schema), props))
     }
   }
@@ -1201,7 +1209,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
     val f = hadoopFs(spark, dir)
     require(versionNumbers(f, dir).isEmpty, s"$dir already has a commit log")
     f.mkdirs(logPath(dir))
-    val seed = Snapshot(0L, Nil, Nil, statsCols, None, "create",
+    val seed = Snapshot(0L, Nil, statsCols, None, "create",
       schemaJson = Some(schema.json), props = props, partCols = partCols)
     LakeCommit.run(spark, dir, "create", Abort, from = Some(seed)) { s =>
       Some(bump(s, "create"))
@@ -1223,7 +1231,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * writer rewrote). */
   final case class StagedUpsert(
       base: Snapshot, touchedParts: Set[String],
-      removed: Set[String], added: Seq[String], batchId: Option[Long],
+      removed: Set[String], added: Seq[String],
       schemaJson: Option[String] = None,
       propsDelta: Map[String, String] = Map.empty,
       dvAppend: Seq[String] = Nil,
@@ -1232,10 +1240,10 @@ object CommitLog extends org.apache.spark.internal.Logging {
         * filtered file carried by `dvAppend`) — the partition-scoped
         * compaction's DV maintenance. */
       dvDrop: Set[String] = Set.empty,
-      /** Per-QUERY sink transaction identity `(queryId, batchId)` —
-        * checked against the props ledger on every rebase attempt, so a
-        * concurrently-committed replay turns this commit into a no-op
-        * (the mid-flight mirror of [[LakeCommit.txnDone]]). */
+      /** The writer's idempotent-write identity `(appId, version)` —
+        * checked on every rebase attempt, so a concurrently-committed
+        * replay turns this commit into a no-op (the mid-flight mirror
+        * of [[txnDone]]), and recorded by the commit. */
       txn: Option[(String, Long)] = None)
 
   /** Partition directory of a dir-relative data file ("" for an
@@ -1413,15 +1421,15 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * the `key=value` components of the snapshot's file list, no
     * directory listing — and writes the merged slice as new files.
     * Nothing is visible until [[commitStaged]]. Returns None when
-    * `batchId` is already in the ledger (an at-least-once replay — the
-    * whole upsert is a no-op). */
+    * `txn` is already recorded (an at-least-once replay — the whole
+    * upsert is a no-op). */
   def stageUpsert(spark: SparkSession, updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String,
       seqCol: Option[String] = None,
-      batchId: Option[Long] = None): Option[StagedUpsert] = {
+      txn: Option[(String, Long)] = None): Option[StagedUpsert] = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, batchId)) return None
+    if (replayed(s, dir, txn)) return None
     val parts = updates.select(col(partitionCol)).distinct().collect()
       .map(_.get(0)).toSeq // one value per touched partition — small
     val partDirs = parts.map(partDirOf(partitionCol, _)).toSet
@@ -1441,8 +1449,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
       }
     val newRels = stageWrite(spark, dir, merged, Seq(partitionCol),
       s.physNames)
-    Some(StagedUpsert(s, partDirs, touched.toSet, newRels, batchId,
-      Some(updates.schema.json)))
+    Some(StagedUpsert(s, partDirs, touched.toSet, newRels,
+      Some(updates.schema.json), txn = txn))
   }
 
   /** Commit a staged upsert through [[LakeCommit]]'s REBASE rule: on a
@@ -1451,9 +1459,9 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * republish our files on top of the winner's snapshot and retry;
     * overlapping (or a concurrent compaction, which rewrites every
     * partition) → a typed [[WriteConflict]] with the log intact — re-run
-    * the upsert from the fresh snapshot. A `batchId` that appears in the
-    * ledger mid-flight (another worker committed the same micro-batch)
-    * turns the commit into a no-op instead of a double-apply. */
+    * the upsert from the fresh snapshot. A `txn` that is recorded
+    * mid-flight (another worker committed the same micro-batch) turns
+    * the commit into a no-op instead of a double-apply. */
   def commitStaged(spark: SparkSession, dir: String, staged: StagedUpsert,
       maxRetries: Int = 10): Snapshot =
     LakeCommit.rebase(spark, dir, staged, "upsert", maxRetries)
@@ -1467,21 +1475,18 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * `removed = ∅, touchedParts = ∅` case — a racing delete/upsert/
     * compact serializes BEFORE the append, which is exactly SQL INSERT's
     * contract). Key uniqueness is the caller's responsibility, as in SQL
-    * INSERT — duplicates land as rows. With `batchId` the commit rides
-    * the same exactly-once ledger as [[upsert]]. The change feed sees an
-    * append EXACTLY: its added files are the delta, not a post-image
-    * superset. */
+    * INSERT — duplicates land as rows. The change feed sees an append
+    * EXACTLY: its added files are the delta, not a post-image superset.
+    * `txn` is the IDEMPOTENT-WRITE identity `(appId, version)` (Delta's
+    * `txnAppId`/`txnVersion` shape) every verb takes: a replay whose
+    * version is at or below the app's recorded high-water mark is a
+    * no-op — the manual-retry / foreachBatch-restart guard, riding the
+    * same per-app entry as the streaming sink and checked again on
+    * every rebase attempt. */
   def append(spark: SparkSession, rows: DataFrame, dir: String,
-      batchId: Option[Long] = None,
-      /** IDEMPOTENT-WRITE identity `(appId, version)` (Delta's
-        * `txnAppId`/`txnVersion` shape): a replay whose version is at
-        * or below the app's recorded high-water mark is a no-op — the
-        * manual-retry / foreachBatch-restart guard, riding the same
-        * per-app ledger as the streaming sink and checked again on
-        * every rebase attempt. */
       txn: Option[(String, Long)] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, batchId, txn)) return s
+    if (replayed(s, dir, txn)) return s
     checkSchemaCompatible(s, rows, dir)
     val partCols = partColsOf(s)
     val missingP = partCols.filterNot(rows.columns.contains)
@@ -1491,10 +1496,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
     val rels = stageWrite(spark, dir, rows, partCols, s.physNames)
     if (rels.isEmpty) return s
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, Set.empty, Set.empty, rels, batchId,
-        Some(rows.schema.json),
-        propsDelta = txn.map { case (q, b) =>
-          Map(txnKey(q) -> b.toString) }.getOrElse(Map.empty),
+      StagedUpsert(s, Set.empty, Set.empty, rels, Some(rows.schema.json),
         txn = txn),
       "append")
   }
@@ -1502,14 +1504,13 @@ object CommitLog extends org.apache.spark.internal.Logging {
   /** Keyed copy-on-write upsert: [[stageUpsert]] + [[commitStaged]].
     * Safe under concurrent writers on disjoint partitions (the loser of
     * the version race rebases); overlapping writers fail loudly. With
-    * `batchId`, the commit doubles as the streaming exactly-once ledger:
-    * an id already in the log makes the whole call a no-op, so an
-    * at-least-once replay cannot double-apply. */
+    * `txn`, an identity already recorded makes the whole call a no-op,
+    * so an at-least-once replay cannot double-apply. */
   def upsert(spark: SparkSession, updates: DataFrame, dir: String,
       keyCols: Seq[String], partitionCol: String,
       seqCol: Option[String] = None,
-      batchId: Option[Long] = None): Snapshot =
-    stageUpsert(spark, updates, dir, keyCols, partitionCol, seqCol, batchId)
+      txn: Option[(String, Long)] = None): Snapshot =
+    stageUpsert(spark, updates, dir, keyCols, partitionCol, seqCol, txn)
       .map(commitStaged(spark, dir, _))
       .getOrElse(mustLatest(spark, dir))
 
@@ -1530,20 +1531,20 @@ object CommitLog extends org.apache.spark.internal.Logging {
       case None =>
         require(keyCols.nonEmpty, "upsert needs at least one key column")
         bootstrap(spark, dir, newestPerKey(updates, keyCols, seqCol),
-          Seq(partitionCol), statsCols, Map.empty)
+          Seq(partitionCol), statsCols, None)
     }
 
   /** The ONE create-from-data path: a directory with no commit log
     * starts from `rows` — version 1 = the rows, with `statsCols`
-    * zone-map stats from birth and `props` (a sink's ledger entry)
-    * riding the same commit, so a crashed first write left nothing
+    * zone-map stats from birth and `txn` (a sink's entry) riding the
+    * same commit, so a crashed first write left nothing
     * visible and replays cleanly. The create is a CAS commit: two racing
     * creators resolve to one winner, the loser gets [[CreateRace]] and
     * its staged files are vacuum garbage. Empty `rows` are refused —
     * writers skip empty batches until the first row arrives. */
   private def bootstrap(spark: SparkSession, dir: String, rows: DataFrame,
       partCols: Seq[String], statsCols: Seq[String],
-      props: Map[String, String]): Snapshot = {
+      txn: Option[(String, Long)]): Snapshot = {
     hadoopFs(spark, dir).mkdirs(logPath(dir))
     val rels = stageWrite(spark, dir, rows, partCols)
     if (rels.isEmpty)
@@ -1551,48 +1552,62 @@ object CommitLog extends org.apache.spark.internal.Logging {
         s"cannot bootstrap $dir from an empty batch — skip empty batches " +
           "until the first row arrives")
     LakeCommit.run(spark, dir, "init", Abort,
-      from = Some(Snapshot(0L, Nil, Nil, statsCols, None, "init"))) { s =>
-      Some(LakeCommit.build(spark, dir, s, rels, rels, Nil, "init",
-        Some(rows.schema.json), props))
+      from = Some(Snapshot(0L, Nil, statsCols, None, "init")), txn = txn) {
+      s => Some(LakeCommit.build(spark, dir, s, rels, rels, "init",
+        Some(rows.schema.json)))
     }
   }
 
-  // ----------------------------------------------- streaming-sink txns
-  // Per-QUERY transaction ledger for the native streaming sink
-  // (`df.writeStream.format("graft-lake")` / `.toTable("gcat.db.t")`):
-  // the table property `graft.txn.<queryId> = <last committed batch id>`
-  // ([[LakeCommit.txnKey]]) rides each sink commit atomically with its
-  // data. Micro-batch ids are strictly monotone within one streaming
-  // query and sink commits are serialized by the log, so `batchId <=
-  // recorded` IS the replay test ([[LakeCommit.txnDone]]) — the
-  // `(appId, version)` idempotence shape of Delta's txn action. Unlike
-  // the single-sequence `batches` ledger (which assumes ONE writer
-  // stream per table), the query id namespaces the entry: a RE-CREATED
-  // query (fresh checkpoint → batch ids restart at 0) gets a fresh
-  // ledger instead of silently skipping its first batches, and two
-  // queries feeding one table replay independently. One ~60-byte prop
-  // per query ever to write the table — planning metadata, not
-  // data-plane state.
+  // --------------------------------------------- exactly-once identity
+  // The table's ONE replay identity: each idempotent writer names its
+  // id space (`appId`) and its writes carry monotone versions; the
+  // table property `graft.txn.<appId> = <last committed version>`
+  // rides each commit atomically with its data ([[LakeCommit.run]]
+  // records it), so `version <= recorded` IS the replay test
+  // ([[txnDone]]) — the `(appId, version)` idempotence shape of Delta's
+  // txn action. App ids in use: the streaming sink's query id (a
+  // RE-CREATED query — fresh checkpoint, ids restart at 0 — gets a
+  // fresh entry), a [[LakeTxn]] family's `laketxn:<dir>`, a mirror's
+  // `follow:<source dir>` and an incremental view's `view:<base dir>`
+  // (their version is the source version applied, so the entry is also
+  // their resume cursor), and any caller's own `txnAppId`. Writers with
+  // overlapping numbers never skip each other. One ~60-byte prop per
+  // writer ever to write the table — planning metadata, not data-plane
+  // state.
 
-  /** Ledger-entry-ONLY commit: record `(queryId, batchId)` as done with
-    * NO file/dv/manifest churn — the setProps shape, NOT
+  private[sources] val TxnPrefix = "graft.txn."
+
+  private[sources] def txnProps(txn: Option[(String, Long)])
+      : Map[String, String] =
+    txn.map { case (a, v) => (TxnPrefix + a) -> v.toString }.toMap
+
+  /** The last version `appId` committed to the table at `s`, if any —
+    * the writer's resume cursor. */
+  def txnVersion(s: Snapshot, appId: String): Option[Long] =
+    s.props.get(TxnPrefix + appId).map(_.toLong)
+
+  /** The high-water rule: is `(appId, v)` already committed at `s`? */
+  private[sources] def txnDone(s: Snapshot, appId: String,
+      v: Long): Boolean =
+    txnVersion(s, appId).exists(_ >= v)
+
+  /** Identity-ONLY commit: record `txn = (appId, version)` as done with NO
+    * file/dv/manifest churn — the setProps shape, NOT
     * [[LakeCommit.build]], which would reread and rewrite the table's
     * entire stats manifest to publish a ~60-byte prop. Used when a
-    * txn-keyed verb matched nothing ([[delete]]/[[replaceWhere]] with an
-    * all-miss predicate): the identity must still land so a replay
-    * no-ops by LEDGER, but the commit is pure metadata at any table
-    * size. */
-  private def ledgerOnlyCommit(spark: SparkSession, dir: String,
-      queryId: String, batchId: Long, op: String): Snapshot =
+    * txn-keyed write has nothing to write: [[delete]]/[[replaceWhere]]
+    * with an all-miss predicate, or a derived table whose source range
+    * moved no rows (a mirror or view catching up past pure
+    * compactions). The identity must still land so a replay no-ops and
+    * the cursor advances; a lost race re-derives. */
+  def ledgerOnlyCommit(spark: SparkSession, dir: String,
+      txn: (String, Long), op: String): Snapshot =
     LakeCommit.run(spark, dir, s"$op ledger commit", Rederive,
-      txn = Some((queryId, batchId))) { s =>
-      Some(bump(s, op).copy(
-        props = s.props + (txnKey(queryId) -> batchId.toString)))
-    }
+      txn = Some(txn)) { s => Some(bump(s, op)) }
 
   /** The sink verbs' shared entry. A directory with no commit log is
-    * bootstrapped FROM `rows` ([[bootstrap]], with the txn ledger entry
-    * riding version 1; `rows` is by-name, so an existing table never
+    * bootstrapped FROM `rows` ([[bootstrap]], with the txn entry riding
+    * version 1; `rows` is by-name, so an existing table never
     * plans the bootstrap frame). Two streams bootstrapping one target:
     * the loser of the create race lands ON TOP of the winner's table —
     * the query must not die over a benign race. A replayed
@@ -1605,12 +1620,12 @@ object CommitLog extends org.apache.spark.internal.Logging {
     latest(spark, dir) match {
       case None =>
         try bootstrap(spark, dir, rows, bootstrapPartCols, statsCols,
-          Map(txnKey(queryId) -> batchId.toString))
+          Some((queryId, batchId)))
         catch { case _: CreateRace =>
           sinkWrite(spark, rows, dir, bootstrapPartCols, queryId, batchId,
             statsCols)(onTable)
         }
-      case Some(s0) if replayed(s0, dir, txn = Some((queryId, batchId))) => s0
+      case Some(s0) if replayed(s0, dir, Some((queryId, batchId))) => s0
       case Some(s0) => onTable(s0)
     }
 
@@ -1632,9 +1647,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       val rels = stageWrite(spark, dir, rows, partCols, s0.physNames)
       if (rels.isEmpty) s0 // empty batch: nothing to make exactly-once
       else LakeCommit.rebase(spark, dir,
-        StagedUpsert(s0, Set.empty, Set.empty, rels, None,
-          Some(rows.schema.json),
-          Map(txnKey(queryId) -> batchId.toString),
+        StagedUpsert(s0, Set.empty, Set.empty, rels, Some(rows.schema.json),
           txn = Some((queryId, batchId))),
         "append")
     }
@@ -1652,13 +1665,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     sinkWrite(spark, newestPerKey(updates, keyCols, seqCol), dir,
       Seq(partitionCol), queryId, batchId, statsCols) { _ =>
-      stageUpsert(spark, updates, dir, keyCols, partitionCol, seqCol,
-        batchId = None) match {
-        case Some(st) => LakeCommit.rebase(spark, dir, st.copy(
-          propsDelta = st.propsDelta + (txnKey(queryId) -> batchId.toString),
-          txn = Some((queryId, batchId))), "upsert")
-        case None => mustLatest(spark, dir)
-      }
+      upsert(spark, updates, dir, keyCols, partitionCol, seqCol,
+        Some((queryId, batchId)))
     }
   }
 
@@ -1679,9 +1687,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
           if (committed.nonEmpty) committed else partitionCols
         }
         val rels = stageWrite(spark, dir, replacement, pc, s.physNames)
-        Some(LakeCommit.build(spark, dir, s, rels, rels, s.batches,
-          "overwrite", Some(replacement.schema.json),
-          Map(txnKey(queryId) -> batchId.toString), dvsNew = Some(Nil)))
+        Some(LakeCommit.build(spark, dir, s, rels, rels, "overwrite",
+          Some(replacement.schema.json), dvsNew = Some(Nil)))
       }
     }
 
@@ -1709,8 +1716,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
     *
     * Same contracts as [[upsert]]: `source` carries every table column
     * (additive evolution allowed — old rows read new columns as null),
-    * `partitionCol` is a stable function of the key, and a `batchId`
-    * already in the ledger makes the whole call a replay no-op. A source
+    * `partitionCol` is a stable function of the key, and a `txn`
+    * already recorded makes the whole call a replay no-op. A source
     * with duplicate keys fails loudly BEFORE any write (two clause
     * images for one target row is nondeterministic — the Delta-merge
     * multiple-matches rule). Source columns whose name starts with `__`
@@ -1726,7 +1733,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       updateWhen: Option[String] = Some("true"),
       deleteWhen: Option[String] = None,
       insertWhen: Option[String] = Some("true"),
-      batchId: Option[Long] = None,
+      txn: Option[(String, Long)] = None,
       notMatchedBySourceDeleteWhen: Option[String] = None,
       /** COLUMN-LEVEL update: target column → SQL expression over the
         * `t.`/`s.` namespaces (`UPDATE SET v = t.v + s.delta`).
@@ -1748,7 +1755,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       matched = deleteWhen.map(d => MergeMatched(d, delete = true)).toSeq ++
         updateWhen.map(u => MergeMatched(u, set = updateSet)),
       notMatched = insertWhen.map(i => MergeNotMatched(i, insertValues)).toSeq,
-      batchId = batchId,
+      txn = txn,
       notMatchedBySourceDeleteWhen = notMatchedBySourceDeleteWhen,
       evolveSchema = evolveSchema)
 
@@ -1773,12 +1780,12 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * (any mix of conditional updates — whole-row or column-level — and
     * deletes) plus an ordered chain of not-matched insert clauses, all
     * applied in ONE atomic commit with the same pruned read, duplicate
-    * -key guard, ledger, and rebase rules as [[merge]] (which is now
+    * -key guard, `txn` identity, and rebase rules as [[merge]] (which is now
     * the ≤1-update + ≤1-delete special case of this verb). */
   def mergeClauses(spark: SparkSession, dir: String, source: DataFrame,
       keyCols: Seq[String], partitionCol: String,
       matched: Seq[MergeMatched], notMatched: Seq[MergeNotMatched],
-      batchId: Option[Long] = None,
+      txn: Option[(String, Long)] = None,
       notMatchedBySourceDeleteWhen: Option[String] = None,
       /** WRITE-SIDE SCHEMA EVOLUTION opt-in (also enabled session-wide
         * by `spark.graft.merge.schemaEvolution=true`): column-level
@@ -1788,14 +1795,10 @@ object CommitLog extends org.apache.spark.internal.Logging {
         * physical-name-reuse refusal as every additive write. Off by
         * default: an unknown assignment is usually a typo, and a typo
         * that silently widens the table is the worst failure mode. */
-      evolveSchema: Boolean = false,
-      /** Per-QUERY sink transaction identity — the streaming sink's
-        * replay guard ([[LakeCommit.txnDone]]); rides the commit as a props
-        * entry, checked here and on every rebase attempt. */
-      txn: Option[(String, Long)] = None): Snapshot = {
+      evolveSchema: Boolean = false): Snapshot = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, batchId, txn)) return s
+    if (replayed(s, dir, txn)) return s
     val evolve = evolveSchema || spark.conf
       .getOption("spark.graft.merge.schemaEvolution").exists(_.toBoolean)
     // a whole-row clause needs the full target schema in the source (and
@@ -1971,8 +1974,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
         s.files.map(partOf).toSet ++ partDirs ++ newRels.map(partOf)
       else partDirs ++ newRels.map(partOf)
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, touchedParts, touched.toSet,
-        newRels, batchId,
+      StagedUpsert(s, touchedParts, touched.toSet, newRels,
         // schema evolution through whole-row clauses (source image) or,
         // under the evolve opt-in, column-level assignments to new
         // columns (typed by the post projection, nullable — old rows
@@ -1990,9 +1992,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
             partF).json
         })
         else None,
-        propsDelta = txn.map { case (q, b) =>
-          txnKey(q) -> b.toString
-        }.toMap,
         txn = txn),
       "merge")
   }
@@ -2242,7 +2241,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       }
     }
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, selected, removedSet, newRels, None,
+      StagedUpsert(s, selected, removedSet, newRels,
         dvAppend = dvAppend, dvDrop = dvDrop),
       "compact")
   }
@@ -2285,16 +2284,16 @@ object CommitLog extends org.apache.spark.internal.Logging {
   /** Copy-on-write SNAPSHOT REPLACE: after the commit the table holds
     * exactly `replacement`'s rows. The natural verb for re-materializing
     * a small derived table — an [[IncrementalView]]'s rollup state —
-    * in ONE atomic step; the exactly-once ledger rides the commit like
-    * upsert's (a replayed `batchId` is a no-op). Like [[compact]] it
+    * in ONE atomic step; the `txn` identity rides the commit like
+    * upsert's (a replayed `txn` is a no-op). Like [[compact]] it
     * replaces everything, so it never rebases: losing the version race
     * aborts loudly and the staged files are vacuum garbage. */
   def overwrite(spark: SparkSession, replacement: DataFrame, dir: String,
       partitionCols: Seq[String] = Nil,
-      batchId: Option[Long] = None,
+      txn: Option[(String, Long)] = None,
       expectedVersion: Option[Long] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, batchId)) return s
+    if (replayed(s, dir, txn)) return s
     // same optimistic pin as replaceWhere's: a replacement DERIVED from
     // a snapshot (a view's fold of deltas onto its own prior state) must
     // abort when another writer moved the table in between — committing
@@ -2303,7 +2302,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       LakeCommit.requireVersion("overwrite", dir, _, s.version))
     val newRels = stageWrite(spark, dir, replacement, partitionCols,
       s.physNames)
-    rewriteAll(spark, dir, s, newRels, "overwrite", batchId,
+    rewriteAll(spark, dir, s, newRels, "overwrite", txn,
       Some(replacement.schema.json))
   }
 
@@ -2312,16 +2311,17 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * vectors. It never rebases — the rewrite read `s`, so losing the
     * race to any commit aborts ([[LakeCommit.Abort]]). */
   private def rewriteAll(spark: SparkSession, dir: String, s: Snapshot,
-      newRels: Seq[String], op: String, batchId: Option[Long] = None,
+      newRels: Seq[String], op: String, txn: Option[(String, Long)] = None,
       schemaJson: Option[String] = None): Snapshot =
-    LakeCommit.run(spark, dir, op, Abort, from = Some(s)) { s =>
-      Some(LakeCommit.build(spark, dir, s, newRels, newRels,
-        s.batches ++ batchId, op, schemaJson, dvsNew = Some(Nil)))
+    LakeCommit.run(spark, dir, op, Abort, from = Some(s), txn = txn) { s =>
+      Some(LakeCommit.build(spark, dir, s, newRels, newRels, op, schemaJson,
+        dvsNew = Some(Nil)))
     }
 
   /** The table's commit history as a DataFrame — one row per readable
-    * version (op, file/batch counts, files added/removed vs the
-    * previous readable version). The operational `DESCRIBE HISTORY`
+    * version (op, file count, `n_batches` = the version's
+    * `graft.txn.*` writer entries, files added/removed vs the previous
+    * readable version). The operational `DESCRIBE HISTORY`
     * surface: metadata-plane only (version files, no data I/O), so it
     * answers "what happened to this table" at any lake size. Vacuumed
     * versions are simply absent; a corrupt version is skipped like
@@ -2336,7 +2336,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
       case (s, prevOpt) =>
         val prev = prevOpt.map(_.files.toSet).getOrElse(Set.empty[String])
         val cur = s.files.toSet
-        (s.version, s.op, s.files.size.toLong, s.batches.size.toLong,
+        (s.version, s.op, s.files.size.toLong,
+          s.props.keys.count(_.startsWith(TxnPrefix)).toLong,
           (cur -- prev).size.toLong, (prev -- cur).size.toLong,
           // wall-clock commit stamp (0 for pre-stamp logs) — the
           // DESCRIBE HISTORY timestamp column
@@ -2424,8 +2425,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
         s"deletion vector(s) ${missingDv.mkString(", ")}")
     val readded = old.files.filterNot(cur.files.toSet)
     LakeCommit.run(spark, dir, "restore", Abort, from = Some(cur)) { s =>
-      Some(LakeCommit.build(spark, dir, s, old.files, readded, s.batches,
-        "restore", old.schemaJson, dvsNew = Some(old.dvs)))
+      Some(LakeCommit.build(spark, dir, s, old.files, readded, "restore",
+        old.schemaJson, dvsNew = Some(old.dvs)))
     }
   }
 
@@ -2444,8 +2445,8 @@ object CommitLog extends org.apache.spark.internal.Logging {
     val s = mustLatest(spark, dir)
     val newRels = stageWrite(spark, dir, replacement, partitionCols)
     LakeCommit.run(spark, dir, "replaceTable", Abort, from = Some(s)) { s =>
-      Some(LakeCommit.build(spark, dir, s, newRels, newRels, s.batches,
-        "overwrite", Some(replacement.schema.json), dvsNew = Some(Nil),
+      Some(LakeCommit.build(spark, dir, s, newRels, newRels, "overwrite",
+        Some(replacement.schema.json), dvsNew = Some(Nil),
         schemaReplace = true))
     }
   }
@@ -2940,25 +2941,23 @@ object CommitLog extends org.apache.spark.internal.Logging {
       s"rebase of branch '$name' of $d: the two sides wrote different " +
         "hive layouts")
 
-    // ---- ledger + props merge
-    val forkBatches = forkSnap.batches.toSet
-    val allB = (cur.batches ++ head.batches.filterNot(forkBatches))
-      .distinct.sorted
-    val (mergedFloor, mergedBatches) =
-      if (allB.size > LedgerKeep) {
-        val cut = allB.size - LedgerKeep
-        (math.max(allB(cut - 1),
-          math.max(cur.batchFloor, head.batchFloor)), allB.drop(cut))
-      } else (math.max(cur.batchFloor, head.batchFloor), allB)
+    // ---- props merge
     val bPropsChanged = head.props.filter { case (k, v) =>
       !forkSnap.props.get(k).contains(v) } -
       "graft.branch.name" - "graft.branch.fork" - FenceProp
     val bPropsRemoved = forkSnap.props.keySet -- head.props.keySet - FenceProp
+    // a writer's txn entry is a high-water mark: the merged table has
+    // committed everything either side committed, so it keeps the
+    // higher version — the branch's older entry must never lower
+    // main's (main's later batches would re-apply on replay)
+    val txnMax = (cur.props.keySet ++ head.props.keySet)
+      .filter(_.startsWith(TxnPrefix)).map(k => k ->
+        (cur.props.get(k) ++ head.props.get(k)).map(_.toLong).max.toString)
     // the merge's fence (if any) rides the rebase commit unchanged —
     // only the merge's final sync commit clears it; it is excluded from
     // the user-prop merge above so fastForward never adopts it onto main
-    val mergedProps = (cur.props -- bPropsRemoved) ++ bPropsChanged +
-      ("graft.branch.name" -> name,
+    val mergedProps = (cur.props -- bPropsRemoved) ++ bPropsChanged ++
+      txnMax + ("graft.branch.name" -> name,
         "graft.branch.fork" -> cur.version.toString) ++
       headFence.map(FenceProp -> _)
 
@@ -3008,7 +3007,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
     val rebased = Snapshot(
       version = newVersion,
       files = mergedFiles,
-      batches = mergedBatches,
       statsCols = cur.statsCols,
       manifest = manifestRel,
       op = "rebase",
@@ -3020,7 +3018,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
       partCols = mergedFiles.headOption.map(partColsFromRel)
         .getOrElse(cur.partCols),
       committedAt = System.currentTimeMillis(),
-      batchFloor = mergedFloor,
       thetaCols = cur.thetaCols,
       thetaLgK = cur.thetaLgK,
       dvs = (cur.dvs.filterNot(bDvDropped) ++ bDvNew).distinct,
@@ -3285,10 +3282,11 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * retention domain, a clone is sovereign: vacuum, writers, and
     * schema evolution on either side never interact — the
     * promote-the-experiment / backup-at-version verb. The clone's
-    * ledger starts EMPTY (it is a new table; a streaming writer
-    * re-pointed at it must use a fresh checkpoint — carrying the
-    * source's replay guard would silently swallow its first epochs),
-    * and provenance rides the props (`graft.clone.source/.version`). */
+    * clone carries no `graft.txn.*` entry (it is a new table; a
+    * streaming writer re-pointed at it must use a fresh checkpoint —
+    * carrying the source's replay identities would silently swallow
+    * its first epochs), and provenance rides the props
+    * (`graft.clone.source/.version`). */
   def cloneTable(spark: SparkSession, srcDir: String, dstDir: String,
       atVersion: Option[Long] = None): Snapshot = {
     require(branchOf(dstDir).isEmpty,
@@ -3339,17 +3337,15 @@ object CommitLog extends org.apache.spark.internal.Logging {
       }
       val snap = s.copy(
         version = 1L,
-        batches = Nil,
-        batchFloor = -1L,
         manifest = s.manifest.map(rehome),
         dvs = s.dvs.map(rehome),
         op = "clone",
-        // the batches ledger AND the per-query txn ledger both reset:
-        // a clone is a new table for exactly-once purposes — carrying
-        // graft.txn.* would make a re-pointed sink's replayed epochs
-        // silent no-ops, the exact failure the fresh ledger prevents
+        // the writers' txn entries reset: a clone is a new table for
+        // exactly-once purposes — carrying graft.txn.* would make a
+        // re-pointed writer's replayed versions silent no-ops, the
+        // exact failure a fresh table prevents
         props = s.props.view
-          .filterKeys(k => !k.startsWith("graft.txn.") &&
+          .filterKeys(k => !k.startsWith(TxnPrefix) &&
             k != "graft.branch.name" && k != "graft.branch.fork" &&
             k != FenceProp).toMap +
           ("graft.clone.source" -> srcDir,
@@ -3378,18 +3374,6 @@ object CommitLog extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Ledger-only commit: records `batchId` against the CURRENT file set
-    * without touching any data — how a derived table advances its
-    * exactly-once cursor past a base range that contained no data
-    * commits (pure compactions). Replay of an already-recorded id is a
-    * no-op. */
-  def noteBatch(spark: SparkSession, dir: String, batchId: Long): Snapshot =
-    LakeCommit.run(spark, dir, "noteBatch", Abort,
-      batchId = Some(batchId)) { s =>
-      Some(LakeCommit.build(spark, dir, s, s.files, Nil,
-        s.batches :+ batchId, "note"))
-    }
-
   /** Copy-on-write DELETE of every row matching `cond`, at FILE
     * granularity — the missing verb between upsert (keyed replace) and
     * compact (pure rewrite):
@@ -3412,25 +3396,22 @@ object CommitLog extends org.apache.spark.internal.Logging {
     * returns the current snapshot. */
   def delete(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
-      /** Per-query sink-transaction identity `(queryId, batchId)` — the
-        * same exactly-once ledger [[sinkUpsert]] rides, so a delete can
-        * participate in [[graft.sources.LakeTxn.writeAll]]'s
-        * heal-forward replay. A replayed identity no-ops EVEN WHEN the
-        * predicate matches nothing anymore (or would now match rows a
-        * LATER transaction appended) — replay safety must come from the
-        * ledger, never from the predicate happening to miss. */
+      /** The writer's `(appId, version)` identity — the same one
+        * [[sinkUpsert]] rides, so a delete can participate in
+        * [[graft.sources.LakeTxn.writeAll]]'s heal-forward replay. A
+        * replayed identity no-ops EVEN WHEN the predicate matches
+        * nothing anymore (or would now match rows a LATER transaction
+        * appended) — replay safety must come from the identity, never
+        * from the predicate happening to miss. */
       txn: Option[(String, Long)] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, txn = txn)) return s
-    val ledger = txn.map { case (q, b) => txnKey(q) -> b.toString }.toMap
+    if (replayed(s, dir, txn)) return s
     val hitFiles = filesOf(spark, dir, readSnapshot(spark, dir, s).filter(cond))
     if (hitFiles.isEmpty) {
       // nothing matched: still record the txn identity — the replay
       // guard above, not predicate luck, is what makes a crashed
       // transaction's re-run safe. Pure metadata (no manifest churn).
-      if (txn.isEmpty) return s
-      val (q, b) = txn.get
-      return ledgerOnlyCommit(spark, dir, q, b, "delete")
+      return txn.fold(s)(ledgerOnlyCommit(spark, dir, _, "delete"))
     }
     val partCols = partColsOf(s)
     // keep every row where cond is NOT TRUE — a null predicate must not
@@ -3439,8 +3420,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       .filter(!coalesce(cond, lit(false)))
     val newRels = stageWrite(spark, dir, survivors, partCols, s.physNames)
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, hitFiles.map(partOf), hitFiles, newRels, None,
-        propsDelta = ledger, txn = txn),
+      StagedUpsert(s, hitFiles.map(partOf), hitFiles, newRels, txn = txn),
       "delete")
   }
 
@@ -3503,7 +3483,7 @@ object CommitLog extends org.apache.spark.internal.Logging {
       return s
     }
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, hitFiles.map(partOf).toSet, Set.empty, Nil, None,
+      StagedUpsert(s, hitFiles.map(partOf).toSet, Set.empty, Nil,
         dvAppend = Seq(rel)),
       "delete-mor")
   }
@@ -3533,12 +3513,12 @@ object CommitLog extends org.apache.spark.internal.Logging {
       propsDelta: Map[String, String] = Map.empty,
       probe: Option[(String, Seq[Any])] = None,
       expectedVersion: Option[Long] = None,
-      /** Per-query sink-transaction identity — see [[delete]]'s `txn`;
+      /** The writer's identity — see [[delete]]'s `txn`;
         * lets a replaceWhere leg ride [[graft.sources.LakeTxn.writeAll]]
         * with exactly-once replay. */
       txn: Option[(String, Long)] = None): Snapshot = {
     val s = mustLatest(spark, dir)
-    if (replayed(s, dir, txn = txn)) return s
+    if (replayed(s, dir, txn)) return s
     // optimistic-concurrency guard: a caller whose propsDelta was DERIVED
     // from a snapshot (InvertedIndex.update folds absolute globals off
     // the version it read) pins that version here — a commit that landed
@@ -3569,19 +3549,14 @@ object CommitLog extends org.apache.spark.internal.Logging {
     if (hitFiles.isEmpty && addedRels.isEmpty && propsDelta.isEmpty) {
       // all-miss + nothing to add: a txn identity still lands, as pure
       // metadata (see delete's ledger-only path)
-      txn match {
-        case None => return s
-        case Some((q, b)) =>
-          return ledgerOnlyCommit(spark, dir, q, b, "replace")
-      }
+      return txn.fold(s)(ledgerOnlyCommit(spark, dir, _, "replace"))
     }
     val newRels = survivorRels ++ addedRels
     val touched = hitFiles.map(partOf) ++ newRels.map(partOf)
-    val ledger = txn.map { case (q, b) => txnKey(q) -> b.toString }.toMap
     LakeCommit.rebase(spark, dir,
-      StagedUpsert(s, touched, hitFiles, newRels, None,
+      StagedUpsert(s, touched, hitFiles, newRels,
         if (addedRels.isEmpty) None else Some(additions.schema.json),
-        propsDelta ++ ledger, txn = txn),
+        propsDelta, txn = txn),
       "replace", pinnedBase = expectedVersion.isDefined)
   }
 

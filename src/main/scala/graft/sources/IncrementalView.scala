@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,10 +34,11 @@ import org.apache.spark.sql.functions._
   *    base read — stays bounded by the churn.
   *
   * Correctness comes from commit-log properties, not trusted math:
-  *  - the refresh ledger: the base version refreshed to rides the view
-  *    commit as its `batchId`, so a replayed/concurrent refresh of the
-  *    same version is a no-op, and `lastRefreshed` is recoverable from
-  *    the view's own log — no side state to lose;
+  *  - the refresh cursor: every view commit carries
+  *    `txn = (viewAppId(d), base version refreshed to)`, so a
+  *    replayed/concurrent refresh of the same version is a no-op, and
+  *    `lastRefreshed` is the view's own `graft.txn.view:<base>` entry —
+  *    no side state to lose;
   *  - pre-images come from time travel, which is exact until vacuumed;
   *  - vacuumed history degrades loudly to a FULL refresh, never to a
   *    wrong answer.
@@ -49,7 +51,7 @@ import org.apache.spark.sql.functions._
   * block); this is that report, kept fresh for a lake the reference's
   * single-node rescan could never finish.
   */
-object IncrementalView {
+object IncrementalView extends Logging {
 
   /** One view value column: `valueCol = op(input)` over the base, with
     * `input = None` meaning `count(*)`. The structured form shared by
@@ -157,10 +159,19 @@ object IncrementalView {
     }
   }
 
+  /** The id space a view's refreshes commit under — its versions are
+    * the base versions refreshed to. */
+  def viewAppId(d: Definition): String =
+    "view:" + graft.plans.ConstraintCatalog.normalize(d.baseDir)
+
+  /** The base version the view at snapshot `s` refreshed to. */
+  def refreshedTo(s: CommitLog.Snapshot, d: Definition): Option[Long] =
+    CommitLog.txnVersion(s, viewAppId(d))
+
   /** The base version the view last refreshed to (from the view's own
-    * ledger), or None before the first refresh. */
+    * log), or None before the first refresh. */
   def lastRefreshed(spark: SparkSession, d: Definition): Option[Long] =
-    CommitLog.latest(spark, d.viewDir).flatMap(_.batches.maxOption)
+    CommitLog.latest(spark, d.viewDir).flatMap(refreshedTo(_, d))
 
   /** The view's current content (snapshot-isolated). */
   def read(spark: SparkSession, d: Definition): DataFrame =
@@ -176,17 +187,18 @@ object IncrementalView {
   def refresh(spark: SparkSession, d: Definition): Seq[String] = {
     val base = CommitLog.latest(spark, d.baseDir).getOrElse(
       throw new IllegalStateException(s"${d.baseDir} has no commit log"))
+    val txn = (viewAppId(d), base.version)
     lastRefreshed(spark, d) match {
       case None =>
         // bootstrap: full aggregate, logged with the base version
-        // already in the ledger
+        // already recorded
         val full = aggregate(CommitLog.read(spark, d.baseDir), d)
         if (d.invertible) full.write.parquet(d.viewDir)
         else full.write.partitionBy(d.partitionCol).parquet(d.viewDir)
-        CommitLog.init(spark, d.viewDir, initBatches = Seq(base.version))
+        CommitLog.init(spark, d.viewDir, txn = Some(txn))
         Seq("*")
       case Some(v) if v >= base.version => Nil // already fresh
-      case Some(v) if d.invertible => refreshDelta(spark, d, v, base)
+      case Some(v) if d.invertible => refreshDelta(spark, d, v, base, txn)
       case Some(v) =>
         val touched = CommitLog.partsBetween(spark, d.baseDir, v, base.version)
         val partVals: Seq[String] = touched match {
@@ -195,8 +207,8 @@ object IncrementalView {
               org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                 .unescapePathName(p.stripPrefix(d.partitionCol + "=")))
           case None =>
-            System.err.println(s"[incrview] base history for ${d.baseDir} " +
-              s"vacuumed below $v — falling back to a full refresh")
+            logWarning(s"base history for ${d.baseDir} vacuumed below " +
+              s"$v — falling back to a full refresh of ${d.viewDir}")
             // the full refresh must cover the union of CURRENT base
             // partitions and CURRENT VIEW partitions: a partition whose
             // base rows were entirely deleted inside the vacuumed gap
@@ -213,15 +225,13 @@ object IncrementalView {
         if (partVals.isEmpty) {
           // data commits in range touched nothing (e.g. pure compactions):
           // record the catch-up so the next refresh diffs from here
-          CommitLog.replacePartitions(spark,
-            CommitLog.read(spark, d.viewDir).limit(0), d.viewDir,
-            d.partitionCol, Nil, batchId = Some(base.version))
+          CommitLog.ledgerOnlyCommit(spark, d.viewDir, txn, "note")
           return Nil
         }
         val post = aggregate(
           CommitLog.readPartitions(spark, d.baseDir, d.partitionCol, partVals), d)
         CommitLog.replacePartitions(spark, post, d.viewDir, d.partitionCol,
-          partVals, batchId = Some(base.version))
+          partVals, Some(txn))
         partVals
     }
   }
@@ -230,13 +240,14 @@ object IncrementalView {
     * the touched partitions' pre- and post-images, folded into the
     * current view state in one atomic overwrite. */
   private def refreshDelta(spark: SparkSession, d: Definition,
-      fromV: Long, base: CommitLog.Snapshot): Seq[String] = {
+      fromV: Long, base: CommitLog.Snapshot,
+      txn: (String, Long)): Seq[String] = {
     val specs = d.specs.map(_.get) // construction guaranteed parseable
     val countStar = specs.find(s => s.op == "count" && s.input.isEmpty).get
     CommitLog.partsBetween(spark, d.baseDir, fromV, base.version) match {
       case Some(dirs) if dirs.isEmpty =>
         // pure compactions: advance the cursor, touch no data
-        CommitLog.noteBatch(spark, d.viewDir, base.version)
+        CommitLog.ledgerOnlyCommit(spark, d.viewDir, txn, "note")
         Nil
       case touched =>
         // (replacement state, touched label, pinned view version)
@@ -281,14 +292,14 @@ object IncrementalView {
               .filter(col(countStar.valueCol) > 0L),
               dirs.toSeq.sorted, Some(curSnap.version))
           case None =>
-            System.err.println(s"[incrview] base history for ${d.baseDir} " +
-              s"vacuumed below $fromV — falling back to a full refresh")
+            logWarning(s"base history for ${d.baseDir} vacuumed below " +
+              s"$fromV — falling back to a full refresh of ${d.viewDir}")
             // a from-scratch aggregate depends on nothing in the view —
             // no pin needed (the replacement is correct whatever landed)
             (aggregate(CommitLog.read(spark, d.baseDir), d), Seq("*"), None)
         }
         CommitLog.overwrite(spark, newState._1, d.viewDir,
-          batchId = Some(base.version), expectedVersion = newState._3)
+          txn = Some(txn), expectedVersion = newState._3)
         newState._2
     }
   }

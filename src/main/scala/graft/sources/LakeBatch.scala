@@ -115,6 +115,15 @@ private[graft] object LakeBatch {
     val partCols = opt(parameters, DataSourceUtils.PARTITIONING_COLUMNS_KEY)
       .map(DataSourceUtils.decodePartitioningColumns)
       .getOrElse(Nil)
+    // idempotent-write identity (Delta's txnAppId/txnVersion): a
+    // replayed (appId, version) write is a no-op
+    val txn = (opt(parameters, "txnAppId"),
+      opt(parameters, "txnVersion")) match {
+      case (Some(a), Some(v)) => Some((a, v.toLong))
+      case (None, None) => None
+      case _ => throw new IllegalArgumentException(
+        "txnAppId and txnVersion must be set together")
+    }
     CommitLog.latest(spark, dir) match {
       case Some(s) =>
         require(partCols.isEmpty ||
@@ -125,15 +134,6 @@ private[graft] object LakeBatch {
         val replaceWhere = opt(parameters, "replaceWhere")
         val dynamicPO = opt(parameters, "partitionOverwriteMode")
           .exists(_.equalsIgnoreCase("dynamic"))
-        // idempotent-write identity (Delta's txnAppId/txnVersion): a
-        // replayed (appId, version) append is a no-op
-        val txn = (opt(parameters, "txnAppId"),
-          opt(parameters, "txnVersion")) match {
-          case (Some(a), Some(v)) => Some((a, v.toLong))
-          case (None, None) => None
-          case _ => throw new IllegalArgumentException(
-            "txnAppId and txnVersion must be set together")
-        }
         require(txn.isEmpty || mode == SaveMode.Append,
           s"write into $dir: txnAppId/txnVersion ride Append mode")
         mode match {
@@ -198,20 +198,13 @@ private[graft] object LakeBatch {
         // the retry finds the table and the recorded high-water mark;
         // crash before init → the parquet ErrorIfExists fails the
         // retry loudly, nothing was committed)
-        val txnProps = (opt(parameters, "txnAppId"),
-          opt(parameters, "txnVersion")) match {
-          case (Some(a), Some(v)) => Map(s"graft.txn.$a" -> v)
-          case (None, None) => Map.empty[String, String]
-          case _ => throw new IllegalArgumentException(
-            "txnAppId and txnVersion must be set together")
-        }
         // create-by-write: land the files, then snapshot them as v1 —
         // init's CAS resolves racing creators to one winner
         val writer =
           if (partCols.isEmpty) data.write
           else data.write.partitionBy(partCols: _*)
         writer.parquet(dir)
-        CommitLog.init(spark, dir, props = txnProps)
+        CommitLog.init(spark, dir, txn = txn)
         ()
     }
   }

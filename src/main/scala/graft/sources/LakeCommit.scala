@@ -16,10 +16,11 @@ import CommitLog._
   * (`database/schema.sql:31-33`). Every attempt of [[run]]:
   *
   *  1. reads the latest snapshot once;
-  *  2. returns it unchanged when the write's `batchId` or
-  *     `(queryId, batchId)` is already in its exactly-once ledgers;
+  *  2. returns it unchanged when the write's `(appId, version)`
+  *     identity is already recorded ([[txnDone]]);
   *  3. checks the branch merge fence ([[assertUnfenced]]);
-  *  4. asks the verb for its next snapshot (`None`: nothing to commit);
+  *  4. asks the verb for its next snapshot (`None`: nothing to commit)
+  *     and records the identity in it as `graft.txn.<appId>`;
   *  5. CASes the next version file ([[casWrite]]).
   *
   * A lost CAS ([[CommitLog.CommitConflict]]) is settled by the verb's
@@ -73,30 +74,16 @@ private[sources] object LakeCommit extends Logging {
           "CommitLog.unfenceBranch and re-merge")
     }
 
-  /** Is `b` in the snapshot's exactly-once ledger? Explicit ids first,
-    * then the compacted floor (ids ≤ floor were pruned as committed). */
-  def inLedger(s: Snapshot, b: Long): Boolean =
-    b <= s.batchFloor || s.batches.contains(b)
-
-  /** The per-query sink ledger entry: `graft.txn.<queryId>` holds the
-    * query's last committed batch id (see [[CommitLog.sinkAppend]]). */
-  def txnKey(queryId: String): String = s"graft.txn.$queryId"
-
-  def txnDone(s: Snapshot, queryId: String, b: Long): Boolean =
-    s.props.get(txnKey(queryId)).exists(_.toLong >= b)
-
   /** Step 2: is this write already recorded in `s`? Logs the skip. The
     * verbs also call it before staging, so a replay stages nothing. */
-  def replayed(s: Snapshot, dir: String, batchId: Option[Long] = None,
-      txn: Option[(String, Long)] = None): Boolean = {
-    val hit = batchId.filter(inLedger(s, _)).map(b => s"batch $b")
-      .orElse(txn.collect {
-        case (q, b) if txnDone(s, q, b) => s"sink txn $q#$b"
-      })
-    hit.foreach(h => logInfo(s"$h already committed to $dir — replay " +
-      "skipped (any staged files are vacuum garbage)"))
-    hit.isDefined
-  }
+  def replayed(s: Snapshot, dir: String,
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (a, v) =>
+      val hit = txnDone(s, a, v)
+      if (hit) logInfo(s"txn $a#$v already committed to $dir — replay " +
+        "skipped (any staged files are vacuum garbage)")
+      hit
+    }
 
   /** The metadata-only next snapshot: `s` one version on, stamped now. */
   def bump(s: Snapshot, op: String): Snapshot =
@@ -134,7 +121,7 @@ private[sources] object LakeCommit extends Logging {
     * table creation, whose lost race raises [[CreateRace]]. `fenced =
     * false` only for the verb that clears a fence. */
   def run(spark: SparkSession, dir: String, op: String, rule: Rule,
-      from: Option[Snapshot] = None, batchId: Option[Long] = None,
+      from: Option[Snapshot] = None,
       txn: Option[(String, Long)] = None, fenced: Boolean = true,
       maxAttempts: Int = DefaultAttempts)(
       next: Snapshot => Option[Snapshot]): Snapshot = {
@@ -142,7 +129,7 @@ private[sources] object LakeCommit extends Logging {
     retrying(s"$op on $dir", maxAttempts) {
       val s = first.getOrElse(mustLatest(spark, dir))
       first = None
-      if (replayed(s, dir, batchId, txn)) s
+      if (replayed(s, dir, txn)) s
       else {
         if (fenced) assertUnfenced(s, dir)
         rule match {
@@ -150,7 +137,7 @@ private[sources] object LakeCommit extends Logging {
             checkRebase(spark, dir, op, st, s, pinned)
           case _ => ()
         }
-        next(s) match {
+        next(s).map(n => n.copy(props = n.props ++ txnProps(txn))) match {
           case None => s
           case Some(n) =>
             try casWrite(hadoopFs(spark, dir), versionFile(dir, n.version),
@@ -169,11 +156,10 @@ private[sources] object LakeCommit extends Logging {
   def rebase(spark: SparkSession, dir: String, staged: StagedUpsert,
       op: String, maxAttempts: Int = DefaultAttempts,
       pinnedBase: Boolean = false): Snapshot =
-    run(spark, dir, op, Rebase(staged, pinnedBase), batchId = staged.batchId,
-      txn = staged.txn, maxAttempts = maxAttempts) { s =>
+    run(spark, dir, op, Rebase(staged, pinnedBase), txn = staged.txn,
+      maxAttempts = maxAttempts) { s =>
       Some(build(spark, dir, s, s.files.filterNot(staged.removed) ++
-        staged.added, staged.added, s.batches ++ staged.batchId, op,
-        staged.schemaJson, staged.propsDelta,
+        staged.added, staged.added, op, staged.schemaJson, staged.propsDelta,
         if (staged.dvAppend.isEmpty && staged.dvDrop.isEmpty) None
         else Some(s.dvs.filterNot(staged.dvDrop) ++ staged.dvAppend)))
     }
@@ -226,7 +212,7 @@ private[sources] object LakeCommit extends Logging {
         "concurrent commit made this write stale; re-read and re-run " +
         "(staged files are vacuum garbage)")
 
-  /** The next data snapshot after `prev`: `files` (+ ledger + stats) as
+  /** The next data snapshot after `prev`: `files` (+ stats) as
     * version `prev.version + 1`. The stats snapshot is incremental:
     * rows for files carried over from `prev` are reused; only `newRels`
     * are scanned. The manifest name carries a random suffix so two
@@ -234,8 +220,7 @@ private[sources] object LakeCommit extends Logging {
     * ONLY commit point (a manifest that lost its race is vacuum
     * garbage). */
   def build(spark: SparkSession, dir: String, prev: Snapshot,
-      files: Seq[String], newRels: Seq[String],
-      batches: Seq[Long], op: String,
+      files: Seq[String], newRels: Seq[String], op: String,
       schemaJson: Option[String] = None,
       propsDelta: Map[String, String] = Map.empty,
       dvsNew: Option[Seq[String]] = None,
@@ -292,14 +277,7 @@ private[sources] object LakeCommit extends Logging {
           Some(rel)
         }
       }
-    // ledger compaction: oldest ids fold into the floor once over cap
-    val allB = batches.distinct.sorted
-    val (floorB, keptB) =
-      if (allB.size > LedgerKeep) {
-        val cut = allB.size - LedgerKeep
-        (math.max(allB(cut - 1), prev.batchFloor), allB.drop(cut))
-      } else (prev.batchFloor, allB)
-    Snapshot(v, files.sorted, keptB,
+    Snapshot(v, files.sorted,
       statsCols, manifestRel, op, sketchCols,
       if (schemaReplace) schemaJson
       else mergeSchemaJson(prev.schemaJson, schemaJson),
@@ -310,7 +288,6 @@ private[sources] object LakeCommit extends Logging {
       // query result path, so clock skew costs time-travel precision,
       // not correctness
       System.currentTimeMillis(),
-      floorB,
       thetaCols, prev.thetaLgK,
       // deletion vectors: an explicit override (delete-mor appends; a
       // whole-table rewrite clears; restore re-pins) else inherited —

@@ -36,10 +36,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    UNREFERENCED — manifest readers still see the previous, mutually
   *    consistent pair. A crash in that window leaves the family
   *    readable at the old cut; the replayed batch heals forward
-  *    (per-table ledgers no-op the corpus, index update is idempotent,
-  *    the manifest ledger no-ops the pin commit).
+  *    (per-table txn entries no-op the corpus, index update is
+  *    idempotent, the manifest ledger no-ops the pin commit).
   *  - The manifest ledger makes the pin commit exactly-once per
-  *    `batchId`, mirroring the per-table convention.
+  *    `batchId`, as each table's `graft.txn.<appId>` entry does for
+  *    its writes.
   *
   * Version pins only move FORWARD (enforced): a manifest can never
   * un-publish a table state, so reader-visible history is monotone.
@@ -314,7 +315,7 @@ object LakeTxn extends org.apache.spark.internal.Logging {
 
   /** ATOMIC MULTI-TABLE WRITE — the dim+fact dual-append as ONE
     * transaction: append each table's rows through its own commit log
-    * (all riding the SAME `batchId` in each per-table ledger), then
+    * (all riding the SAME `(txnAppId, batchId)` identity), then
     * publish one manifest pinning every participant's new version.
     * Manifest readers ([[read]]) see ALL the appends or NONE — the
     * cross-table atomicity a single-log lake cannot express, the
@@ -328,16 +329,16 @@ object LakeTxn extends org.apache.spark.internal.Logging {
     *  - crash BETWEEN table commits: committed tables' new versions
     *    exist but are UNREFERENCED by any manifest — family readers
     *    still see the old cut; the replayed batch no-ops the committed
-    *    tables (their ledgers hold the id), commits the rest, then
+    *    tables (their txn entries hold the id), commits the rest, then
     *    pins — heal-forward, each row exactly once;
     *  - crash AFTER the manifest commit: the manifest ledger no-ops
     *    the whole replay.
     * Requires a `batchId`: without an idempotency key the heal-forward
     * story does not exist, and a crashed multi-table write would need
     * manual repair — the same reason the streaming sink's epochs are
-    * mandatory-keyed. The per-table ledger entry is NAMESPACED to this
+    * mandatory-keyed. The per-table entry is NAMESPACED to this
     * family ([[txnAppId]] — the `(appId, version)` identity, high-water
-    * semantics), never the raw shared batch ledger: a participant table
+    * semantics), never a raw batch id: a participant table
     * can belong to several families or take a streaming sink whose
     * batch ids collide, and an un-namespaced id would silently no-op
     * THIS family's append while the manifest still published — the

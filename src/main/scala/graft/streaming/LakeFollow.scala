@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -9,17 +10,20 @@ import graft.sources.CommitLog
 /** Streaming consumption of a [[CommitLog]] table's change feed — the
   * streaming twin of [[CommitLog.changesBetween]], built on Structured
   * Streaming's own scheduler/checkpoint machinery (a rate tick drives
-  * the poll; the version CURSOR lives in the exactly-once ledger of the
-  * DOWNSTREAM table, not in side state that can diverge from it).
+  * the poll; the version CURSOR lives in the DOWNSTREAM table's own
+  * exactly-once identity, not in side state that can diverge from it).
   *
   * [[mirror]] is the concrete consumer everyone needs first: an
   * exactly-once CDC replica of a lake table. Per poll it diffs the
   * source's committed versions, reads ONLY the touched partitions'
   * post-image (file-pruned off the committed lists — never the lake),
   * and [[CommitLog.replacePartitions]]-swaps them into the replica with
-  * `batchId = source version`, so the replica's own ledger makes
-  * replays no-ops: a crash between apply and checkpoint re-applies the
-  * same post-image onto an identical ledger entry and nothing moves.
+  * `txn = (followAppId(source), source version)`: the replica's
+  * `graft.txn.follow:<source>` entry is both the resume cursor and the
+  * replay guard — a crash between apply and checkpoint re-applies the
+  * same range as a no-op. The entry is the mirror's own, so another
+  * writer of the replica (whatever its ids) neither moves the cursor
+  * nor swallows an apply.
   * The replica is a real commit-log table — snapshot reads, time
   * travel, its own downstream followers.
   *
@@ -31,13 +35,25 @@ import graft.sources.CommitLog
   * post-image covers whole touched partitions — the standard
   * copy-on-write CDC shape without per-row change tracking.
   */
-object LakeFollow {
+object LakeFollow extends Logging {
+
+  /** The id space a follower of `srcDir` writes its replica under — its
+    * versions are the source versions applied (see [[LakeTxn.txnAppId]]
+    * for the family writer's). */
+  def followAppId(srcDir: String): String =
+    "follow:" + graft.plans.ConstraintCatalog.normalize(srcDir)
+
+  /** The greatest source version the replica `dstDir` has applied. */
+  private def appliedVersion(spark: SparkSession, srcDir: String,
+      dstDir: String): Option[Long] =
+    CommitLog.latest(spark, dstDir)
+      .flatMap(CommitLog.txnVersion(_, followAppId(srcDir)))
 
   /** Poll `srcDir` on the streaming scheduler and hand each new version
     * range's data commits to `f(changes, fromV, toV)` — at-least-once:
     * a crash after `f` but before the checkpoint re-delivers the range,
     * so `f` must be idempotent per `toV` (a [[CommitLog]] writer gets
-    * that from `batchId = toV`; see [[mirror]]). Ticks with no new
+    * that from `txn = (appId, toV)`; see [[mirror]]). Ticks with no new
     * versions (and pure compactions, which move no rows) are skipped.
     * The cursor starts at the source's CURRENT version: followers see
     * changes from attach time, like any log subscription — bootstrap
@@ -80,21 +96,21 @@ object LakeFollow {
   /** Exactly-once CDC replica: keep `dstDir` equal to `srcDir`'s latest
     * committed state, advancing one touched-partition swap per observed
     * version range. Create the replica with [[bootstrapMirror]] first;
-    * from then on the replica's OWN ledger is the resume cursor, so a
-    * crashed/restarted mirror continues from the last applied source
-    * version with no gap and no double-apply. */
+    * from then on the replica's own follow entry is the resume cursor,
+    * so a crashed/restarted mirror continues from the last applied
+    * source version with no gap and no double-apply. */
   def mirror(spark: SparkSession, srcDir0: String, dstDir: String,
       partitionCol: String, checkpointDir: String,
       pollSeconds: Int = 1): StreamingQuery = {
     val srcDir = graft.catalog.GraftCatalog.resolveTarget(spark, srcDir0)
-    // the cursor IS the replica's ledger: the greatest source version it
-    // has applied. A restarted mirror resumes from exactly there — no
-    // side state to lose, no gap between crash and reattach.
-    val start = CommitLog.latest(spark, dstDir)
-      .flatMap(_.batches.maxOption).getOrElse(
-        throw new IllegalStateException(
-          s"$dstDir is not a bootstrapped mirror — call bootstrapMirror " +
-            "first (the ledger must carry the source version copied)"))
+    // the cursor IS the replica's follow entry: the greatest source
+    // version it has applied. A restarted mirror resumes from exactly
+    // there — no side state to lose, no gap between crash and reattach.
+    val start = appliedVersion(spark, srcDir, dstDir).getOrElse(
+      throw new IllegalStateException(
+        s"$dstDir is not a bootstrapped mirror of $srcDir — call " +
+          "bootstrapMirror first (it records the source version copied)"))
+    val appId = followAppId(srcDir)
     val cursor = new java.util.concurrent.atomic.AtomicLong(start)
     spark.readStream.format("rate")
       .option("rowsPerSecond", 1)
@@ -113,24 +129,25 @@ object LakeFollow {
           CommitLog.partsBetween(spark, srcDir, fromV, toV) match {
             case Some(dirs) if dirs.isEmpty =>
               // pure compactions/props: rows unchanged, note the cursor
-              CommitLog.noteBatch(spark, dstDir, toV)
+              CommitLog.ledgerOnlyCommit(spark, dstDir, (appId, toV), "note")
             case Some(dirs) =>
               val partVals = dirs.toSeq.sorted.map(p =>
                 org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                   .unescapePathName(p.stripPrefix(partitionCol + "=")))
               val post = CommitLog.readPartitionDirsAt(
                 spark, srcDir, toV, dirs)
-              // batchId = source version → the replica's ledger makes a
-              // replayed range a no-op: exactly-once without side state
+              // version = source version → the replica's follow entry
+              // makes a replayed range a no-op: exactly-once without
+              // side state
               CommitLog.replacePartitions(spark, post, dstDir,
-                partitionCol, partVals, batchId = Some(toV))
+                partitionCol, partVals, txn = Some((appId, toV)))
             case None =>
               throw new IllegalStateException(
                 s"source history $fromV..$toV of $srcDir vacuumed under " +
                   "the follower — re-bootstrap the mirror")
           }
           cursor.set(toV)
-          println(s"[lake-mirror] $srcDir v$fromV..v$toV -> $dstDir")
+          logInfo(s"mirrored $srcDir v$fromV..v$toV -> $dstDir")
         }
         ()
       }
@@ -138,8 +155,8 @@ object LakeFollow {
   }
 
   /** Create the replica at the source's CURRENT cut: full snapshot copy
-    * committed with the source version in the ledger, so the first
-    * follower tick diffs from exactly here. */
+    * committed with the source version as its follow entry, so the
+    * first follower tick diffs from exactly here. */
   def bootstrapMirror(spark: SparkSession, srcDir0: String, dstDir: String,
       partitionCol: String): Long = {
     val srcDir = graft.catalog.GraftCatalog.resolveTarget(spark, srcDir0)
@@ -147,7 +164,8 @@ object LakeFollow {
       throw new IllegalStateException(s"$srcDir has no commit log"))
     CommitLog.read(spark, srcDir)
       .write.partitionBy(partitionCol).parquet(dstDir)
-    CommitLog.init(spark, dstDir, initBatches = Seq(src.version))
+    CommitLog.init(spark, dstDir,
+      txn = Some((followAppId(srcDir), src.version)))
     src.version
   }
 
@@ -181,7 +199,8 @@ object LakeFollow {
       throw new IllegalStateException(s"$srcDir has no commit log"))
     derive(CommitLog.read(spark, srcDir))
       .write.partitionBy(dstPartitionCol).parquet(dstDir)
-    CommitLog.init(spark, dstDir, initBatches = Seq(src.version))
+    CommitLog.init(spark, dstDir,
+      txn = Some((followAppId(srcDir), src.version)))
     src.version
   }
 
@@ -190,10 +209,10 @@ object LakeFollow {
     * partitioned DIFFERENTLY from the source ([[mirror]]'s partition
     * swap requires the same layout). Inserts/update-postimages upsert,
     * deletes tombstone, all via [[CommitLog.merge]] with the CDC flag
-    * as a clause-only `__` column; `batchId = toV` rides the replica's
-    * ledger so a replayed range is a no-op (exactly-once, no side
-    * state). `derive` maps source-image columns onto the replica's
-    * schema (e.g. adds the bucket column) and must make
+    * as a clause-only `__` column; `txn = (followAppId(source), toV)`
+    * rides the replica's commit so a replayed range is a no-op
+    * (exactly-once, no side state). `derive` maps source-image columns
+    * onto the replica's schema (e.g. adds the bucket column) and must make
     * `dstPartitionCol` a STABLE function of the key — guarded per
     * range against the update pairs, churn-sized. At 100 TB each apply
     * moves the range's churn through one key equi-join; the replica
@@ -202,14 +221,14 @@ object LakeFollow {
       keyCols: Seq[String], dstPartitionCol: String,
       derive: DataFrame => DataFrame = identity): Long = {
     val srcDir = graft.catalog.GraftCatalog.resolveTarget(spark, srcDir0)
-    val fromV = CommitLog.latest(spark, dstDir)
-      .flatMap(_.batches.maxOption).getOrElse(
-        throw new IllegalStateException(
-          s"$dstDir is not a bootstrapped keyed mirror — call " +
-            "bootstrapMirrorKeyed first"))
+    val fromV = appliedVersion(spark, srcDir, dstDir).getOrElse(
+      throw new IllegalStateException(
+        s"$dstDir is not a bootstrapped keyed mirror of $srcDir — call " +
+          "bootstrapMirrorKeyed first"))
     val toV = CommitLog.latest(spark, srcDir).map(_.version)
       .getOrElse(fromV)
     if (toV <= fromV) return fromV
+    val txn = (followAppId(srcDir), toV)
     val cdf = CommitLog.changeFeed(spark, srcDir, fromV, toV, keyCols)
       .localCheckpoint() // churn-sized; read once, used three ways
     val pre = cdf.filter(col("_change_type") === "update_preimage")
@@ -238,20 +257,22 @@ object LakeFollow {
       schema.find(_.name == c)
         .map(f => col(c).cast(f.dataType).as(c)).getOrElse(col(c))
     }: _*)
-    if (applied.isEmpty) { CommitLog.noteBatch(spark, dstDir, toV); toV }
+    if (applied.isEmpty) {
+      CommitLog.ledgerOnlyCommit(spark, dstDir, txn, "note"); toV
+    }
     else {
       CommitLog.merge(spark, dstDir, applied, keyCols, dstPartitionCol,
         updateWhen = Some("NOT s.__cdc_delete"),
         deleteWhen = Some("s.__cdc_delete"),
         insertWhen = Some("NOT s.__cdc_delete"),
-        batchId = Some(toV))
+        txn = Some(txn))
       toV
     }
   }
 
   /** Streaming keyed CDC replica: [[applyCdf]] on the streaming
     * scheduler, one atomic merge per observed version range; resume
-    * cursor = the replica's own ledger, exactly as [[mirror]]. */
+    * cursor = the replica's own follow entry, exactly as [[mirror]]. */
   def mirrorKeyed(spark: SparkSession, srcDir: String, dstDir: String,
       keyCols: Seq[String], dstPartitionCol: String, checkpointDir: String,
       pollSeconds: Int = 1,

@@ -131,7 +131,7 @@ object StreamingIngest extends Logging {
     * [[graft.sources.IncrementalView]] current: after each micro-batch's
     * commit, the view catches up through its normal incremental
     * refresh — recomputing only the partitions that batch touched. The
-    * view's OWN refresh ledger carries the base version it refreshed to,
+    * view's OWN txn entry carries the base version it refreshed to,
     * so a replayed or crashed-and-restarted batch's refresh is a
     * metadata no-op and the view inherits the stream's exactly-once
     * without any extra state. A serving query against the base table is

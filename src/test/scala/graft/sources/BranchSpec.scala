@@ -548,4 +548,24 @@ class BranchSpec extends AnyFunSuite {
     assert(bytes.exists { case (files, b) => files > 0L && b > 0L },
       s"dry-run must report non-zero sole-retained bytes: $line")
   }
+
+  test("mergeBranch keeps the higher graft.txn.* entry of main and the " +
+      "branch: a branch at 7 never lowers main's 10") {
+    val dir = freshLake(Nil)
+    def batch(k: Long, pd: String) = Seq((k, 0L, pd)).toDF("k", "v", "pd")
+    CommitLog.append(spark, batch(1000L, "d0"), dir, txn = Some(("app", 6L)))
+    CommitLog.createBranch(spark, dir, "dev")
+    val t = CommitLog.branchTarget(dir, "dev")
+    CommitLog.append(spark, batch(2000L, "d0"), t, txn = Some(("app", 7L)))
+    (8L to 10L).foreach(b => CommitLog.append(spark, batch(3000L + b, "d2"),
+      dir, txn = Some(("app", b))))
+    CommitLog.mergeBranch(spark, dir, "dev")
+    assert(CommitLog.latest(spark, dir).get.props.get("graft.txn.app")
+      .contains("10"), "the merge lowered main's txn entry")
+    val n = CommitLog.read(spark, dir).count()
+    assert(n == 305L)
+    CommitLog.append(spark, batch(3008L, "d2"), dir, txn = Some(("app", 8L)))
+    assert(CommitLog.read(spark, dir).count() == n,
+      "main's batch 8 re-applied after the merge")
+  }
 }

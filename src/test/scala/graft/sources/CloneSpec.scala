@@ -59,8 +59,8 @@ class CloneSpec extends AnyFunSuite {
     CommitLog.vacuum(spark, dst, keepLast = 1, staleStagingMs = -1L)
     assert(rows(src) == Set((1L, 1L)))
     assert(rows(dst) == Set((2L, 2L)))
-    // fresh ledger: the clone is a new table for exactly-once purposes
-    assert(snap.batches.isEmpty && snap.batchFloor == -1L)
+    // fresh identity: the clone is a new table for exactly-once purposes
+    assert(!snap.props.keys.exists(_.startsWith("graft.txn.")))
     assert(snap.props("graft.clone.version") == vDel.toString)
   }
 
@@ -93,7 +93,11 @@ class CloneSpec extends AnyFunSuite {
       "the source's sink replay ledger leaked into the clone — " +
         "re-pointed sinks would silently swallow replayed epochs")
     assert(snap.props.get("user.prop").contains("kept"))
-    assert(snap.batches.isEmpty && snap.batchFloor == -1L)
+    // a writer re-pointed at the clone lands its replayed id
+    val n = rows(dst).size
+    CommitLog.append(spark, Seq((900L, 9L, "d0")).toDF("k", "v", "pd"), dst,
+      txn = Some(("some-query-id", 500L)))
+    assert(rows(dst).size == n + 1)
   }
 
   test("clone refuses an existing target; CALL graft_clone and " +

@@ -211,12 +211,12 @@ class CommitLogSpec extends AnyFunSuite {
     val ours = spark.range(0, 10)
       .select($"id".as("k"), lit(88L).as("v"), lit("d0").as("pd"))
     val staged = CommitLog.stageUpsert(spark, ours, dir, Seq("k"), "pd",
-      batchId = Some(9L)).get
+      txn = Some(("w", 9L))).get
     // another worker lands the SAME micro-batch (at-least-once delivery)
     val theirs = spark.range(0, 10)
       .select($"id".as("k"), lit(77L).as("v"), lit("d0").as("pd"))
     val v2 = CommitLog.upsert(spark, theirs, dir, Seq("k"), "pd",
-      batchId = Some(9L))
+      txn = Some(("w", 9L)))
     val after = CommitLog.commitStaged(spark, dir, staged)
     assert(after.version == v2.version, "replayed batch double-applied")
     assert(state(dir).count(_._2 == 77L) == 10)
@@ -269,8 +269,8 @@ class CommitLogSpec extends AnyFunSuite {
     assert(CommitLog.changesBetween(spark, dir, v1.version, v2.version)
       .count() == 100L)
     // replayed batch id is a no-op
-    val v3 = CommitLog.append(spark, batch, dir, batchId = Some(7L))
-    assert(CommitLog.append(spark, batch, dir, batchId = Some(7L))
+    val v3 = CommitLog.append(spark, batch, dir, txn = Some(("w", 7L)))
+    assert(CommitLog.append(spark, batch, dir, txn = Some(("w", 7L)))
       .version == v3.version)
     // an append staged before a racing delete commits must still land:
     // stage via the public verb against a base the delete then moves
@@ -400,10 +400,10 @@ class CommitLogSpec extends AnyFunSuite {
     val updates = spark.range(0, 50)
       .select($"id".as("k"), lit(7L).as("v"), lit("d0").as("pd"))
     val v2 = CommitLog.upsert(spark, updates, dir, Seq("k"), "pd",
-      batchId = Some(42L))
-    assert(v2.batches == Seq(42L))
+      txn = Some(("w", 42L)))
+    assert(CommitLog.txnVersion(v2, "w").contains(42L))
     val replay = CommitLog.upsert(spark, updates, dir, Seq("k"), "pd",
-      batchId = Some(42L))
+      txn = Some(("w", 42L)))
     assert(replay.version == v2.version, "replayed batch produced a new commit")
     assert(state(dir) == state(dir)) // and reads stay stable
   }
@@ -478,11 +478,11 @@ class CommitLogSpec extends AnyFunSuite {
     CommitLog.upsert(spark,
       spark.range(100, 150).select($"id".as("k"), lit(42L).as("v"),
         lit("d0").as("pd")),
-      dir, Seq("k"), "pd", batchId = Some(7L))
+      dir, Seq("k"), "pd", txn = Some(("w", 7L)))
     val h1 = CommitLog.history(spark, dir)
       .orderBy($"version").collect()
     assert(h1.map(_.getString(1)).toSeq === Seq("init", "upsert"))
-    assert(h1.last.getLong(3) === 1L, "ledger batch count missing") // n_batches
+    assert(h1.last.getLong(3) === 1L, "txn entry count missing") // n_batches
     assert(h1.last.getLong(4) > 0L, "upsert added no files")        // files_added
     assert(h1.last.getTimestamp(6).getTime > 0L, "commit stamp missing")
 
@@ -663,7 +663,7 @@ class CommitLogSpec extends AnyFunSuite {
     CommitLog.upsert(spark,
       spark.range(0, 500).select($"id".as("k"), lit(999L).as("v"),
         lit("d0").as("pd")),
-      dir, Seq("k"), "pd", batchId = Some(42L))
+      dir, Seq("k"), "pd", txn = Some(("w", 42L)))
     assert(state(dir) != before, "fixture: upsert must change the table")
     val snap = CommitLog.restore(spark, dir, v1.version)
     assert(snap.op == "restore" && snap.version > v1.version + 1,
@@ -673,10 +673,11 @@ class CommitLogSpec extends AnyFunSuite {
     assert(CommitLog.readAt(spark, dir, v1.version + 1)
       .filter($"v" === 999L).count() == 500L)
     // the ledger survives: the un-published batch is still a no-op
+    assert(CommitLog.txnVersion(snap, "w").contains(42L))
     CommitLog.upsert(spark,
       spark.range(0, 500).select($"id".as("k"), lit(999L).as("v"),
         lit("d0").as("pd")),
-      dir, Seq("k"), "pd", batchId = Some(42L))
+      dir, Seq("k"), "pd", txn = Some(("w", 42L)))
     assert(state(dir) == before, "a replayed undone batch re-applied")
     // stats pruning works off the restored manifest
     val (_, (r, t)) = CommitLog.scanRange(spark, dir, "k", 5000000L, 6000000L)
@@ -689,31 +690,29 @@ class CommitLogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("vacuum"), e.getMessage)
   }
 
-  test("ledger compaction: old batch ids fold into the floor; replays " +
-      "of pruned AND kept ids stay no-ops") {
+  test("one txn entry per app after N ids; every earlier id replays " +
+      "as a no-op") {
     val dir = freshLake()
-    val keep = CommitLog.LedgerKeep
-    try {
-      CommitLog.LedgerKeep = 4
-      (1L to 7L).foreach { b =>
-        CommitLog.upsert(spark,
-          spark.range(b, b + 1).select($"id".as("k"), lit(b).as("v"),
-            lit("d0").as("pd")),
-          dir, Seq("k"), "pd", batchId = Some(b))
-      }
-      val s = CommitLog.latest(spark, dir).get
-      assert(s.batches.size <= 4, s"ledger not bounded: ${s.batches}")
-      assert(s.batchFloor >= 3L, s"floor not advanced: ${s.batchFloor}")
-      val before = state(dir)
-      // a replay of a PRUNED id (1) and a KEPT id (7) both no-op
-      for (b <- Seq(1L, 7L)) {
-        CommitLog.upsert(spark,
-          spark.range(0, 500).select($"id".as("k"), lit(999L).as("v"),
-            lit("d0").as("pd")),
-          dir, Seq("k"), "pd", batchId = Some(b))
-        assert(state(dir) == before, s"replayed batch $b re-applied")
-      }
-    } finally CommitLog.LedgerKeep = keep
+    for (app <- Seq("a", "b"); b <- 1L to 5L)
+      CommitLog.upsert(spark,
+        spark.range(b, b + 1).select($"id".as("k"), lit(b).as("v"),
+          lit("d0").as("pd")),
+        dir, Seq("k"), "pd", txn = Some((app, b)))
+    val s = CommitLog.latest(spark, dir).get
+    assert(s.props.keys.filter(_.startsWith("graft.txn.")).toSet ==
+      Set("graft.txn.a", "graft.txn.b"), s"ledger not bounded: ${s.props}")
+    assert(CommitLog.txnVersion(s, "a").contains(5L) &&
+      CommitLog.txnVersion(s, "b").contains(5L))
+    val before = state(dir)
+    // a replay of every earlier id of either app no-ops
+    for (app <- Seq("a", "b"); b <- 1L to 5L) {
+      CommitLog.upsert(spark,
+        spark.range(0, 500).select($"id".as("k"), lit(999L).as("v"),
+          lit("d0").as("pd")),
+        dir, Seq("k"), "pd", txn = Some((app, b)))
+      assert(state(dir) == before, s"replayed $app#$b re-applied")
+    }
+    assert(CommitLog.latest(spark, dir).get.version == s.version)
   }
 
   test("scanBox survivors read under the committed schema after " +

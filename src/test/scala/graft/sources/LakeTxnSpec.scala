@@ -409,11 +409,11 @@ class LakeTxnSpec extends AnyFunSuite {
     LakeTxn.commit(spark, txn, Map(dim -> 1L, fact -> 1L))
     val dimRows = Seq((3L, "c")).toDF("k", "name")
     val factRows = Seq((3L, 30.0)).toDF("k", "amt")
-    // a FOREIGN writer's raw batch id 9 already in the fact's shared
-    // ledger must NOT swallow this family's append (the identity is
+    // a FOREIGN writer's raw batch id 9 already in the fact's log
+    // must NOT swallow this family's append (the identity is
     // family-namespaced)
     CommitLog.append(spark, Seq((99L, 99.0)).toDF("k", "amt"),
-      fact, Some(9L))
+      fact, Some(("foreign", 9L)))
     // crash window: the dim committed (under the family identity), the
     // manifest never landed — family readers must still see the OLD
     // cut on BOTH tables

@@ -89,10 +89,10 @@ class MergeSpec extends AnyFunSuite {
     val dir = freshLake()
     val src = Seq((5L, 111L, "p0")).toDF("k", "v", "pd")
     val v1 = CommitLog.merge(spark, dir, src, Seq("k"), "pd",
-      batchId = Some(42L)).version
+      txn = Some(("w", 42L))).version
     val v2 = CommitLog.merge(spark, dir,
       Seq((5L, 222L, "p0")).toDF("k", "v", "pd"), Seq("k"), "pd",
-      batchId = Some(42L)).version
+      txn = Some(("w", 42L))).version
     assert(v1 == v2 && state(dir)(5L)._1 == 111L, "replay must not double-apply")
     val dup = Seq((7L, 1L, "p0"), (7L, 2L, "p0")).toDF("k", "v", "pd")
     val e = intercept[IllegalArgumentException] {

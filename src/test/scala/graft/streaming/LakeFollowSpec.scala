@@ -10,8 +10,8 @@ import graft.sources.CommitLog
 
 /** [[LakeFollow]]: the streaming CDC mirror must converge to the
   * source's committed state across upserts and deletes, survive a
-  * restart by resuming from the replica's own ledger, and treat a
-  * replayed range as a no-op.
+  * restart by resuming from the replica's own follow entry, and treat
+  * a replayed range as a no-op.
   */
 class LakeFollowSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -39,7 +39,8 @@ class LakeFollowSpec extends AnyFunSuite {
     val t0 = System.currentTimeMillis()
     val want = CommitLog.latest(spark, src).get.version
     while (CommitLog.latest(spark, dst)
-        .flatMap(_.batches.maxOption).getOrElse(-1L) < want) {
+        .flatMap(CommitLog.txnVersion(_, LakeFollow.followAppId(src)))
+        .getOrElse(-1L) < want) {
       if (System.currentTimeMillis() - t0 > timeoutMs)
         fail(s"mirror did not reach source version $want in ${timeoutMs}ms")
       Thread.sleep(100)
@@ -83,7 +84,8 @@ class LakeFollowSpec extends AnyFunSuite {
     val dirs = CommitLog.partsBetween(spark, src, 1L, toV).get
     CommitLog.replacePartitions(spark,
       CommitLog.readPartitionDirsAt(spark, src, toV, dirs), dst, "pd",
-      dirs.toSeq.sorted.map(_.stripPrefix("pd=")), batchId = Some(toV))
+      dirs.toSeq.sorted.map(_.stripPrefix("pd=")),
+      txn = Some((LakeFollow.followAppId(src), toV)))
     assert(CommitLog.latest(spark, dst).get.version == vDst,
       "a replayed range moved the replica")
 
